@@ -263,16 +263,26 @@ class Store:
         ).schema_arrow
 
     def iter_keys(self, prefix: str = "") -> Iterator[str]:
-        """All keys (files) whose relative path starts with ``prefix``."""
+        """All keys (files) whose relative path starts with ``prefix``,
+        sorted. The local walk starts at the prefix's directory and only
+        descends into directories that can hold a match, so listing one
+        dataset's staging prefix costs O(its files), not O(store)."""
         if self._is_local:
-            if not os.path.isdir(self.root):
+            top = prefix if prefix.endswith("/") else os.path.dirname(prefix)
+            if not os.path.isdir(os.path.join(self.root, top)):
                 return
             keys = []
-            for dirpath, _dirnames, filenames in os.walk(self.root):
-                for fn in filenames:
-                    rel = os.path.relpath(os.path.join(dirpath, fn), self.root)
-                    if rel.startswith(prefix):
-                        keys.append(rel)
+            for dirpath, dirnames, filenames in os.walk(os.path.join(self.root, top)):
+                rel_dir = os.path.relpath(dirpath, self.root)
+                rel_dir = "" if rel_dir == "." else rel_dir + "/"
+                dirnames[:] = [
+                    d for d in dirnames
+                    if (rel_dir + d + "/").startswith(prefix)
+                    or prefix.startswith(rel_dir + d + "/")
+                ]
+                keys.extend(
+                    rel_dir + fn for fn in filenames if (rel_dir + fn).startswith(prefix)
+                )
             yield from sorted(keys)
             return
         yield from self._hadoop_iter(prefix)  # pragma: no cover

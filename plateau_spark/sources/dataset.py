@@ -719,9 +719,32 @@ def _merge_committed_indices(
     Spark jobs over the small index relations (never driver dicts).
     Reference: update_indices_from_partitions + merge_indices
     (plateau/io_components/write.py:93-118, plateau/core/index.py:760-791).
+
+    Reference-written indices embedded inline in the commit file
+    (``embedded_indices``) are converted here: each is built as an
+    external sidecar over every live partition and the inline copy is
+    dropped — the commit document never writes inline indices back, so
+    without the conversion the first commit would silently lose them.
     """
-    if not meta.indices:
-        return
+    if meta.indices:
+        _merge_external_indices(spark, store, meta, new_partitions, removed)
+    if meta.embedded_indices:
+        meta.indices.update(
+            _persist_indices_tiered(
+                spark, store, meta, list(meta.partitions.values()),
+                sorted(meta.embedded_indices),
+            )
+        )
+        meta.embedded_indices.clear()
+
+
+def _merge_external_indices(
+    spark: SparkSession,
+    store: Store,
+    meta: DatasetMetadata,
+    new_partitions: Sequence[Partition],
+    removed: set[str],
+) -> None:
     # driver tier first (plans/index.py): a KB-scale commit merges each
     # index entirely with pyarrow + a Python dict — zero Spark jobs per
     # column — producing the identical (value, sorted labels) rows; the
@@ -2258,36 +2281,8 @@ def delete_rows_from_dataset(
 
     df = _read_committed_files(spark, store, dataset_uuid, meta.schema, candidates)
     keep = df.where(~F.coalesce(dnf_to_column(predicates), F.lit(False)))
-    new_partitions = _write_files(
-        keep,
-        store,
-        dataset_uuid,
-        meta.partition_keys,
-        compress=compress,
-    )
-    # zone maps: keep the columns the rewritten files were tracking
-    carried = sorted({c for p in candidates for c in p.stats})
-    carried = [c for c in carried if c in {f.name for f in meta.schema or []}]
-    if carried:
-        _attach_zone_maps(spark, store, keep.schema, new_partitions, carried)
-
-    removed = [p.label for p in candidates]
-    for label in removed:
-        del meta.partitions[label]
-    for p in new_partitions:
-        if p.label in meta.partitions:
-            raise RuntimeError(f"Duplicate partition label in commit: {p.label}")
-        meta.partitions[p.label] = p
-    _merge_committed_indices(spark, store, meta, new_partitions, removed)
-    _merge_committed_blooms(spark, store, meta, new_partitions, removed)
-    meta.explicit_partitions = True
-    # the rewrite job runs for minutes at scale — a blind commit here
-    # would silently drop any append committed in that window; the merge
-    # helper raises ConcurrentCommitError instead (removed is non-empty,
-    # so the race is never mergeable)
-    meta = _commit_update_with_merge(
-        store, meta, new_partitions=new_partitions, removed=removed,
-        extra_metadata=None, **_base,
+    meta = _cow_swap_commit(
+        spark, store, meta, keep, candidates, compress=compress, base=_base
     )
     _invalidate_if_factory(_store_arg)
     return meta
@@ -2340,14 +2335,11 @@ def merge_upsert_into_dataset(
         if meta.schema is not None and c not in {f.name for f in meta.schema}:
             raise ValueError(f"merge key column {c!r} not in dataset schema")
 
-    dup = (
-        updates.groupBy(*key_columns).count().where(F.col("count") > 1).limit(1).count()
+    # one probe: duplicate-key check + key bounds → pruning conjunction
+    candidates = _merge_key_candidates(
+        meta, store, updates, key_columns, null_keys_match=True,
+        duplicate_error="updates carry duplicate merge-key tuples",
     )
-    if dup:
-        raise ValueError("updates carry duplicate merge-key tuples")
-
-    # key bounds → pruning conjunction (2 driver literals per key col)
-    candidates = _merge_key_candidates(meta, store, updates, key_columns)
 
     # CHECK constraints gate the INCOMING rows only (kept rows were
     # validated when first written; after restore_dataset's documented
@@ -2378,9 +2370,9 @@ def _cow_swap_commit(
     compress: bool,
     base: dict,
 ) -> DatasetMetadata:
-    """Shared copy-on-write tail of MERGE-shaped mutations: stage the
-    rewritten candidate rows, carry zone maps, swap the candidate
-    labels for the new ones in ONE optimistic commit."""
+    """Shared copy-on-write tail of row deletes and MERGE-shaped
+    mutations: stage the rewritten candidate rows, carry zone maps, swap
+    the candidate labels for the new ones in ONE optimistic commit."""
     new_partitions = _write_files(
         merged, store, meta.uuid, meta.partition_keys, compress=compress
     )
@@ -2388,8 +2380,28 @@ def _cow_swap_commit(
     carried = [c for c in carried if c in {f.name for f in meta.schema or []}]
     if carried:
         _attach_zone_maps(spark, store, merged.schema, new_partitions, carried)
+    return _swap_commit(
+        spark, store, meta, new_partitions, [p.label for p in candidates], base=base
+    )
 
-    removed = [p.label for p in candidates]
+
+def _swap_commit(
+    spark: SparkSession,
+    store: Store,
+    meta: DatasetMetadata,
+    new_partitions: Sequence[Partition],
+    removed: Sequence[str],
+    *,
+    base: dict,
+) -> DatasetMetadata:
+    """Commit tail of every rewrite (row delete, MERGE, compaction): swap
+    the ``removed`` labels for ``new_partitions``, merge the index and
+    Bloom sidecars for exactly those labels, and commit through the
+    optimistic-concurrency path. The rewrite job runs for minutes at
+    scale, so a blind commit would silently drop any append committed
+    in that window; with ``removed`` non-empty the merge helper raises
+    ConcurrentCommitError instead (a pure insert with ``removed == []``
+    still merges append-vs-append races)."""
     for label in removed:
         del meta.partitions[label]
     for p in new_partitions:
@@ -2399,30 +2411,46 @@ def _cow_swap_commit(
     _merge_committed_indices(spark, store, meta, new_partitions, removed)
     _merge_committed_blooms(spark, store, meta, new_partitions, removed)
     meta.explicit_partitions = True
-    # MERGE rewrites candidate files over a long job window — commit via
-    # the optimistic-concurrency path so a concurrent append raises
-    # ConcurrentCommitError instead of being silently dropped. (A pure
-    # insert-only merge with zero candidates still merges append-vs-append
-    # races because removed == [].)
     return _commit_update_with_merge(
         store, meta, new_partitions=new_partitions, removed=removed,
         extra_metadata=None, **base,
     )
 
 
-def _merge_key_candidates(meta: DatasetMetadata, store: Store, source: DataFrame, key_columns):
-    """Candidate files for a keyed MERGE: the source's per-key min/max
-    bounds (one tiny agg job → 2 driver literals per key column) become
-    a range conjunction for ``plan_scan`` — files whose zone maps /
-    partition values provably exclude every source key are never read
-    or rewritten."""
-    bounds = source.agg(
+def _merge_key_candidates(
+    meta: DatasetMetadata,
+    store: Store,
+    source: DataFrame,
+    key_columns,
+    *,
+    null_keys_match: bool,
+    duplicate_error: str,
+):
+    """Candidate files for a keyed MERGE, after ONE probe of the source:
+    a ``groupBy(keys).count()`` feeding one aggregation that yields the
+    largest key-tuple count (> 1 raises ``ValueError(duplicate_error)``)
+    and each key column's min/max. The bounds (2 driver literals per key
+    column) become a range conjunction for ``plan_scan`` — files whose
+    zone maps / partition values provably exclude every source key are
+    never read or rewritten. ``null_keys_match=False`` exempts key
+    tuples with a NULL component from the duplicate check (ANSI MERGE:
+    NULL never matches, so such rows cannot collide)."""
+    n = F.col("count")
+    if not null_keys_match:
+        non_null = functools.reduce(
+            lambda a, b: a & b, [F.col(k).isNotNull() for k in key_columns]
+        )
+        n = F.when(non_null, n)
+    probe = source.groupBy(*key_columns).count().agg(
+        F.max(n).alias("__dup__"),
         *[F.min(c).alias(f"__lo_{c}__") for c in key_columns],
         *[F.max(c).alias(f"__hi_{c}__") for c in key_columns],
     ).first()
+    if (probe["__dup__"] or 0) > 1:
+        raise ValueError(duplicate_error)
     conj = []
     for c in key_columns:
-        lo, hi = bounds[f"__lo_{c}__"], bounds[f"__hi_{c}__"]
+        lo, hi = probe[f"__lo_{c}__"], probe[f"__hi_{c}__"]
         if lo is not None:
             conj.append((c, ">=", lo))
         if hi is not None:
@@ -2482,21 +2510,10 @@ def merge_into_dataset(
             raise ValueError(f"merge key column {c!r} not in dataset schema")
     # NULL keys never match (ANSI MERGE), so rows with a NULL key component
     # can't collide with each other — only non-NULL key tuples must be unique.
-    _non_null_keys = functools.reduce(
-        lambda a, b: a & b, [F.col(k).isNotNull() for k in key_columns]
+    candidates = _merge_key_candidates(
+        meta, store, source, key_columns, null_keys_match=False,
+        duplicate_error="source carries duplicate merge-key tuples",
     )
-    dup = (
-        source.where(_non_null_keys)
-        .groupBy(*key_columns)
-        .count()
-        .where(F.col("count") > 1)
-        .limit(1)
-        .count()
-    )
-    if dup:
-        raise ValueError("source carries duplicate merge-key tuples")
-
-    candidates = _merge_key_candidates(meta, store, source, key_columns)
 
     delete_cond = (
         F.expr(when_matched_delete) if when_matched_delete else F.lit(False)
@@ -2755,16 +2772,23 @@ def compact_dataset(
     (each ``update_dataset_from_dataframes`` append adds files; small
     files ruin scan throughput and driver planning at scale).
 
-    One read job (the normal pruned scan) + one write job (the same
-    shuffle shape as a bucketed store: repartition on the keys, or on
-    (keys ⊕ hash-bucket) for ``target_files_per_key > 1``), secondary
-    indices rebuilt distributedly over the new files, ONE atomic commit
-    swap. Superseded files are NOT reclaimed by default: readers holding
-    the previous commit keep working until an explicit
-    ``garbage_collect_dataset`` runs after in-flight readers drain
-    (exactly the reference's GC contract); pass ``gc=True`` to reclaim
-    immediately when no concurrent readers exist. No-op (no write,
-    no commit) when no key group exceeds the target file count.
+    Incremental: only the key groups holding MORE than
+    ``target_files_per_key`` files are rewritten. Every other group
+    keeps its files, labels and zone-map stats, so the pass costs
+    O(fragmented data), not O(dataset). One read job over the
+    over-target groups (a partition-key DNF prunes the scan) + one
+    write job (the same shuffle shape as a bucketed store: repartition
+    on the keys, or on (keys ⊕ hash-bucket) for
+    ``target_files_per_key > 1``), then index and Bloom sidecars are
+    MERGED like any other commit (rewritten labels dropped, new files'
+    entries added — never rebuilt over the whole dataset) and ONE
+    atomic commit swaps the rewritten labels. Superseded files are NOT
+    reclaimed by default: readers holding the previous commit keep
+    working until an explicit ``garbage_collect_dataset`` runs after
+    in-flight readers drain (exactly the reference's GC contract);
+    pass ``gc=True`` to reclaim immediately when no concurrent readers
+    exist. No-op (no write, no commit) when no key group exceeds the
+    target file count. Keyless datasets are one group: rewritten whole.
 
     ``zorder_by`` turns the pass into the OPTIMIZE shape: the rewritten
     data is Morton-z-order clustered on the given columns
@@ -2787,16 +2811,31 @@ def compact_dataset(
             "already cluster the layout); drop partition_on or zorder_by"
         )
 
-    per_key: dict[tuple, int] = {}
+    groups: dict[tuple, list[Partition]] = {}
     for p in meta.partitions.values():
         k = tuple(sorted((c, str(v)) for c, v in p.key_values.items()))
-        per_key[k] = per_key.get(k, 0) + 1
-    if not zorder_by and (
-        not per_key or max(per_key.values()) <= target_files_per_key
-    ):
+        groups.setdefault(k, []).append(p)
+    over = [g for g in groups.values() if len(g) > target_files_per_key]
+    if not zorder_by and not over:
         return meta
 
-    df = read_dataset_as_dataframe(spark, store, dataset_uuid)
+    # a partition-key DNF reads only the over-target groups; no predicate
+    # when every group is rewritten (keyless and zorder_by included), and
+    # none for a NaN key (driver-side == would prune its own group)
+    rewrite_all = zorder_by or len(over) == len(groups) or any(
+        v != v for g in over for v in g[0].key_values.values()
+    )
+    if rewrite_all:
+        over = list(groups.values())
+        df = read_dataset_as_dataframe(spark, store, dataset_uuid)
+    else:
+        df = read_dataset_as_dataframe(
+            spark, store, dataset_uuid,
+            predicates=[
+                [(c, "==", v) for c, v in sorted(g[0].key_values.items())]
+                for g in over
+            ],
+        )
     if zorder_by:
         from plateau_spark.plans.zorder import cluster_by_zorder
 
@@ -2842,44 +2881,13 @@ def compact_dataset(
     )
     _attach_zone_maps(spark, store, meta.schema, partitions, zm_cols)
 
-    new_meta = DatasetMetadata(
-        uuid=dataset_uuid,
-        partitions={p.label: p for p in partitions},
-        partition_keys=list(meta.partition_keys),
-        schema=meta.schema,
-        metadata=dict(meta.metadata),
-        # SAME dataset, next generation: the counter must carry forward or
-        # commit() restarts at 1 and overwrites the g0000000001 time-travel
-        # snapshot (and every later commit re-uses + clobbers 2..N), while
-        # _commit_update_with_merge's fast-path generation check can falsely
-        # pass for a writer still holding pre-compaction metadata
-        generation=meta.generation,
-    )
-    indexed_cols = sorted(set(meta.indices) | set(meta.embedded_indices))
-    new_meta.indices.update(
-        _persist_indices_tiered(spark, store, new_meta, partitions, indexed_cols)
-    )
-    # bloom sidecars map labels → rebuilt over the compacted files
-    # (stale sidecars would be merely useless, not wrong — uncovered
-    # labels never prune — but compaction must not drop pruning power)
-    for col, info in meta.blooms.items():
-        new_meta.blooms.update(
-            _build_blooms(
-                spark, store, meta.schema, meta.partition_keys, dataset_uuid,
-                partitions, [col], n_bits=info["n_bits"], k=info["k"],
-            )
-        )
-    # compaction swaps EVERY old partition for the rewritten set, so a
-    # concurrent commit can never be merged — the merge helper detects the
-    # race (removed != []) and raises instead of silently reverting the
-    # other writer's commit or orphaning its files
-    new_meta = _commit_update_with_merge(
-        store, new_meta, new_partitions=partitions,
-        removed=sorted(meta.partitions), extra_metadata=None, **_base,
+    meta = _swap_commit(
+        spark, store, meta, partitions,
+        sorted(p.label for g in over for p in g), base=_base,
     )
     if gc:
         garbage_collect_dataset(store, dataset_uuid)
-    return new_meta
+    return meta
 
 
 def repartition_dataset(

@@ -548,3 +548,56 @@ def _rows_by_id(spark, store, uuid):
         d = r.asDict()
         out.append((d["event_id"], d["event_type"], d["value"]))
     return sorted(out)
+
+
+def test_iter_keys_walks_only_the_prefix(tmp_path, monkeypatch):
+    """Listing one dataset's staging prefix walks that prefix only — a
+    sibling dataset's directories are never visited — while the prefix
+    semantics stay exact: a file-key prefix, a directory key without a
+    trailing slash, and a missing directory (nothing)."""
+    import os
+
+    store = Store(str(tmp_path / "store"))
+    for key in (
+        "a/.staging/c1/x=1/part-0.parquet",
+        "a/.staging/c1/_SUCCESS",
+        "a/.staging/c10/part-0.parquet",
+        "a/table/x=1/f.parquet",
+        "ab/table/f.parquet",
+        "b/.staging/c1/part-0.parquet",
+        "b/table/f.parquet",
+    ):
+        store.put_bytes(key, b"x")
+    visited = []
+    real_walk = os.walk
+
+    def spy(top, *a, **kw):
+        for entry in real_walk(top, *a, **kw):
+            visited.append(os.path.relpath(entry[0], store.root))
+            yield entry
+
+    monkeypatch.setattr(os, "walk", spy)
+    staging = f"a/{naming.STAGING_DIR}/c1/"
+    assert list(store.iter_keys(staging)) == [
+        "a/.staging/c1/_SUCCESS", "a/.staging/c1/x=1/part-0.parquet",
+    ]
+    assert visited and all(v.startswith("a/.staging/c1") for v in visited), visited
+    visited.clear()
+    # a directory key without the slash is a plain string prefix
+    assert list(store.iter_keys("a/.staging/c1")) == [
+        "a/.staging/c1/_SUCCESS",
+        "a/.staging/c1/x=1/part-0.parquet",
+        "a/.staging/c10/part-0.parquet",
+    ]
+    assert not any(v.startswith(("b", "ab", "a/table")) for v in visited), visited
+    assert list(store.iter_keys("a/table/x=1/f")) == ["a/table/x=1/f.parquet"]
+    assert list(store.iter_keys("a")) == [
+        "a/.staging/c1/_SUCCESS",
+        "a/.staging/c1/x=1/part-0.parquet",
+        "a/.staging/c10/part-0.parquet",
+        "a/table/x=1/f.parquet",
+        "ab/table/f.parquet",
+    ]
+    assert list(store.iter_keys("a/missing/")) == []
+    assert list(store.iter_keys("zz")) == []
+    assert len(list(store.iter_keys(""))) == 7

@@ -144,3 +144,42 @@ def test_untyped_label_decode_inference():
     assert _infer_untyped("2024-05-17") == datetime.date(2024, 5, 17)
     assert _infer_untyped("2024-05-17T10:00:00") == datetime.datetime(2024, 5, 17, 10)
     assert _infer_untyped("BUILDING") == "BUILDING"
+
+
+def test_embedded_index_survives_first_commit(spark, tmp_path, nation_like):
+    """A reference-written inline index used to vanish on the first
+    commit (the commit document never writes inline indices back):
+    has_index was True before an update and False after it. The commit
+    now converts it into an external sidecar over every live partition,
+    and the index still prunes afterwards."""
+    from plateau_spark.plans.pruning import explain_scan
+    from plateau_spark.sources.dataset import update_dataset_from_dataframe
+
+    store = str(tmp_path / "store")
+    store_dataframe_as_dataset(
+        spark, store, "ds", nation_like,
+        partition_on=["n_regionkey"], secondary_indices=["n_name"],
+    )
+    st = Store(store)
+    doc = DatasetMetadata.load(st, "ds").to_json()
+    doc["indices"] = _reference_style_doc(st, "ds")["indices"]
+    st.put_json(naming.metadata_key("ds"), doc)
+    before = DatasetMetadata.load(st, "ds")
+    assert before.has_index("n_name") and "n_name" in before.embedded_indices
+
+    update_dataset_from_dataframe(
+        spark, store, "ds",
+        spark.createDataFrame(
+            [(12, "NATION12", 1), (13, "NATION4", 2)],
+            "n_nationkey long, n_name string, n_regionkey long",
+        ),
+    )
+    after = DatasetMetadata.load(st, "ds")
+    assert after.has_index("n_name") and not after.embedded_indices
+    assert "n_name" in after.indices
+    pred = [[("n_name", "==", "NATION4")]]
+    rows = read_table(spark, store, "ds", predicates=pred).collect()
+    assert sorted((r.n_nationkey, r.n_regionkey) for r in rows) == [(4, 1), (13, 2)]
+    report = explain_scan(after, st, pred)
+    assert sum(r["scanned"] for r in report) == 2  # of 5 files
+    assert all(r["pruned_by"] == ["index"] for r in report if not r["scanned"])

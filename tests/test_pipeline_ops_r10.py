@@ -387,6 +387,73 @@ def test_merge_into_null_key_delete_never_fires_on_null(spark, store):
     assert rows == [("vn", 30)]  # id=1 deleted; NULL-key target untouched
 
 
+def test_merge_probe_null_key_rules(spark, store):
+    """Both MERGE APIs run one shared duplicate-key + key-bounds probe,
+    and keep their own NULL-key rule: merge_into_dataset exempts NULL-key
+    tuples from the duplicate check (ANSI: NULL never matches),
+    merge_upsert_into_dataset counts them like any other key."""
+    from plateau_spark.sources.dataset import merge_upsert_into_dataset
+
+    schema = "id long, tag string, qty long"
+    store_dataframe_as_dataset(
+        spark, store, "np", spark.createDataFrame([(1, "a", 1)], schema)
+    )
+    null_dups = spark.createDataFrame([(None, "x", 1), (None, "y", 2)], schema)
+    with pytest.raises(ValueError, match="updates carry duplicate merge-key tuples"):
+        merge_upsert_into_dataset(spark, store, "np", null_dups, "id")
+    merge_into_dataset(spark, store, "np", null_dups, "id")  # legal
+    assert read_table(spark, store, "np").count() == 3
+    mixed = spark.createDataFrame([(None, "x", 1), (7, "y", 2), (7, "z", 3)], schema)
+    with pytest.raises(ValueError, match="source carries duplicate merge-key tuples"):
+        merge_into_dataset(spark, store, "np", mixed, "id")
+    # composite keys: one NULL component exempts the tuple for MERGE INTO
+    part_null = spark.createDataFrame([(1, None, 1), (1, None, 2)], schema)
+    merge_into_dataset(spark, store, "np", part_null, ["id", "tag"])
+    with pytest.raises(ValueError, match="updates carry duplicate"):
+        merge_upsert_into_dataset(spark, store, "np", part_null, ["id", "tag"])
+
+
+@pytest.mark.parametrize("api", ["upsert", "merge_into"])
+def test_merge_probe_one_action_same_candidates(spark, tmp_path, monkeypatch, api):
+    """The probe is one Spark action (the former duplicate probe plus a
+    separate bounds aggregation launched 5 jobs before planning), and
+    the key bounds still prune candidates through the zone maps."""
+    import uuid
+
+    import plateau_spark.sources.dataset as ds_mod
+    from plateau_spark.core.metadata import DatasetMetadata
+    from plateau_spark.core.store import Store
+
+    store = Store(str(tmp_path / "store"))
+    df = spark.range(0, 1000).select(
+        F.col("id"), (F.col("id") * 2).alias("qty")
+    ).repartitionByRange(4, "id")
+    store_dataframe_as_dataset(spark, store, "m", df, zone_map_columns=["id"])
+    before = set(DatasetMetadata.load(store, "m").partitions)
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    seen = {}
+    real_plan = ds_mod.plan_scan
+
+    def spy(meta, st, predicates=None, **kw):
+        seen["jobs"] = len(sc.statusTracker().getJobIdsForGroup(group))
+        seen["predicates"] = predicates
+        return real_plan(meta, st, predicates, **kw)
+
+    monkeypatch.setattr(ds_mod, "plan_scan", spy)
+    src = spark.createDataFrame([(5, 999), (20, 999), (None, 1)], "id long, qty long")
+    fn = ds_mod.merge_upsert_into_dataset if api == "upsert" else merge_into_dataset
+    sc.setJobGroup(group, "merge probe")
+    try:
+        fn(spark, store, "m", src, "id")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert seen["predicates"] == [[("id", ">=", 5), ("id", "<=", 20)]]
+    assert 1 <= seen["jobs"] <= 3, seen
+    after = set(DatasetMetadata.load(store, "m").partitions)
+    assert len(before & after) == 3  # only the [0, 249] file was rewritten
+
+
 # --- weighted PageRank -------------------------------------------------------
 
 from plateau_spark.operators.graph import pagerank  # noqa: E402
