@@ -185,6 +185,16 @@ def shared_cache_count() -> int:
         return len(_shared_caches)
 
 
+def estimated_bytes(df: DataFrame) -> "int | None":
+    """The optimizer's size estimate of ``df`` in bytes — plan
+    statistics only, no job runs. None when the statistics are
+    unavailable; each caller picks its own fallback."""
+    try:
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:  # noqa: BLE001 — stats are best-effort
+        return None
+
+
 def release_local_checkpoint(*dfs: DataFrame) -> None:
     """Free the persisted blocks behind ``df.localCheckpoint(...)``
     frames.

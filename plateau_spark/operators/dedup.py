@@ -22,7 +22,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from plateau_spark.core.caching import persist_shared, release_local_checkpoint
+from plateau_spark.core.caching import (
+    estimated_bytes,
+    persist_shared,
+    release_local_checkpoint,
+)
 from plateau_spark.core.conf import env_int as _env_int
 from plateau_spark.core.exprs import bind_col
 
@@ -158,9 +162,8 @@ def _ensure_parallelism(df: DataFrame, *, bytes_per_slot: int = 64 << 10) -> Dat
     checking the plan's partitioning costs no job."""
     sc = df.sparkSession.sparkContext
     slots = sc.defaultParallelism
-    try:
-        est_bytes = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
+    est_bytes = estimated_bytes(df)
+    if est_bytes is None:
         est_bytes = bytes_per_slot * slots
     target = max(1, min(slots, est_bytes // bytes_per_slot))
     if df.rdd.getNumPartitions() < target:
@@ -974,12 +977,7 @@ def embedding_cosine_dup_pairs(
     # pass entirely (no extra job at bench scale; at corpus scale the
     # one column-pruned counting pass is noise next to the join).
     cap = _env_int("PLATEAU_SPARK_BUCKET_GEMM_CAP_ROWS", 100_000)
-    try:
-        est_bytes = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:  # noqa: BLE001 — stats unavailable: be safe, check
-        est_bytes = None
+    est_bytes = estimated_bytes(df)  # None: stats unavailable, be safe, check
     max_bucket_bound = (
         (est_bytes // (8 * max(1, d))) * len(tuple(seeds))
         if est_bytes is not None

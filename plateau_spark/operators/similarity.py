@@ -31,7 +31,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from plateau_spark.core.conf import env_int
+from plateau_spark.core.caching import estimated_bytes
 
 
 def dot_col(a, b) -> Column:
@@ -65,9 +65,9 @@ def guarded_cosine(dot: Column, na: Column, nb: Column) -> Column:
       every double — so without the ``nanvl`` the row outranks every
       real score and passes every threshold. NaN → NULL closes it.
 
-    NULL then drops at threshold filters, is excluded from top-k
-    rankings (callers filter isNotNull), and matches the numpy tiers,
-    where NaN comparisons are False."""
+    NULL then drops at threshold filters, is never ranked by
+    :func:`_rank_topk`, and matches the numpy tiers, where NaN
+    comparisons are False."""
     c = F.when((na > 0) & (nb > 0), dot / (na * nb))
     return F.nanvl(c, F.lit(None).cast("double"))
 
@@ -84,6 +84,43 @@ def cosine_sim_col(a, b) -> Column:
     per ROW below the join and call :func:`guarded_cosine` directly
     (the pattern every scoring join in this module uses)."""
     return guarded_cosine(dot_col(a, b), norm_col(a), norm_col(b))
+
+
+def _rank_topk(
+    cand: DataFrame,
+    k: int,
+    *,
+    query_id_col: str,
+    id_col: str,
+    score: str = "cosine",
+    round_digits: int = 6,
+) -> DataFrame:
+    """The one top-k every search tier ends in: ``rank`` numbers each
+    query's candidates 1, 2, … in (score, id asc) order, and the rows
+    with ``rank <= k`` are kept. ``score="cosine"`` ranks descending;
+    ``score="dist2"`` ranks ``round(dist2, round_digits)`` ascending
+    and returns that rounded distance as ``dist2``.
+
+    NULL scores (degenerate vectors) sort LAST and are dropped AFTER
+    the window. That is result-identical to dropping them first (a NULL
+    at rank r proves only r-1 real candidates exist), but an earlier
+    ``.where()`` gets pushed INTO the candidate join's condition, where
+    the score fold is then evaluated a second time per pair (no CSE for
+    higher-order functions) — measured 1.6× on the 16× corpus. A
+    numbered rank filtered by ``rank <= k`` is what Spark's
+    ``WindowGroupLimit`` recognizes: each map task emits at most k rows
+    per query before the exchange, so a hot query stays cheap."""
+    if score == "cosine":
+        order = F.col("cosine").desc_nulls_last()
+    else:
+        cand = cand.withColumn("dist2", F.round(F.col("dist2"), round_digits))
+        order = F.col("dist2").asc_nulls_last()
+    w = Window.partitionBy(query_id_col).orderBy(order, F.col(id_col).asc())
+    return (
+        cand.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .where(F.col(score).isNotNull())
+    )
 
 
 def infer_dim(df: DataFrame, vec_col: str) -> int:
@@ -183,19 +220,7 @@ def cosine_topk_bruteforce(
             F.col("__cn__"), F.col("__qn__"),
         ).alias("cosine"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col(id_col).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        # NULL cosine (degenerate vectors) is not rankable. Dropped
-        # AFTER the window on purpose: result-identical (desc = NULLS
-        # LAST, so a NULL at rank r proves only r-1 real candidates
-        # exist), but an early .where() gets pushed INTO the join
-        # condition, where the dot fold is then evaluated a second
-        # time per pair (no CSE for higher-order functions) —
-        # measured 1.6× on the 16× corpus
-        .where(F.col("cosine").isNotNull())
-    )
+    return _rank_topk(scored, k, query_id_col=query_id_col, id_col=id_col)
 
 
 def cosine_dup_pairs_bruteforce(
@@ -536,15 +561,7 @@ def cosine_topk_ivf(
             F.col("__cn__"), F.col("__qn__"),
         ).alias("cosine"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col(id_col).asc())
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        # degenerate-vector drop AFTER the window (NULLS-LAST-identical,
-        # avoids the pushed-into-join double dot fold — see
-        # cosine_topk_bruteforce)
-        .where(F.col("cosine").isNotNull())
-    )
+    return _rank_topk(cand, k, query_id_col=query_id_col, id_col=id_col)
 
 
 def cosine_topk_lsh(
@@ -602,9 +619,7 @@ def cosine_topk_lsh(
         )
         .dropDuplicates([query_id_col, id_col])
     )
-    cand = cand.where(F.col("cosine").isNotNull())  # zero-norm guard
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col(id_col).asc())
-    return cand.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return _rank_topk(cand, k, query_id_col=query_id_col, id_col=id_col)
 
 
 def cosine_dup_pairs_blocked(
@@ -1197,17 +1212,7 @@ def query_ivf_index(
             F.col("__cn__"), F.col("__qn__"),
         ).alias("cosine"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        # degenerate-vector drop AFTER the window (NULLS-LAST-identical,
-        # avoids the pushed-into-join double dot fold — see
-        # cosine_topk_bruteforce)
-        .where(F.col("cosine").isNotNull())
-    )
+    return _rank_topk(cand, k, query_id_col=query_id_col, id_col=id_col)
 
 
 def centroid_outlier_scores(
@@ -1295,50 +1300,33 @@ def mine_bitext_pairs(
     a = emb_a.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va__"))
     b = emb_b.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb__"))
 
-    # The two sweeps are independent; index-backed searchers (IVF/LSH
-    # tiers) run driver-blocking FIT jobs at construction time (seed
-    # sample + Lloyd refinement collects), so constructing fwd and bwd
-    # sequentially serialized two fit phases while the cluster idled
-    # between their jobs (guide: overlap independent jobs). Construct
-    # them on two threads — the fits are deterministic, so the frames
-    # are identical to the sequential build; for the default
-    # brute-force searcher construction launches no jobs and the
-    # threads are a no-op.
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _fwd():
-        return searcher(
-            b.select(F.col("id_b").alias(id_col), F.col("__vb__").alias(vec_col)),
-            a.select(F.col("id_a").alias("query_id"), F.col("__va__").alias(vec_col)),
-            id_col=id_col,
-            vec_col=vec_col,
-            query_id_col="query_id",
-            k=k,
-        ).select(
-            F.col("query_id").alias("id_a"),
-            F.col(id_col).alias("id_b"),
-            F.col("cosine").alias("__cos__"),
-        )
-
-    def _bwd():
-        return searcher(
-            a.select(F.col("id_a").alias(id_col), F.col("__va__").alias(vec_col)),
-            b.select(F.col("id_b").alias("query_id"), F.col("__vb__").alias(vec_col)),
-            id_col=id_col,
-            vec_col=vec_col,
-            query_id_col="query_id",
-            k=k,
-        ).select(
-            F.col(id_col).alias("id_a"),
-            F.col("query_id").alias("id_b"),
-            F.col("cosine").alias("__cos__"),
-        )
-
-    with ThreadPoolExecutor(max_workers=2) as _pool:
-        _f_fwd = _pool.submit(_fwd)
-        _f_bwd = _pool.submit(_bwd)
-        fwd = _f_fwd.result()
-        bwd = _f_bwd.result()
+    # Index-backed searchers (IVF/LSH) fit at construction time. The two
+    # sweeps are built one after the other: overlapping those fits on
+    # threads was slower on a loaded box.
+    fwd = searcher(
+        b.select(F.col("id_b").alias(id_col), F.col("__vb__").alias(vec_col)),
+        a.select(F.col("id_a").alias("query_id"), F.col("__va__").alias(vec_col)),
+        id_col=id_col,
+        vec_col=vec_col,
+        query_id_col="query_id",
+        k=k,
+    ).select(
+        F.col("query_id").alias("id_a"),
+        F.col(id_col).alias("id_b"),
+        F.col("cosine").alias("__cos__"),
+    )
+    bwd = searcher(
+        a.select(F.col("id_a").alias(id_col), F.col("__va__").alias(vec_col)),
+        b.select(F.col("id_b").alias("query_id"), F.col("__vb__").alias(vec_col)),
+        id_col=id_col,
+        vec_col=vec_col,
+        query_id_col="query_id",
+        k=k,
+    ).select(
+        F.col(id_col).alias("id_a"),
+        F.col("query_id").alias("id_b"),
+        F.col("cosine").alias("__cos__"),
+    )
     # The neighborhood averages are WINDOWS over the side-tagged union,
     # not groupBy+join back onto the sweeps: avgₖ(a, B) only aggregates
     # fwd rows and avgₖ(b, A) only bwd rows, so tagging the union and
@@ -1866,9 +1854,11 @@ def pq_topk(
 
     Two-phase top-k: numpy partition-local top-k per query inside the
     Arrow pass (P × Q × k candidate rows leave the scan), then one tiny
-    global window. Distances round to ``round_digits`` and tie-break on
-    id, so results are deterministic. Queries must be a driver-size
-    frame (they broadcast into the closure).
+    global window. Ranking contract (the one every search tier shares):
+    ascending ``round(dist2, round_digits)``, ties by id ascending, and
+    a NULL distance (a refine vector with a NULL element) is never
+    ranked — so results are deterministic. Queries must be a
+    driver-size frame (they broadcast into the closure).
 
     ``refine_with`` (the original vector frame) switches on the
     shortlist-then-rerank pattern: ADC over-fetches ``overfetch·k``
@@ -1880,8 +1870,6 @@ def pq_topk(
     code-column-size, full vectors are read for a few dozen rows per
     query."""
     import numpy as np
-
-    from pyspark.sql import Window
 
     m, sub = model["m"], model["sub_dim"]
     books = [np.array(b, dtype=np.float64) for b in model["codebooks"]]
@@ -1914,22 +1902,7 @@ def pq_topk(
                 d = np.zeros(len(C))
                 for j in range(m):
                     d += tables[qi, j, C[:, j]]
-                take = min(fetch, len(d))
-                # ADC distances tie HEAVILY (the distance is a function
-                # of the code alone, and codes collide), so the batch
-                # pre-selection must be consistent with the global
-                # window's (rounded dist, id) order or tied candidates
-                # get dropped arbitrarily per batch and the shortlist
-                # becomes nondeterministic. O(n) cutoff: keep EVERY row
-                # at or below the take-th rounded distance (ties
-                # included — a superset of the global top-fetch; the
-                # window trims), never an O(n log n) per-batch sort.
-                rounded = np.round(d, round_digits)
-                if take < len(d):
-                    cutoff = np.partition(rounded, take - 1)[take - 1]
-                    part = np.nonzero(rounded <= cutoff)[0]
-                else:
-                    part = np.arange(len(d))
+                part = _adc_superset(d, fetch, round_digits)
                 out_q.extend([qids[qi]] * len(part))
                 out_i.extend(ids[part])
                 out_d.extend(d[part])
@@ -1940,25 +1913,62 @@ def pq_topk(
     cand = codes.select(id_col, code_col).mapInPandas(
         _scan, f"{query_id_col} long, {id_col} long, dist2 double"
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.round(F.col("dist2"), round_digits).asc(), F.col(id_col).asc()
+    return _adc_shortlist_rerank(
+        cand, queries, k=k, fetch=fetch, id_col=id_col,
+        query_id_col=query_id_col, query_vec_col=query_vec_col,
+        refine_with=refine_with, refine_vec_col=refine_vec_col,
+        round_digits=round_digits,
     )
-    shortlist = cand.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= fetch
-    )
-    if refine_with is None:
-        return shortlist.select(
-            query_id_col,
-            id_col,
-            F.round(F.col("dist2"), round_digits).alias("dist2"),
-            "rank",
-        )
 
-    # exact re-rank: only the shortlist's true vectors are read — the
-    # tiny shortlist broadcasts, so the corpus-side join is map-side
-    vec_col = refine_vec_col
+
+def _adc_superset(d, take: int, round_digits: int):
+    """Row positions of every ADC distance at or below the ``take``-th
+    rounded distance — the per-batch pre-selection of both PQ scans.
+
+    ADC distances tie HEAVILY (the distance is a function of the code
+    alone, and codes collide), so the batch pre-selection must be
+    consistent with the global (rounded dist, id) rank or tied
+    candidates get dropped arbitrarily per batch and the shortlist
+    becomes partitioning-dependent. Keeping every tie is a superset of
+    the global top-``take`` (the rank trims it) in O(n), never an
+    O(n log n) per-batch sort."""
+    import numpy as np
+
+    rounded = np.round(d, round_digits)
+    if take >= len(d):
+        return np.arange(len(d))
+    cutoff = np.partition(rounded, take - 1)[take - 1]
+    return np.nonzero(rounded <= cutoff)[0]
+
+
+def _adc_shortlist_rerank(
+    cand: DataFrame,
+    queries: DataFrame,
+    *,
+    k: int,
+    fetch: int,
+    id_col: str,
+    query_id_col: str,
+    query_vec_col: str,
+    refine_with: DataFrame | None,
+    refine_vec_col: str,
+    round_digits: int,
+) -> DataFrame:
+    """Rank ADC candidates ``(query_id, id, dist2)``; with
+    ``refine_with``, re-rank the top-``fetch`` shortlist by exact
+    squared L2 against the true vectors. Only the shortlist's vectors
+    are read: the tiny shortlist and the queries broadcast, so the
+    corpus-side joins are map-side. Both rankings are
+    :func:`_rank_topk` on ``dist2``."""
+    rank = dict(
+        query_id_col=query_id_col, id_col=id_col,
+        score="dist2", round_digits=round_digits,
+    )
+    shortlist = _rank_topk(cand, fetch, **rank)
+    if refine_with is None:
+        return shortlist
     exact = (
-        refine_with.select(id_col, F.col(vec_col).alias("__v__"))
+        refine_with.select(id_col, F.col(refine_vec_col).alias("__v__"))
         .join(F.broadcast(shortlist.select(query_id_col, id_col)), id_col)
         .join(
             F.broadcast(
@@ -1966,8 +1976,9 @@ def pq_topk(
             ),
             query_id_col,
         )
-        .withColumn(
-            "dist2",
+        .select(
+            query_id_col,
+            id_col,
             F.aggregate(
                 F.zip_with(
                     "__v__", "__qv__",
@@ -1976,22 +1987,10 @@ def pq_topk(
                 ),
                 F.lit(0.0),
                 lambda acc, x: acc + x,
-            ),
+            ).alias("dist2"),
         )
     )
-    w2 = Window.partitionBy(query_id_col).orderBy(
-        F.round(F.col("dist2"), round_digits).asc(), F.col(id_col).asc()
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select(
-            query_id_col,
-            id_col,
-            F.round(F.col("dist2"), round_digits).alias("dist2"),
-            "rank",
-        )
-    )
+    return _rank_topk(exact, k, **rank)
 
 
 def build_pq_index(
@@ -2063,7 +2062,10 @@ def query_pq_index(
 ) -> DataFrame:
     """ADC top-k against a persisted PQ index: reads the code column
     only; pass ``refine_with=`` (the original vector frame or a
-    ``read_table`` of it) for the shortlist-then-exact-rerank tier."""
+    ``read_table`` of it) for the shortlist-then-exact-rerank tier.
+    Output and ranking contract are :func:`pq_topk`'s: (query_id,
+    vec_id, dist2, rank) by ascending rounded ``dist2``, ties by id
+    ascending, NULL distances never ranked."""
     from plateau_spark.core.metadata import DatasetMetadata
     from plateau_spark.sources.dataset import _ensure_store, read_table
 
@@ -2081,6 +2083,10 @@ def query_pq_index(
 
 # ---------------------------------------------------------------------------
 # IVF-PQ: cell-pruned compressed-domain ANN (the full serving composition)
+
+# Largest optimizer size estimate of the full corpus for which the IVF-PQ
+# build pins its residual frame while the PQ fit runs.
+_IVFPQ_RESID_PIN_BYTES = 1 << 30
 
 
 def build_ivfpq_index(
@@ -2132,6 +2138,7 @@ def build_ivfpq_index(
     # before the full-corpus encode/store pass below.
     fit_pins: list[DataFrame] = []
     resid_pin: DataFrame | None = None
+    pool = None
     try:
         if centroids is None or pq_model is None:
             fit_src = fit_src.select(F.col(id_col), F.col(vec_col)).persist()
@@ -2182,22 +2189,13 @@ def build_ivfpq_index(
             if fit_corpus is None:
                 resid_pin = resid_fit
             else:
-                try:
-                    _est = int(
-                        corpus._jdf.queryExecution()
-                        .optimizedPlan().stats().sizeInBytes()
-                    )
-                except Exception:  # noqa: BLE001 — stats unavailable: skip
-                    _est = None
-                _budget = env_int(
-                    "PLATEAU_SPARK_IVFPQ_RESID_PIN_BYTES", 1 << 30
-                )
-                if _est is not None and _est <= _budget:
-                    resid_pin = _residuals(corpus).persist()
+                est = estimated_bytes(corpus)
+                if est is not None and est <= _IVFPQ_RESID_PIN_BYTES:
                     from concurrent.futures import ThreadPoolExecutor
 
-                    _pool = ThreadPoolExecutor(max_workers=1)
-                    _mat = _pool.submit(lambda: resid_pin.count())
+                    resid_pin = _residuals(corpus).persist()
+                    pool = ThreadPoolExecutor(max_workers=1)
+                    materialized = pool.submit(resid_pin.count)
             model = fit_pq_model(
                 resid_fit, vec_col="__res__", m=m, k=pq_k,
                 refine_iterations=pq_refine_iterations, id_col=id_col,
@@ -2205,34 +2203,24 @@ def build_ivfpq_index(
                 # vector - centroid) — skip the LIMIT-1 inference scan
                 dim=len(centroids[0][1]) if centroids else None,
             )
-            if resid_pin is not None and resid_pin is not resid_fit:
+            if pool is not None:
                 # surface materialization errors before the encode
                 # consumes the pin (the pin itself is correctness-free:
                 # unpersist only ever costs recompute)
-                _mat.result()
-                _pool.shutdown()
-    finally:
+                materialized.result()
         # the model is driver-side lists at this point — nothing lazy
         # references the fit caches, so release them before the
-        # full-corpus encode pass (the encode pin, when taken, is
-        # released after the store write below)
-        for p in fit_pins:
-            if p is resid_pin:
-                continue  # reused for the encode; released below
-            try:
-                p.unpersist(False)
-            except Exception:  # noqa: BLE001 — release is best-effort
-                pass
-    resid = resid_pin if resid_pin is not None else _residuals(corpus)
-    # the cell rides THROUGH the encode pass: consuming resid twice
-    # (encode input + a cell re-join by id) re-ran the whole
-    # assignment GEMM + broadcast join per consumer and paid an extra
-    # id-keyed shuffle for a column resid already carried
-    with_cell = encode_pq(
-        resid, model, id_col=id_col, vec_col="__res__",
-        passthrough_cols=["cell"],
-    )
-    try:
+        # full-corpus encode pass (the encode pin is released on exit)
+        _unpersist(*(p for p in fit_pins if p is not resid_pin))
+        resid = resid_pin if resid_pin is not None else _residuals(corpus)
+        # the cell rides THROUGH the encode pass: consuming resid twice
+        # (encode input + a cell re-join by id) re-ran the whole
+        # assignment GEMM + broadcast join per consumer and paid an
+        # extra id-keyed shuffle for a column resid already carried
+        with_cell = encode_pq(
+            resid, model, id_col=id_col, vec_col="__res__",
+            passthrough_cols=["cell"],
+        )
         return store_dataframe_as_dataset(
             spark, store, index_uuid,
             with_cell.select("cell", F.col(id_col), "pq_code"),
@@ -2250,11 +2238,21 @@ def build_ivfpq_index(
             },
         )
     finally:
-        if resid_pin is not None:
-            try:
-                resid_pin.unpersist(False)
-            except Exception:  # noqa: BLE001 — release is best-effort
-                pass
+        # every exit, the failure paths included: no pool thread and no
+        # pinned frame outlives the build
+        if pool is not None:
+            pool.shutdown(cancel_futures=True)
+        _unpersist(*fit_pins, resid_pin)
+
+
+def _unpersist(*dfs: DataFrame | None) -> None:
+    for df in dfs:
+        if df is None:
+            continue
+        try:
+            df.unpersist(False)
+        except Exception:  # noqa: BLE001 — release is best-effort
+            pass
 
 
 def query_ivfpq_index(
@@ -2282,8 +2280,9 @@ def query_ivfpq_index(
     over-fetched shortlist with exact L2 against the true vectors —
     recall then only depends on the shortlist, not the quantization.
 
-    Output: (query_id, vec_id, dist2, rank); deterministic
-    (round + id tie-break)."""
+    Output: (query_id, vec_id, dist2, rank), ranked like every search
+    tier: ascending ``round(dist2, round_digits)``, ties by id
+    ascending, NULL distances never ranked — deterministic."""
     import numpy as np
 
     from plateau_spark.core.metadata import DatasetMetadata
@@ -2350,20 +2349,7 @@ def query_ivfpq_index(
                     d = np.zeros(len(Cc))
                     for j in range(m):
                         d += t[j, Cc[:, j]]
-                    take = min(fetch, len(d))
-                    # ADC distances tie heavily (a function of the code
-                    # alone, and codes collide), so the batch
-                    # pre-selection must keep EVERY row at or below the
-                    # take-th rounded distance — the same superset rule
-                    # as pq_topk — or tied candidates are dropped
-                    # arbitrarily per batch and the shortlist becomes
-                    # partitioning-dependent.
-                    rounded = np.round(d, round_digits)
-                    if take < len(d):
-                        cutoff = np.partition(rounded, take - 1)[take - 1]
-                        part = np.nonzero(rounded <= cutoff)[0]
-                    else:
-                        part = np.arange(len(d))
+                    part = _adc_superset(d, fetch, round_digits)
                     out_q.extend([qids[qi]] * len(part))
                     out_i.extend(ids[part])
                     out_d.extend(d[part])
@@ -2378,47 +2364,9 @@ def query_ivfpq_index(
     cand = cells_df.select("cell", id_col, "pq_code").mapInPandas(
         _scan, f"{query_id_col} long, {id_col} long, dist2 double"
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.round(F.col("dist2"), round_digits).asc(), F.col(id_col).asc()
-    )
-    shortlist = cand.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= fetch
-    )
-    if refine_with is None:
-        return shortlist.where(F.col("rank") <= k).select(
-            query_id_col, id_col,
-            F.round(F.col("dist2"), round_digits).alias("dist2"), "rank",
-        )
-    exact = (
-        refine_with.select(id_col, F.col(refine_vec_col).alias("__v__"))
-        .join(F.broadcast(shortlist.select(query_id_col, id_col)), id_col)
-        .join(
-            F.broadcast(
-                queries.select(query_id_col, F.col(query_vec_col).alias("__qv__"))
-            ),
-            query_id_col,
-        )
-        .withColumn(
-            "dist2",
-            F.aggregate(
-                F.zip_with(
-                    "__v__", "__qv__",
-                    lambda a, b: (a.cast("double") - b.cast("double"))
-                    * (a.cast("double") - b.cast("double")),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-        )
-    )
-    w2 = Window.partitionBy(query_id_col).orderBy(
-        F.round(F.col("dist2"), round_digits).asc(), F.col(id_col).asc()
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select(
-            query_id_col, id_col,
-            F.round(F.col("dist2"), round_digits).alias("dist2"), "rank",
-        )
+    return _adc_shortlist_rerank(
+        cand, queries, k=k, fetch=fetch, id_col=id_col,
+        query_id_col=query_id_col, query_vec_col=query_vec_col,
+        refine_with=refine_with, refine_vec_col=refine_vec_col,
+        round_digits=round_digits,
     )

@@ -180,6 +180,64 @@ def test_topk_window_has_partial_group_limit(spark):
     assert "WindowGroupLimit" in plan and "Partial" in plan
 
 
+@pytest.fixture(scope="module")
+def ann_tiers(spark, tmp_path_factory):
+    """Every search tier over the sf embeddings, keyed by name; the PQ
+    tiers use small pinned models so no fit job runs."""
+    from plateau_spark.operators import similarity as S
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    q = emb.where(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    dim = len(emb.select("embedding").first()[0])
+    m, kk = 4, 4
+    sub = dim // m
+    model = {
+        "m": m, "k": kk, "dim": dim, "sub_dim": sub,
+        "codebooks": [
+            [[((j * 3 + c * 5 + d) % 9 - 4) / 8.0 for d in range(sub)] for c in range(kk)]
+            for j in range(m)
+        ],
+    }
+    cents = [(c, [((c * 5 + d * 3) % 7 - 3) / 8.0 for d in range(dim)]) for c in range(4)]
+    store = str(tmp_path_factory.mktemp("ann") / "s")
+    S.build_ivf_index(spark, store, "ivf", emb, n_centroids=4)
+    S.build_ivfpq_index(spark, store, "ivfpq", emb, centroids=cents, pq_model=model)
+    codes = S.encode_pq(emb, model)
+    return {
+        "lsh": lambda: S.cosine_topk_lsh(emb, q, k=10),
+        "ivf": lambda: S.cosine_topk_ivf(emb, q, k=10, n_centroids=4, nprobe=2),
+        "ivf_persisted": lambda: S.query_ivf_index(spark, store, "ivf", q, k=10, nprobe=2),
+        "pq": lambda: S.pq_topk(codes, q, model, k=10),
+        "pq_refine": lambda: S.pq_topk(codes, q, model, k=10, refine_with=emb),
+        "ivfpq": lambda: S.query_ivfpq_index(spark, store, "ivfpq", q, k=10, nprobe=2),
+        "ivfpq_refine": lambda: S.query_ivfpq_index(
+            spark, store, "ivfpq", q, k=10, nprobe=2, refine_with=emb
+        ),
+    }
+
+
+@pytest.mark.parametrize(
+    "tier",
+    ["lsh", "ivf", "ivf_persisted", "pq", "pq_refine", "ivfpq", "ivfpq_refine"],
+)
+def test_topk_window_has_partial_group_limit_every_tier(spark, ann_tiers, tier):
+    """The final rank of every search tier keeps its WindowGroupLimit.
+    In the IVF tier the candidates already arrive partitioned by query
+    (the probe window's exchange), so there is no exchange to put a
+    partial limit before and only the final limit is planned."""
+    plan = ann_tiers[tier]()._jdf.queryExecution().executedPlan().toString()
+    lines = plan.splitlines()
+    windows = [i for i, line in enumerate(lines) if "+- Window [row_number()" in line]
+    final_rank = lines[windows[0]:windows[1] if len(windows) > 1 else None]
+    assert "query_id" in final_rank[0]
+    limits = [line for line in final_rank if "WindowGroupLimit [query_id" in line]
+    assert any(line.endswith("Final") for line in limits), plan
+    if tier != "ivf":
+        assert any(line.endswith("Partial") for line in limits), plan
+
+
 def test_winnow_explode_no_inferred_recompute_filter(spark):
     """InferFiltersFromGenerate on a plain explode pushes a size()>0
     filter whose projection aliases get re-inlined — re-evaluating the
