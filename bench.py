@@ -454,6 +454,9 @@ def main() -> None:
         # one-line JSON contract (metric/value/unit/queries/sf) is
         # unchanged.
         "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+        # the cores the OS reports: shows an unset $SPARK_GRAFT_CPUS
+        # that the "32" fallback above would otherwise hide
+        "cpu_count": os.cpu_count(),
         "default_parallelism": spark.sparkContext.defaultParallelism,
     }
     if errors:
@@ -486,8 +489,10 @@ def main() -> None:
     # loaded runs — error-line flags stay unconditional (errors are code).
     # unknown loadavg (platform without getloadavg) counts as quiet:
     # suppressing flags forever on such boxes would be strictly worse
-    # than the pre-gate behavior
-    quiet = load_start is None or load_start[0] < 2.0
+    # than the pre-gate behavior. The threshold scales with the core
+    # count (a quarter of the cores, never below the former fixed 2.0),
+    # so a 32-core box idling at loadavg 3 still gets per-line flags.
+    quiet = load_start is None or load_start[0] < max(2.0, 0.25 * (os.cpu_count() or 1))
     summary["quiet"] = quiet
     outliers: dict[str, dict] = {}
     try:

@@ -18,14 +18,3 @@ def shuffle_partitions_conf(spark, default: int = 200) -> int:
     except (TypeError, ValueError):
         return default
 
-
-def env_int(name: str, default: int) -> int:
-    """Integer env knob with a safe fallback — a malformed value must
-    not crash library import (shared by the driver-tier sidecar
-    budgets in plans/blooms.py and plans/index.py)."""
-    import os
-
-    try:
-        return int(os.environ.get(name, default))
-    except (TypeError, ValueError):
-        return default

@@ -27,7 +27,6 @@ from plateau_spark.core.caching import (
     persist_shared,
     release_local_checkpoint,
 )
-from plateau_spark.core.conf import env_int as _env_int
 from plateau_spark.core.exprs import bind_col
 
 
@@ -856,6 +855,11 @@ def simhash_codegen(
     return sums.select(F.col(id_col), fingerprint.alias("simhash"))
 
 
+# rows above which one (probe, bucket) leaves the in-bucket GEMM for the
+# pairwise join (embedding_cosine_dup_pairs' hot-bucket guard)
+_BUCKET_GEMM_CAP_ROWS = 100_000
+
+
 def embedding_cosine_dup_pairs(
     df: DataFrame,
     id_col: str,
@@ -976,7 +980,7 @@ def embedding_cosine_dup_pairs(
     # rows ≤ est_bytes / (8 bytes × dim), so small inputs skip the size
     # pass entirely (no extra job at bench scale; at corpus scale the
     # one column-pruned counting pass is noise next to the join).
-    cap = _env_int("PLATEAU_SPARK_BUCKET_GEMM_CAP_ROWS", 100_000)
+    cap = _BUCKET_GEMM_CAP_ROWS
     est_bytes = estimated_bytes(df)  # None: stats unavailable, be safe, check
     max_bucket_bound = (
         (est_bytes // (8 * max(1, d))) * len(tuple(seeds))

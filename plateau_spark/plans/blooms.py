@@ -38,8 +38,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from plateau_spark.core import naming
-from plateau_spark.core.conf import env_int as _env_int
 from plateau_spark.core.store import Store
+from plateau_spark.plans.index import _utc_ts, read_column_driver
 
 N_BITS_DEFAULT = 1 << 13  # 8192 bits = 1 KB per file per column
 K_DEFAULT = 5
@@ -201,57 +201,16 @@ def build_bloom_dataframe(
     return rows.unionByName(spark.createDataFrame(cover, schema))
 
 
-# --- driver-tier build (small commits) -------------------------------------
+# --- driver tier (small commits) ------------------------------------------
 #
-# A streaming micro-batch or small append commits a handful of KB-scale
-# parquet files, but the Spark build path still pays one full job per
-# bloom column (scan of the new files + shuffle-to-1 + sidecar write) and
-# the merge path another (old sidecar ∪ new rows). For files this small
-# that job is pure scheduling floor. The driver tier reads the new files'
-# bloom column with pyarrow (bounded by ``_driver_bloom_budget``: default
-# 8 MB of data files — metadata-plane scale, same discipline as footer
-# harvesting), folds the bit positions with ``bloom_positions`` — the
-# documented bit-identical twin of the codegen hash chain — and writes
-# the sidecar directly. Anything bigger falls back to the Spark job, so
-# at 100 TB the initial corpus-wide build stays distributed while the
-# per-commit increment is O(KB) driver work and ZERO Spark jobs.
-
-_DRIVER_BLOOM_BYTES_DEFAULT = 8 << 20
-_DRIVER_BLOOM_MAX_FILES = 16
-# the Python fold costs ~4 us/value (measured: md5 + 5 dict ORs), so a
-# Spark job's ~0.2-0.3 s scheduling floor breaks even near 50-80 k
-# values; micro-batch commits sit orders of magnitude below this, bulk
-# commits orders above — the gate rarely sits near the boundary
-_DRIVER_BLOOM_ROWS_DEFAULT = 50_000
-
-
-def _driver_bloom_budget() -> int:
-    return _env_int(
-        "PLATEAU_SPARK_BLOOM_DRIVER_BYTES", _DRIVER_BLOOM_BYTES_DEFAULT
-    )
-
-
-def _driver_bloom_row_budget() -> int:
-    return _env_int(
-        "PLATEAU_SPARK_BLOOM_DRIVER_ROWS", _DRIVER_BLOOM_ROWS_DEFAULT
-    )
-
-
-def _key_bytes(store: Store, key: str) -> "int | None":
-    """Total bytes under ``key`` (a file, or a directory of part files
-    as the Spark sidecar writer lays them out); None when unsizeable."""
-    try:
-        if getattr(store, "_is_local", False):
-            import os
-
-            if os.path.isdir(store.path(key)):
-                return sum(
-                    store.size(k)
-                    for k in store.iter_keys(key.rstrip("/") + "/")
-                )
-        return store.size(key)
-    except OSError:
-        return None
+# A KB-scale commit's Bloom rows are folded on the driver: the new files'
+# column comes from the one gated pyarrow reader shared with the index
+# sidecars (``plans/index.py`` ``read_column_driver``: at most 16 files,
+# 8 MiB and 50,000 rows), and ``bloom_positions`` — the bit-identical
+# twin of the codegen hash chain — sets the bits, so the rows equal
+# ``build_bloom_dataframe``'s and a commit pays zero Spark jobs. Over the
+# gate the refresh (``sources/dataset.py`` ``_refresh_blooms``) runs the
+# Spark job instead.
 
 
 def build_bloom_rows_driver(
@@ -264,65 +223,21 @@ def build_bloom_rows_driver(
 ) -> "list[tuple[int, str, int]] | None":
     """Driver-tier twin of ``build_bloom_dataframe``: returns the same
     (word, label, bits) rows — bit-identical, via ``bloom_positions`` —
-    or None when the partitions exceed the driver budget (caller falls
-    back to the Spark job). Non-parquet files get no rows, exactly like
+    or None when the parquet files do not fit the driver gate (caller
+    takes the Spark job). Non-parquet files get no rows, exactly like
     the Spark path; a file missing the column (pre-evolution) yields
     only its coverage marker (the Spark path's explicit-schema NULL
     read does the same)."""
-    pq_parts = [p for p in partitions if p.file.endswith(".parquet")]
-    if len(pq_parts) > _DRIVER_BLOOM_MAX_FILES:
-        return None
     if k > _K_MAX:
         raise ValueError(f"k must be <= {_K_MAX}, got {k}")
-    try:
-        total = sum(store.size(p.file) for p in pq_parts)
-    except OSError:
+    columns = read_column_driver(
+        store, [p for p in partitions if p.file.endswith(".parquet")], column
+    )
+    if columns is None:
         return None
-    if total > _driver_bloom_budget():
-        return None
-    row_budget = _driver_bloom_row_budget()
-    if getattr(store, "_is_local", False):
-        # footer-only row precheck (free locally): the Python fold costs
-        # ~4 us/value, so beyond the row budget the Spark job wins even
-        # though the bytes fit
-        import pyarrow.parquet as _pq
-
-        try:
-            if (
-                sum(
-                    _pq.ParquetFile(store.path(p.file)).metadata.num_rows
-                    for p in pq_parts
-                )
-                > row_budget
-            ):
-                return None
-        except OSError:
-            return None
-    n_folded = 0
     rows: list[tuple[int, str, int]] = []
-    for p in pq_parts:
+    for p, values in columns:
         acc: dict[int, int] = {}
-        try:
-            table = store.read_parquet(p.file, columns=[column])
-            values = table.column(column).to_pylist()
-        except (KeyError, OSError):
-            values = []
-        except Exception:  # noqa: BLE001 — pyarrow read errors
-            # footer-schema check, not exception-message parsing (see
-            # plans/index.py column_in_footer): absent column ⇒ the
-            # file predates the evolved column and contributes nothing;
-            # anything else ⇒ unreadable driver-side, use the Spark path
-            from plateau_spark.plans.index import column_in_footer
-
-            if not column_in_footer(store, p.file, column):
-                values = []
-            else:
-                return None
-        # object-store guard (no free footer precheck there): bail to
-        # the Spark path once the fold exceeds the row budget
-        n_folded += len(values)
-        if n_folded > row_budget:
-            return None
         for v in values:
             if v is None:
                 continue
@@ -509,8 +424,3 @@ class BloomConsult:
                 break
         return allowed
 
-
-def _utc_ts() -> str:
-    from plateau_spark.plans.index import _utc_ts as ts
-
-    return ts()

@@ -7,15 +7,19 @@ under ``<uuid>/indices/<col>/<ts>.by-dataset-index.parquet``; queried at
 plan time to prune partitions (docs/spec/indexing.rst:9-18), maintained
 incrementally on commit (plateau/core/index.py:280-403).
 
-Spark-first lifecycle — the index never materializes on the driver
-except for the values a query actually touches:
+Lifecycle — one refresh per commit (``sources/dataset.py``
+``_refresh_indices``; reference update_indices_from_partitions +
+merge_indices, plateau/io_components/write.py:93-118):
 
-  build   — one distributed aggregation
-            ``df.groupBy(col).agg(sort_array(collect_set(label)))``
-  merge   — commit-time union of index DataFrames (explode → re-agg),
-            executed by Spark (merge_index_dataframes)
-  remove  — label/value removal as array_except / anti-filter on the
-            index DataFrame (remove_partitions_from_index_df)
+  refresh — the (value, label) pairs of the new partitions, plus the old
+            sidecar's pairs minus the removed labels, aggregated to
+            (value, sorted label array) and written as a new sidecar
+            sorted by value. A build is a refresh with no old sidecar.
+            Small inputs take the driver tier (``read_column_driver``,
+            the one gate shared with the Bloom sidecars): pyarrow reads
+            and a Python dict, zero Spark jobs. Anything larger runs one
+            Spark job per column (``SecondaryIndex.build_dataframe`` over
+            the unioned pairs, ``persist_index_dataframe``).
   load    — driver-side pyarrow read of ONE small parquet, restricted
             via row-group filters to the literals of the current query
             (SecondaryIndex.load with ``literals=``), matching the
@@ -32,7 +36,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from plateau_spark.core import naming
-from plateau_spark.core.conf import env_int as _env_int
 from plateau_spark.core.predicates import evaluate_literal
 from plateau_spark.core.store import Store
 
@@ -92,7 +95,8 @@ class SecondaryIndex:
 
     Only ever materialized for the values matching the query's literals
     (``load(..., literals=)``) — the persistent, full form is parquet and
-    is maintained by Spark jobs (functions below), never by this class.
+    is maintained by the sidecar refresh (``sources/dataset.py``
+    ``_refresh_indices``), never by this class.
     """
 
     def __init__(self, column: str, index_dct: dict[Any, set[str]] | None = None):
@@ -133,26 +137,6 @@ class SecondaryIndex:
             return spark.createDataFrame(rows).toDF(self.column, "partitions")
         return spark.createDataFrame(
             [], schema=f"`{self.column}` {value_type}, partitions array<string>"
-        )
-
-    # -- persistence ----------------------------------------------------------
-    def persist(
-        self,
-        store: Store,
-        dataset_uuid: str,
-        spark: SparkSession,
-        value_type: str = "string",
-    ) -> str:
-        """Write this (small, driver-side) index as one parquet.
-        ``value_type`` pins the value column's type when the index is
-        EMPTY — the string default would otherwise poison later
-        ``unionByName`` merges (set-op widening coerces a typed rebuilt
-        index to string, and point lookups then match nothing)."""
-        return persist_index_dataframe(
-            self.to_dataframe(spark, value_type=value_type),
-            store,
-            dataset_uuid,
-            self.column,
         )
 
     @classmethod
@@ -210,38 +194,9 @@ class SecondaryIndex:
         loaded dict is literal-restricted, so the scan is tiny."""
         return self.eval_operator("==", value)
 
-    # -- maintenance (driver-side view; Spark-side twins below) ---------------
-    def remove_partitions(self, labels: Iterable[str]) -> "SecondaryIndex":
-        """Drop labels from every posting list; drop empty values.
-        Reference: plateau/core/index.py:280-360."""
-        drop = set(labels)
-        new = {
-            v: remaining
-            for v, lbls in self.index_dct.items()
-            if (remaining := lbls - drop)
-        }
-        return SecondaryIndex(self.column, new)
-
-    def remove_values(self, values: Iterable[Any]) -> "SecondaryIndex":
-        """Drop entire value entries.
-        Reference: plateau/core/index.py:280-318 (remove_values)."""
-        drop = set(values)
-        return SecondaryIndex(
-            self.column,
-            {v: set(lbls) for v, lbls in self.index_dct.items() if v not in drop},
-        )
-
-    def update(self, other: "SecondaryIndex") -> "SecondaryIndex":
-        """Union-merge posting lists (commit-time index merge).
-        Reference: merge_indices, plateau/core/index.py:760-791."""
-        merged = {v: set(lbls) for v, lbls in self.index_dct.items()}
-        for v, lbls in other.index_dct.items():
-            merged.setdefault(v, set()).update(lbls)
-        return SecondaryIndex(self.column, merged)
-
 
 # ---------------------------------------------------------------------------
-# Spark-side index lifecycle (the scale path: nothing driver-materialized)
+# Sidecar writers and the driver tier
 # ---------------------------------------------------------------------------
 
 
@@ -250,47 +205,40 @@ def persist_index_dataframe(
 ) -> str:
     """Persist a (column, partitions) index DataFrame; returns the store
     key. One small file by design — plan-time loads must be one GET
-    (docs/spec/indexing.rst:9-18). repartition(1), NOT coalesce(1):
-    coalesce removes the post-shuffle parallelism so the whole index
-    aggregation would run in a single reduce task; the extra exchange
-    funnels only the finished index rows."""
+    (docs/spec/indexing.rst:9-18) — sorted by value like the driver
+    tier's ``persist_index_dict``, so a value-filtered
+    ``SecondaryIndex.load`` prunes row groups. repartition(1), NOT
+    coalesce(1): coalesce removes the post-shuffle parallelism so the
+    whole index aggregation would run in a single reduce task; the extra
+    exchange funnels only the finished index rows."""
     key = naming.index_key(dataset_uuid, column, _utc_ts())
-    index_df.repartition(1).write.mode("overwrite").parquet(store.url(key))
+    (
+        index_df.repartition(1)
+        .sortWithinPartitions(column)
+        .write.mode("overwrite")
+        .parquet(store.url(key))
+    )
     return key
 
 
-# --- driver-tier build/merge (small commits) -------------------------------
+# --- the driver tier: one gate for index and Bloom sidecars ---------------
 #
-# A streaming micro-batch or small append pays one Spark job per indexed
-# column (scan of the new files + collect_set exchange + sidecar write)
-# and the commit-time merge another — pure scheduling floor at KB scale
-# (measured: _merge_committed_indices was ~70% of a warm update commit).
-# The driver tier mirrors the bloom sidecars' discipline
-# (plans/blooms.py): size-gated pyarrow reads of the new files' index
-# column, a Python dict merge, and a direct parquet write of the same
-# deterministic rows the Spark aggregation produces (value, SORTED label
-# array — sort_array(collect_set) has no order freedom to replicate).
-# Anything over budget falls back to the Spark jobs, so corpus-scale
-# builds at 100 TB are unchanged. Value types are gated to
-# integer/string: Python dict equality provably matches Spark groupBy
-# for those; floats (NaN normalization) and nested types stay
-# distributed.
+# A streaming micro-batch or small append commits a handful of KB-scale
+# parquet files, and a Spark job per sidecar column (scan of the new
+# files + exchange + sidecar write) is pure scheduling floor at that
+# size. So every sidecar refresh (sources/dataset.py ``_refresh_indices``
+# and ``_refresh_blooms``) first reads the new files' column with
+# pyarrow through ``read_column_driver`` and folds it on the driver into
+# the exact rows the Spark tier writes; the old sidecar's rows are
+# merged in when ``sidecar_fits_driver``. Anything over the gate runs one
+# Spark job per column, so corpus-scale builds stay distributed. The
+# row cap is where the Python fold (~4 us per value for a Bloom: md5 +
+# 5 dict ORs) meets a Spark job's ~0.2-0.3 s scheduling floor; commits
+# sit orders of magnitude on either side of it.
 
-_DRIVER_INDEX_BYTES_DEFAULT = 8 << 20
-_DRIVER_INDEX_ROWS_DEFAULT = 50_000
-_DRIVER_INDEX_MAX_FILES = 16
-
-
-def _driver_index_budget() -> int:
-    return _env_int(
-        "PLATEAU_SPARK_INDEX_DRIVER_BYTES", _DRIVER_INDEX_BYTES_DEFAULT
-    )
-
-
-def _driver_index_row_budget() -> int:
-    return _env_int(
-        "PLATEAU_SPARK_INDEX_DRIVER_ROWS", _DRIVER_INDEX_ROWS_DEFAULT
-    )
+DRIVER_MAX_FILES = 16
+DRIVER_MAX_BYTES = 8 << 20
+DRIVER_MAX_ROWS = 50_000
 
 
 def column_in_footer(store: Store, key: str, column: str) -> bool:
@@ -304,9 +252,85 @@ def column_in_footer(store: Store, key: str, column: str) -> bool:
         return True
 
 
+def read_column_driver(
+    store: Store, partitions: Sequence, column: str
+) -> "list[tuple[Any, list]] | None":
+    """``[(partition, values of column)]`` read with pyarrow, or None
+    when the partitions do not fit the driver gate (more than
+    ``DRIVER_MAX_FILES`` files, any non-parquet file, more than
+    ``DRIVER_MAX_BYTES`` of data or ``DRIVER_MAX_ROWS`` rows, or an
+    unreadable file): the caller then takes the Spark tier. A file
+    missing the column (pre-evolution) yields no values, exactly like
+    the Spark tier's explicit-schema NULL read."""
+    parts = list(partitions)
+    if len(parts) > DRIVER_MAX_FILES or not all(
+        p.file.endswith(".parquet") for p in parts
+    ):
+        return None
+    try:
+        if sum(store.size(p.file) for p in parts) > DRIVER_MAX_BYTES:
+            return None
+    except OSError:
+        return None
+    if getattr(store, "_is_local", False):
+        # footer-only row precheck, free on a local store
+        import pyarrow.parquet as pqt
+
+        try:
+            if (
+                sum(
+                    pqt.ParquetFile(store.path(p.file)).metadata.num_rows
+                    for p in parts
+                )
+                > DRIVER_MAX_ROWS
+            ):
+                return None
+        except OSError:
+            return None
+    out: list[tuple[Any, list]] = []
+    n_read = 0
+    for p in parts:
+        try:
+            table = store.read_parquet(p.file, columns=[column])
+            values = table.column(column).to_pylist()
+        except (KeyError, OSError):
+            values = []
+        except Exception:  # noqa: BLE001 — pyarrow read errors
+            # decide "evolved column absent from this file" from the
+            # parquet footer schema, not the exception wording (which
+            # pyarrow does not keep stable across releases); any other
+            # failure takes the Spark tier
+            if column_in_footer(store, p.file, column):
+                return None
+            values = []
+        # object-store guard (no free footer precheck there)
+        n_read += len(values)
+        if n_read > DRIVER_MAX_ROWS:
+            return None
+        out.append((p, values))
+    return out
+
+
+def sidecar_fits_driver(store: Store, key: str) -> bool:
+    """True iff the sidecar at ``key`` (a file, or a directory of part
+    files as the Spark writer lays them out) is at most
+    ``DRIVER_MAX_BYTES``, so the driver tier may read it whole."""
+    import os
+
+    try:
+        if getattr(store, "_is_local", False) and os.path.isdir(store.path(key)):
+            size = sum(store.size(k) for k in store.iter_keys(key.rstrip("/") + "/"))
+        else:
+            size = store.size(key)
+    except OSError:
+        return False
+    return size <= DRIVER_MAX_BYTES
+
+
 def index_value_type_ok(arrow_type) -> bool:
     """Value types the driver tier may merge: Python equality must
-    provably match Spark groupBy equality."""
+    provably match Spark groupBy equality (floats normalize NaN, nested
+    types have no dict key)."""
     import pyarrow as pa
 
     return (
@@ -319,60 +343,16 @@ def index_value_type_ok(arrow_type) -> bool:
 def build_index_pairs_driver(
     store: Store, partitions: Sequence, column: str
 ) -> "dict[Any, set[str]] | None":
-    """value → {labels} over the given partitions' parquet files via
-    pyarrow, or None when over the driver budget / any non-parquet
-    payload / unreadable (caller falls back to the Spark build). A file
-    missing the column (pre-evolution) contributes no pairs, exactly
-    like the Spark path's explicit-schema NULL read."""
-    parts = list(partitions)
-    pq_parts = [p for p in parts if p.file.endswith(".parquet")]
-    if len(pq_parts) != len(parts) or len(pq_parts) > _DRIVER_INDEX_MAX_FILES:
+    """value → {labels} over the given partitions' files, or None when
+    they do not fit the driver gate (``read_column_driver``)."""
+    columns = read_column_driver(store, partitions, column)
+    if columns is None:
         return None
-    try:
-        total = sum(store.size(p.file) for p in pq_parts)
-    except OSError:
-        return None
-    if total > _driver_index_budget():
-        return None
-    row_budget = _driver_index_row_budget()
-    if getattr(store, "_is_local", False):
-        import pyarrow.parquet as pqt
-
-        try:
-            if (
-                sum(
-                    pqt.ParquetFile(store.path(p.file)).metadata.num_rows
-                    for p in pq_parts
-                )
-                > row_budget
-            ):
-                return None
-        except OSError:
-            return None
-    n_read = 0
     dct: dict[Any, set[str]] = {}
-    for p in pq_parts:
-        try:
-            table = store.read_parquet(p.file, columns=[column])
-            values = table.column(column).to_pylist()
-        except (KeyError, OSError):
-            values = []
-        except Exception:  # noqa: BLE001 — pyarrow read errors
-            # decide "evolved column absent from this file" from the
-            # parquet footer schema, not the exception wording (which
-            # pyarrow does not keep stable across releases); any other
-            # failure falls back to the Spark build
-            if not column_in_footer(store, p.file, column):
-                values = []
-            else:
-                return None
-        n_read += len(values)
-        if n_read > row_budget:
-            return None
+    for p, values in columns:
         for v in values:
-            if v is None:
-                continue
-            dct.setdefault(v, set()).add(p.label)
+            if v is not None:
+                dct.setdefault(v, set()).add(p.label)
     return dct
 
 
@@ -408,9 +388,11 @@ def persist_index_dict(
 
 
 def merge_index_dataframes(column: str, dfs: Sequence[DataFrame]) -> DataFrame:
-    """Commit-time merge of N index DataFrames — explode to pairs,
-    union, re-aggregate. One Spark shuffle over the distinct values;
-    reference: merge_indices (plateau/core/index.py:760-791)."""
+    """Merge N index DataFrames — explode to pairs, union, re-aggregate.
+    One Spark shuffle over the distinct values; reference:
+    merge_indices (plateau/core/index.py:760-791). Commits do not call
+    it: ``_refresh_indices`` unions the pairs before its one
+    aggregation."""
     pairs = [
         df.select(F.col(column), F.explode("partitions").alias(LABEL_COL)) for df in dfs
     ]
@@ -422,20 +404,10 @@ def merge_index_dataframes(column: str, dfs: Sequence[DataFrame]) -> DataFrame:
     )
 
 
-def remove_partitions_from_index_df(
-    index_df: DataFrame, column: str, labels: Iterable[str]
-) -> DataFrame:
-    """Spark-side twin of SecondaryIndex.remove_partitions."""
-    arr = F.array(*[F.lit(l) for l in sorted(set(labels))])
-    return index_df.select(
-        F.col(column), F.array_except("partitions", arr).alias("partitions")
-    ).where(F.size("partitions") > 0)
-
-
 def remove_values_from_index_df(
     index_df: DataFrame, column: str, values: Iterable[Any]
 ) -> DataFrame:
-    """Spark-side twin of SecondaryIndex.remove_values.
+    """Drop entire value entries from an index DataFrame.
 
     NULL-safe: a bare ``~isin([...None...])`` evaluates to NULL for
     every non-matching row (SQL three-valued logic) and the filter

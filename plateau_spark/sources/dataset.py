@@ -58,10 +58,13 @@ from plateau_spark.sources.serializers import (
     write_staged,
 )
 from plateau_spark.plans.index import (
+    LABEL_COL,
     SecondaryIndex,
-    merge_index_dataframes,
+    build_index_pairs_driver,
+    index_value_type_ok,
     persist_index_dataframe,
-    remove_partitions_from_index_df,
+    persist_index_dict,
+    sidecar_fits_driver,
 )
 from plateau_spark.plans.pruning import plan_scan
 
@@ -539,309 +542,146 @@ def _empty_index_df(
     return spark.createDataFrame([], schema=schema)
 
 
-def _build_index_dataframes(
-    spark: SparkSession,
-    store: Store,
-    metadata: DatasetMetadata,
-    partitions: Sequence[Partition],
-    columns: Sequence[str],
-) -> dict[str, DataFrame]:
-    """Distributed index build over the given partitions' files — each
-    result is a (column value, sorted label array) DataFrame; nothing
-    touches the driver (the round-1 `.collect()` is gone).
-
-    One Spark aggregation per indexed column: scan only that column
-    (column pruning hits the parquet scan), map file → label with a
-    broadcast lookup, groupBy value. Reference:
-    MetaPartition.build_indices
-    (plateau/io_components/metapartition.py:1005-1045).
-    """
-    out: dict[str, DataFrame] = {}
-    key_cols = set(metadata.partition_keys)
-    df = None
-    mapping = None
-    for col in columns:
-        if col in key_cols:
-            # primary index — derivable from commit-file key_values
-            # (one pair per partition: metadata-scale, not data-scale)
-            out[col] = SecondaryIndex.from_pairs(
-                col, [(p.key_values[col], p.label) for p in partitions]
-            ).to_dataframe(spark) if partitions else _empty_index_df(spark, metadata, col)
-            continue
-        if not partitions:
-            out[col] = _empty_index_df(spark, metadata, col)
-            continue
-        if df is None:
-            file_to_label = {store.url(p.file): p.label for p in partitions}
-            df = _read_committed_files(
-                spark, store, metadata.uuid, metadata.schema, partitions
-            )
-            mapping = spark.createDataFrame(
-                list(file_to_label.items()), "___file string, __label__ string"
-            )
-        # no dropDuplicates pre-pass: the downstream collect_set agg
-        # dedups map-side already, so the extra exchange bought nothing
-        pairs = (
-            df.select(F.col(col), F.input_file_name().alias("___file"))
-            .where(F.col(col).isNotNull())
-            .join(F.broadcast(mapping), "___file")
-            .select(col, "__label__")
-        )
-        out[col] = SecondaryIndex.build_dataframe(pairs, col)
-    return out
-
-
-def _persist_indices_tiered(
-    spark: SparkSession,
-    store: Store,
-    meta_obj: DatasetMetadata,
-    partitions: Sequence[Partition],
-    columns: Sequence[str],
-) -> dict[str, str]:
-    """Build + persist index sidecars for ``columns``: the size-gated
-    DRIVER tier first (zero Spark jobs — plans/index.py, the bloom
-    discipline), the distributed build for whatever remains. Returns
-    {column: sidecar key}."""
-    cols = list(columns)
-    if not cols:
-        return {}
-    out = _build_indices_driver(store, meta_obj, list(partitions), cols)
-    rest = [c for c in cols if c not in out]
-    if rest:
-        built = _build_index_dataframes(
-            spark, store, meta_obj, list(partitions), rest
-        )
-        for col, idx_df in built.items():
-            out[col] = persist_index_dataframe(
-                idx_df, store, meta_obj.uuid, col
-            )
-    return out
-
-
-def _build_indices_driver(
-    store: Store,
-    ds: DatasetMetadata,
-    partitions: Sequence[Partition],
-    columns: Sequence[str],
-) -> dict[str, str]:
-    """Driver-tier initial index builds for a KB-scale commit (the
-    bloom-sidecar discipline, plans/index.py): {column: sidecar key}
-    for the columns whose data fits the driver budget and whose value
-    type the tier supports; others take the Spark build."""
-    if not columns:
-        return {}
-    from plateau_spark.plans.index import (
-        build_index_pairs_driver,
-        index_value_type_ok,
-        persist_index_dict,
-    )
-
-    try:
-        from pyspark.sql.pandas.types import to_arrow_type
-    except ImportError:  # pragma: no cover
-        return {}
-    import pyarrow as pa
-
-    key_cols = set(ds.partition_keys)
-    out: dict[str, str] = {}
-    for col in columns:
-        try:
-            vt = to_arrow_type(ds.schema[col].dataType)
-        except Exception:  # noqa: BLE001 — unsupported type → Spark path
-            continue
-        if not index_value_type_ok(vt):
-            continue
-        want = int if pa.types.is_integer(vt) else str
-        if col in key_cols:
-            dct: dict | None = {}
-            for p in partitions:
-                dct.setdefault(p.key_values[col], set()).add(p.label)
-        else:
-            dct = build_index_pairs_driver(store, partitions, col)
-        if dct is None or not all(type(v) is want for v in dct):
-            continue
-        out[col] = persist_index_dict(dct, store, ds.uuid, col, vt)
-    return out
-
-
-def _build_index_pair_dataframes(
-    spark: SparkSession,
-    store: Store,
-    metadata: DatasetMetadata,
-    partitions: Sequence[Partition],
-    columns: Sequence[str],
-) -> dict[str, DataFrame]:
-    """Like ``_build_index_dataframes`` but returns the PRE-aggregation
-    (value, label) pair frames, so a commit-time merge can fold new
-    pairs and the old index into ONE aggregation instead of
-    aggregate-then-explode-then-re-aggregate."""
-    out: dict[str, DataFrame] = {}
-    key_cols = set(metadata.partition_keys)
-    df = None
-    mapping = None
-    for col in columns:
-        if col in key_cols or not partitions:
-            rows = [(p.key_values[col], p.label) for p in partitions] if col in key_cols else []
-            out[col] = (
-                spark.createDataFrame(rows).toDF(col, "__label__")
-                if rows
-                else _empty_index_df(spark, metadata, col).select(
-                    F.col(col), F.explode("partitions").alias("__label__")
-                )
-            )
-            continue
-        if df is None:
-            file_to_label = {store.url(p.file): p.label for p in partitions}
-            df = _read_committed_files(
-                spark, store, metadata.uuid, metadata.schema, partitions
-            )
-            mapping = spark.createDataFrame(
-                list(file_to_label.items()), "___file string, __label__ string"
-            )
-        out[col] = (
-            df.select(F.col(col), F.input_file_name().alias("___file"))
-            .where(F.col(col).isNotNull())
-            .join(F.broadcast(mapping), "___file")
-            .select(col, "__label__")
-        )
-    return out
-
-
-def _merge_committed_indices(
+def _refresh_indices(
     spark: SparkSession,
     store: Store,
     meta: DatasetMetadata,
-    new_partitions: Sequence[Partition],
-    removed: set[str],
+    partitions: Sequence[Partition],
+    columns: Sequence[str],
+    removed: Sequence[str] = (),
 ) -> None:
-    """Refresh every index for a commit: build over the new partitions,
-    drop removed labels from the old index, merge, persist — all as
-    Spark jobs over the small index relations (never driver dicts).
-    Reference: update_indices_from_partitions + merge_indices
-    (plateau/io_components/write.py:93-118, plateau/core/index.py:760-791).
+    """Refresh the index sidecar of each of ``columns`` in
+    ``meta.indices``: the (value, label) pairs of ``partitions`` plus the
+    column's current sidecar minus the ``removed`` labels, aggregated to
+    (value, sorted label array) under a new key (the old key becomes
+    garbage for GC). A column with no sidecar yet is a build over
+    ``partitions``; its reference-embedded inline copy, if any, is
+    superseded. Reference: update_indices_from_partitions +
+    merge_indices (plateau/io_components/write.py:93-118,
+    plateau/core/index.py:760-791).
 
-    Reference-written indices embedded inline in the commit file
-    (``embedded_indices``) are converted here: each is built as an
-    external sidecar over every live partition and the inline copy is
-    dropped — the commit document never writes inline indices back, so
-    without the conversion the first commit would silently lose them.
+    Per column the driver tier (``_index_dict_driver``, zero Spark jobs)
+    runs when the new files fit the gate of ``plans/index.py``
+    ``read_column_driver`` and the old sidecar fits its byte budget;
+    otherwise ONE Spark job unions the new pairs with the old sidecar's
+    pairs and aggregates once. A partition-key index takes its new pairs
+    from the commit file's key_values, never from the data.
     """
-    if meta.indices:
-        _merge_external_indices(spark, store, meta, new_partitions, removed)
-    if meta.embedded_indices:
-        meta.indices.update(
-            _persist_indices_tiered(
-                spark, store, meta, list(meta.partitions.values()),
-                sorted(meta.embedded_indices),
-            )
-        )
-        meta.embedded_indices.clear()
-
-
-def _merge_external_indices(
-    spark: SparkSession,
-    store: Store,
-    meta: DatasetMetadata,
-    new_partitions: Sequence[Partition],
-    removed: set[str],
-) -> None:
-    # driver tier first (plans/index.py): a KB-scale commit merges each
-    # index entirely with pyarrow + a Python dict — zero Spark jobs per
-    # column — producing the identical (value, sorted labels) rows; the
-    # distributed pair-level merge below is the fallback and the
-    # corpus-scale path
-    done = _merge_indices_driver(store, meta, list(new_partitions), removed)
-    remaining = [c for c in meta.indices if c not in done]
-    meta.indices.update(done)
-    if not remaining:
-        return
-    built = _build_index_pair_dataframes(
-        spark, store, meta, list(new_partitions), remaining
-    )
-    for col in remaining:
-        key = meta.indices[col]
-        # merge at the PAIR level: old index exploded + new pairs feed
-        # ONE collect_set aggregation (the former shape aggregated the
-        # new pairs, exploded the result and re-aggregated — two wide
-        # exchanges per indexed column per commit for nothing)
-        old_pairs = spark.read.parquet(store.url(key)).select(
-            F.col(col), F.explode("partitions").alias("__label__")
-        )
-        if removed:
-            old_pairs = old_pairs.where(
-                ~F.col("__label__").isin(sorted(set(removed)))
-            )
-        merged = SecondaryIndex.build_dataframe(
-            old_pairs.unionByName(built[col]), col
-        )
-        meta.indices[col] = persist_index_dataframe(merged, store, meta.uuid, col)
-
-
-def _merge_indices_driver(
-    store: Store,
-    meta: DatasetMetadata,
-    new_partitions: list[Partition],
-    removed: set[str],
-) -> dict[str, str]:
-    """Driver-tier index merges for the columns whose new pairs AND old
-    sidecar fit the driver budget; returns {column: new sidecar key} for
-    the columns handled (others take the Spark path)."""
-    from plateau_spark.plans.index import (
-        _driver_index_budget,
-        build_index_pairs_driver,
-        index_value_type_ok,
-        persist_index_dict,
-    )
-    from plateau_spark.plans.blooms import _key_bytes
-
+    parts = list(partitions)
+    rm = {str(x) for x in removed}
     key_cols = set(meta.partition_keys)
-    out: dict[str, str] = {}
-    for col, key in list(meta.indices.items()):
-        if col in key_cols:
-            new_dct: dict | None = {}
-            for p in new_partitions:
-                new_dct.setdefault(p.key_values[col], set()).add(p.label)
+    scan = None
+    for col in dict.fromkeys(columns):
+        old_key = meta.indices.get(col)
+        driver = _index_dict_driver(store, meta, parts, col, old_key, rm)
+        if driver is not None:
+            dct, value_type = driver
+            key = persist_index_dict(dct, store, meta.uuid, col, value_type)
         else:
-            new_dct = build_index_pairs_driver(store, new_partitions, col)
-        if new_dct is None:
-            continue
-        old_bytes = _key_bytes(store, key)
-        if old_bytes is None or old_bytes > _driver_index_budget():
-            continue
-        try:
-            table = store.read_parquet(key)
-        except OSError:
-            continue
-        if col not in table.column_names:
-            continue
-        vt = table.schema.field(col).type
-        # type gate: Python equality must match Spark groupBy equality
-        # for both the stored values and the incoming ones (bool is an
-        # int subclass — excluded to keep key-value coercion exact)
-        if not index_value_type_ok(vt):
-            continue
-        import pyarrow as pa
+            if not parts:
+                pairs = _empty_index_df(spark, meta, col).select(
+                    F.col(col), F.explode("partitions").alias(LABEL_COL)
+                )
+            elif col in key_cols:
+                pairs = spark.createDataFrame(
+                    [(p.key_values[col], p.label) for p in parts]
+                ).toDF(col, LABEL_COL)
+            else:
+                if scan is None:
+                    # one scan and file → label map shared by every column
+                    file_to_label = {store.url(p.file): p.label for p in parts}
+                    scan = (
+                        _read_committed_files(
+                            spark, store, meta.uuid, meta.schema, parts
+                        ),
+                        spark.createDataFrame(
+                            list(file_to_label.items()),
+                            f"___file string, {LABEL_COL} string",
+                        ),
+                    )
+                df, mapping = scan
+                pairs = (
+                    df.select(F.col(col), F.input_file_name().alias("___file"))
+                    .where(F.col(col).isNotNull())
+                    .join(F.broadcast(mapping), "___file")
+                    .select(col, LABEL_COL)
+                )
+            if old_key is not None:
+                old = spark.read.parquet(store.url(old_key))
+                # reference-written sidecars name the posting list "partition"
+                plist = "partitions" if "partitions" in old.columns else "partition"
+                old = old.select(F.col(col), F.explode(plist).alias(LABEL_COL))
+                if rm:
+                    old = old.where(~F.col(LABEL_COL).isin(sorted(rm)))
+                pairs = old.unionByName(pairs)
+            key = persist_index_dataframe(
+                SecondaryIndex.build_dataframe(pairs, col), store, meta.uuid, col
+            )
+        meta.indices[col] = key
+        meta.embedded_indices.pop(col, None)
 
-        want = int if pa.types.is_integer(vt) else str
-        if not all(type(v) is want for v in new_dct):
-            continue
-        plist = (
-            "partitions" if "partitions" in table.column_names else "partition"
-        )
+
+def _index_dict_driver(
+    store: Store,
+    meta: DatasetMetadata,
+    partitions: list[Partition],
+    column: str,
+    old_key: str | None,
+    removed: set[str],
+):
+    """Driver tier of ``_refresh_indices``: ``(value → labels, arrow
+    value type)``, or None when the column takes the Spark tier. The
+    value type is the old sidecar's (a merge) or the schema's (a build);
+    it must be integer or string, and every new value exactly that
+    Python type (bool is an int subclass), so Python equality matches
+    Spark groupBy equality."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    if old_key is None:
+        try:
+            value_type = to_arrow_type(meta.schema[column].dataType)
+        except Exception:  # noqa: BLE001 — unsupported type → Spark tier
+            return None
+        if not index_value_type_ok(value_type):
+            return None
+    if column in meta.partition_keys:
+        new: dict | None = {}
+        for p in partitions:
+            new.setdefault(p.key_values[column], set()).add(p.label)
+    else:
+        new = build_index_pairs_driver(store, partitions, column)
+    if new is None:
+        return None
+    dct: dict = {}
+    if old_key is not None:
+        if not sidecar_fits_driver(store, old_key):
+            return None
+        try:
+            table = store.read_parquet(old_key)
+        except OSError:
+            return None
+        if column not in table.column_names:
+            return None
+        value_type = table.schema.field(column).type
+        if not index_value_type_ok(value_type):
+            return None
+        # reference-written sidecars name the posting list "partition"
+        plist = "partitions" if "partitions" in table.column_names else "partition"
         dct = {
-            v: set(pl)
-            for v, pl in zip(
-                table.column(col).to_pylist(), table.column(plist).to_pylist()
+            v: set(labels)
+            for v, labels in zip(
+                table.column(column).to_pylist(), table.column(plist).to_pylist()
             )
         }
         if removed:
-            rm = {str(x) for x in removed}
-            dct = {v: s - rm for v, s in dct.items()}
-            dct = {v: s for v, s in dct.items() if s}
-        for v, s in new_dct.items():
-            dct.setdefault(v, set()).update(s)
-        out[col] = persist_index_dict(dct, store, meta.uuid, col, vt)
-    return out
+            dct = {v: ls - removed for v, ls in dct.items() if ls - removed}
+    want = int if pa.types.is_integer(value_type) else str
+    if not all(type(v) is want for v in new):
+        return None
+    for v, labels in new.items():
+        dct.setdefault(v, set()).update(labels)
+    return dct, value_type
 
 
 def _attach_zone_maps(
@@ -866,27 +706,31 @@ def _attach_zone_maps(
         p.stats = stats.get(p.label, {})
 
 
-def _build_blooms(
+def _refresh_blooms(
     spark: SparkSession,
     store: Store,
-    schema,
-    partition_keys: Sequence[str],
-    dataset_uuid: str,
+    meta: DatasetMetadata,
     partitions: Sequence[Partition],
-    columns: Sequence[str] | None,
+    columns: Sequence[str],
+    removed: Sequence[str] = (),
     *,
     n_bits: int | None = None,
     k: int | None = None,
-) -> dict[str, dict]:
-    """Build + persist per-file Bloom sidecars for the given columns
-    over the given partitions; returns the ``DatasetMetadata.blooms``
-    entries (plans/blooms.py). KB-scale commits (streaming micro-
-    batches, small appends) take the size-gated DRIVER tier — pyarrow
-    read + the bit-identical Python hash twin, zero Spark jobs; larger
-    builds pay one scan job per column, projection-pruned to that
-    column."""
-    if not columns:
-        return {}
+) -> None:
+    """Refresh the Bloom sidecar of each of ``columns`` in
+    ``meta.blooms``: the (word, label, bits) rows of ``partitions`` plus
+    the column's current sidecar rows minus the ``removed`` labels,
+    under a new key (the old key becomes garbage for GC). A column with
+    no sidecar yet is a build over ``partitions``, validated against the
+    schema, with ``n_bits``/``k`` (the defaults when None); an existing
+    sidecar keeps its own parameters (plans/blooms.py).
+
+    Per column the driver tier (pyarrow read + the bit-identical Python
+    hash twin, zero Spark jobs) runs when the new files fit the gate of
+    ``plans/index.py`` ``read_column_driver`` and the old sidecar fits
+    its byte budget; otherwise ONE Spark job, projection-pruned to the
+    column, unions the new rows with the old sidecar's (labels never
+    repeat, so there is nothing to aggregate)."""
     from plateau_spark.plans.blooms import (
         HASH_FAMILY,
         K_DEFAULT,
@@ -895,102 +739,51 @@ def _build_blooms(
         build_bloom_rows_driver,
         persist_bloom_dataframe,
         persist_bloom_rows,
+        read_bloom_rows,
+        remove_labels_from_bloom_df,
         validate_bloom_columns,
     )
 
-    n_bits = N_BITS_DEFAULT if n_bits is None else int(n_bits)
-    k = K_DEFAULT if k is None else int(k)
-    cols = validate_bloom_columns(schema, columns, partition_keys)
-    dtypes = {f.name: f.dataType for f in schema.fields}
-    out: dict[str, dict] = {}
-    for col in cols:
-        rows = build_bloom_rows_driver(
-            store, partitions, col, n_bits=n_bits, k=k
-        )
-        if rows is not None:
-            key = persist_bloom_rows(rows, store, dataset_uuid, col)
-        else:
-            bdf = build_bloom_dataframe(
-                spark, store, partitions, col, n_bits=n_bits, k=k,
-                dtype=dtypes[col],
-            )
-            key = persist_bloom_dataframe(bdf, store, dataset_uuid, col)
-        out[col] = {
-            "key": key,
-            "n_bits": n_bits,
-            "k": k,
+    columns = list(dict.fromkeys(columns))
+    new_columns = [c for c in columns if c not in meta.blooms]
+    if new_columns:
+        validate_bloom_columns(meta.schema, new_columns, meta.partition_keys)
+    parts = list(partitions)
+    rm = {str(x) for x in removed}
+    dtypes = {f.name: f.dataType for f in (meta.schema or [])}
+    for col in columns:
+        info = meta.blooms.get(col) or {
+            "key": None,
+            "n_bits": N_BITS_DEFAULT if n_bits is None else int(n_bits),
+            "k": K_DEFAULT if k is None else int(k),
             "hash": HASH_FAMILY,
         }
-    return out
-
-
-def _merge_committed_blooms(
-    spark: SparkSession,
-    store: Store,
-    meta: DatasetMetadata,
-    new_partitions: Sequence[Partition],
-    removed: set[str],
-) -> None:
-    """Refresh every bloom sidecar for a commit: rows for the new
-    partitions appended, removed labels dropped, one new sidecar key
-    per column (old keys become unreferenced → GC). When both the new
-    files AND the old sidecar sit under the driver byte budget the
-    whole refresh is driver-side pyarrow work (bit-identical hash twin,
-    zero Spark jobs) — the shape every streaming micro-batch commit
-    hits; anything bigger falls back to the distributed merge."""
-    if not meta.blooms:
-        return
-    from plateau_spark.plans.blooms import (
-        _driver_bloom_budget,
-        _key_bytes,
-        build_bloom_dataframe,
-        build_bloom_rows_driver,
-        persist_bloom_dataframe,
-        persist_bloom_rows,
-        read_bloom_rows,
-        remove_labels_from_bloom_df,
-    )
-
-    for col, info in list(meta.blooms.items()):
-        new_rows_py = build_bloom_rows_driver(
-            store, list(new_partitions), col,
-            n_bits=int(info["n_bits"]), k=int(info["k"]),
-        )
-        old_bytes = _key_bytes(store, info["key"])
-        if (
-            new_rows_py is not None
-            and old_bytes is not None
-            and old_bytes <= _driver_bloom_budget()
-        ):
-            try:
-                old_rows = read_bloom_rows(store, info["key"])
-            except OSError:
-                old_rows = None
-            if old_rows is not None:
-                if removed:
-                    rm = {str(x) for x in removed}
-                    old_rows = [r for r in old_rows if r[1] not in rm]
-                meta.blooms[col] = {
-                    **info,
-                    "key": persist_bloom_rows(
-                        old_rows + new_rows_py, store, meta.uuid, col
-                    ),
-                }
-                continue
-        old = spark.read.parquet(store.url(info["key"]))
-        if removed:
-            old = remove_labels_from_bloom_df(old, removed)
-        dtypes = {f.name: f.dataType for f in (meta.schema or [])}
-        new_rows = build_bloom_dataframe(
-            spark, store, list(new_partitions), col,
-            n_bits=int(info["n_bits"]), k=int(info["k"]),
-            dtype=dtypes.get(col),
-        )
-        merged = old.unionByName(new_rows)
-        meta.blooms[col] = {
-            **info,
-            "key": persist_bloom_dataframe(merged, store, meta.uuid, col),
-        }
+        old_key, col_bits, col_k = info["key"], int(info["n_bits"]), int(info["k"])
+        rows = build_bloom_rows_driver(store, parts, col, n_bits=col_bits, k=col_k)
+        if rows is not None and old_key is not None:
+            old_rows = None
+            if sidecar_fits_driver(store, old_key):
+                try:
+                    old_rows = read_bloom_rows(store, old_key)
+                except OSError:
+                    pass
+            rows = (
+                None
+                if old_rows is None
+                else [r for r in old_rows if r[1] not in rm] + rows
+            )
+        if rows is not None:
+            key = persist_bloom_rows(rows, store, meta.uuid, col)
+        else:
+            bloom_df = build_bloom_dataframe(
+                spark, store, parts, col, n_bits=col_bits, k=col_k,
+                dtype=dtypes.get(col),
+            )
+            if old_key is not None:
+                old = spark.read.parquet(store.url(old_key))
+                bloom_df = remove_labels_from_bloom_df(old, rm).unionByName(bloom_df)
+            key = persist_bloom_dataframe(bloom_df, store, meta.uuid, col)
+        meta.blooms[col] = {**info, "key": key}
 
 
 @normalize_args("partition_on", "secondary_indices", "sort_partitions_by", "bucket_by", "columns", "dispatch_by", "zone_map_columns", "bloom_filter_columns")
@@ -1104,15 +897,11 @@ def store_dataframe_as_dataset(
         schema=df.schema,
         metadata=metadata or {},
     )
-    ds.blooms = _build_blooms(
-        spark, store, df.schema, partition_on, dataset_uuid, partitions,
-        bloom_filter_columns, n_bits=bloom_n_bits, k=bloom_k,
+    _refresh_blooms(
+        spark, store, ds, partitions, bloom_filter_columns or [],
+        n_bits=bloom_n_bits, k=bloom_k,
     )
-    ds.indices.update(
-        _persist_indices_tiered(
-            spark, store, ds, partitions, list(secondary_indices or [])
-        )
-    )
+    _refresh_indices(spark, store, ds, partitions, secondary_indices or [])
     ds.commit(store)
     return ds
 
@@ -1217,11 +1006,7 @@ def store_dataframes_as_dataset__iter(
         schema=schema,
         metadata=metadata or {},
     )
-    ds.indices.update(
-        _persist_indices_tiered(
-            spark, store, ds, partitions, list(secondary_indices or [])
-        )
-    )
+    _refresh_indices(spark, store, ds, partitions, secondary_indices or [])
     ds.commit(store)
     return ds
 
@@ -1295,14 +1080,15 @@ def update_dataset_from_dataframes__iter(
     for p in new_partitions:
         meta.partitions[p.label] = p
 
-    _merge_committed_indices(spark, store, meta, new_partitions, removed)
-    new_idx_cols = [c for c in (secondary_indices or []) if c not in meta.indices]
-    if new_idx_cols:
-        meta.indices.update(
-            _persist_indices_tiered(
-                spark, store, meta, list(meta.partitions.values()), new_idx_cols
-            )
-        )
+    _refresh_indices(spark, store, meta, new_partitions, list(meta.indices), removed)
+    # reference-embedded indices (converted to sidecars: the commit file
+    # never writes them back inline) and newly declared index columns:
+    # builds over ALL live partitions, same commit
+    _refresh_indices(
+        spark, store, meta, list(meta.partitions.values()),
+        [*meta.embedded_indices]
+        + [c for c in secondary_indices or [] if c not in meta.indices],
+    )
     meta.explicit_partitions = True
     meta = _commit_update_with_merge(
         store, meta, new_partitions=new_partitions, removed=removed,
@@ -1920,28 +1706,22 @@ def update_dataset_from_dataframe(
     for p in new_partitions:
         meta.partitions[p.label] = p
 
-    _merge_committed_indices(spark, store, meta, new_partitions, removed)
-    _merge_committed_blooms(spark, store, meta, new_partitions, removed)
-    # newly-declared bloom columns: build over ALL partitions, same commit
-    new_bloom_cols = [
-        c for c in (bloom_filter_columns or []) if c not in meta.blooms
-    ]
-    if new_bloom_cols:
-        meta.blooms.update(
-            _build_blooms(
-                spark, store, meta.schema, meta.partition_keys, dataset_uuid,
-                list(meta.partitions.values()), new_bloom_cols,
-                n_bits=bloom_n_bits, k=bloom_k,
-            )
-        )
-    # newly-declared index columns: build over ALL partitions, same commit
-    new_idx_cols = [c for c in (secondary_indices or []) if c not in meta.indices]
-    if new_idx_cols:
-        meta.indices.update(
-            _persist_indices_tiered(
-                spark, store, meta, list(meta.partitions.values()), new_idx_cols
-            )
-        )
+    _refresh_indices(spark, store, meta, new_partitions, list(meta.indices), removed)
+    _refresh_blooms(spark, store, meta, new_partitions, list(meta.blooms), removed)
+    # newly declared Bloom and index columns, and reference-embedded
+    # indices (converted to sidecars: the commit file never writes them
+    # back inline): builds over ALL live partitions, same commit
+    live = list(meta.partitions.values())
+    _refresh_blooms(
+        spark, store, meta, live,
+        [c for c in bloom_filter_columns or [] if c not in meta.blooms],
+        n_bits=bloom_n_bits, k=bloom_k,
+    )
+    _refresh_indices(
+        spark, store, meta, live,
+        [*meta.embedded_indices]
+        + [c for c in secondary_indices or [] if c not in meta.indices],
+    )
     meta.explicit_partitions = True
     meta = _commit_update_with_merge(
         store, meta, new_partitions=new_partitions, removed=removed,
@@ -2135,7 +1915,13 @@ def commit_dataset(
     if new_partitions:
         meta.explicit_partitions = True
 
-    _merge_committed_indices(spark, store, meta, list(new_partitions or []), removed)
+    _refresh_indices(
+        spark, store, meta, list(new_partitions or []), list(meta.indices), removed
+    )
+    # reference-embedded indices become sidecars over all live partitions
+    _refresh_indices(
+        spark, store, meta, list(meta.partitions.values()), list(meta.embedded_indices)
+    )
     if _base is None:
         if metadata:
             meta.metadata = combine_metadata(meta.metadata, metadata)
@@ -2181,10 +1967,10 @@ def build_dataset_indices(
                 f"`{dataset_uuid}`. Please check for any typos and "
                 f"validate your dataset."
             )
-    parts = list(meta.partitions.values())
-    meta.indices.update(
-        _persist_indices_tiered(spark, store, meta, parts, list(columns))
-    )
+    # a rebuild starts from no sidecar: drop the current ones first
+    for col in columns:
+        meta.indices.pop(col, None)
+    _refresh_indices(spark, store, meta, list(meta.partitions.values()), columns)
     # an index built over a stale partition list must not be committed
     # over a concurrent append (the new files would be invisibly missing
     # from the index) — the merge helper raises on any concurrent commit
@@ -2408,8 +2194,12 @@ def _swap_commit(
         if p.label in meta.partitions:
             raise RuntimeError(f"Duplicate partition label in commit: {p.label}")
         meta.partitions[p.label] = p
-    _merge_committed_indices(spark, store, meta, new_partitions, removed)
-    _merge_committed_blooms(spark, store, meta, new_partitions, removed)
+    _refresh_indices(spark, store, meta, new_partitions, list(meta.indices), removed)
+    _refresh_blooms(spark, store, meta, new_partitions, list(meta.blooms), removed)
+    # reference-embedded indices become sidecars over all live partitions
+    _refresh_indices(
+        spark, store, meta, list(meta.partitions.values()), list(meta.embedded_indices)
+    )
     meta.explicit_partitions = True
     return _commit_update_with_merge(
         store, meta, new_partitions=new_partitions, removed=removed,
@@ -2973,15 +2763,11 @@ def repartition_dataset(
         generation=meta.generation,
     )
     indexed_cols = sorted(set(meta.indices) | set(meta.embedded_indices))
-    new_meta.indices.update(
-        _persist_indices_tiered(spark, store, new_meta, partitions, indexed_cols)
-    )
+    _refresh_indices(spark, store, new_meta, partitions, indexed_cols)
     for col, info in meta.blooms.items():
-        new_meta.blooms.update(
-            _build_blooms(
-                spark, store, meta.schema, partition_on, dataset_uuid,
-                partitions, [col], n_bits=info["n_bits"], k=info["k"],
-            )
+        _refresh_blooms(
+            spark, store, new_meta, partitions, [col],
+            n_bits=info["n_bits"], k=info["k"],
         )
     new_meta = _commit_update_with_merge(
         store, new_meta, new_partitions=partitions,

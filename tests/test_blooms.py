@@ -286,7 +286,20 @@ def test_driver_tier_budget_zero_falls_back_to_spark(
     """With the driver byte budget forced to 0 every build/merge takes
     the distributed tier — lookups must be unaffected (the two tiers
     are interchangeable)."""
-    monkeypatch.setenv("PLATEAU_SPARK_BLOOM_DRIVER_BYTES", "0")
+    import plateau_spark.plans.blooms as blooms_mod
+    import plateau_spark.plans.index as index_mod
+
+    # force the Spark tier through the one driver-tier gate, and prove
+    # the Spark-tier builder ran for the build and for the merge
+    monkeypatch.setattr(index_mod, "DRIVER_MAX_BYTES", 0)
+    spark_tier = []
+    real_build = blooms_mod.build_bloom_dataframe
+
+    def spy(*args, **kw):
+        spark_tier.append(args[3])
+        return real_build(*args, **kw)
+
+    monkeypatch.setattr(blooms_mod, "build_bloom_dataframe", spy)
     store = Store(str(tmp_path / "store"))
     df = spark.range(500).select(
         F.col("id").alias("event_id"), (F.col("id") % 3).alias("v")
@@ -306,3 +319,4 @@ def test_driver_tier_budget_zero_falls_back_to_spark(
     )
     assert [r["event_id"] for r in out.collect()] == [550]
     assert len(out.inputFiles()) == 1
+    assert spark_tier == ["event_id", "event_id"]

@@ -1137,11 +1137,11 @@ def test_build_indices_concurrent_append_raises_not_lost(spark, lstore, monkeypa
         spark, lstore, "bic",
         spark.createDataFrame([(i, i % 3) for i in range(9)], "k long, g long"),
     )
-    # patch the tier-independent choke point (the driver tier bypasses
-    # _build_index_dataframes for KB-scale builds, but every build goes
-    # through _persist_indices_tiered): the append fires mid-build, and
-    # the base-snapshot check at commit must still catch it
-    real_build = ds_mod._persist_indices_tiered
+    # patch the tier-independent choke point (every index build and
+    # merge, on either tier, goes through _refresh_indices): the append
+    # fires mid-build, and the base-snapshot check at commit must still
+    # catch it
+    real_build = ds_mod._refresh_indices
     fired = {"done": False}
 
     def interleaved_build(*args, **kw):
@@ -1153,7 +1153,7 @@ def test_build_indices_concurrent_append_raises_not_lost(spark, lstore, monkeypa
             )
         return real_build(*args, **kw)
 
-    monkeypatch.setattr(ds_mod, "_persist_indices_tiered", interleaved_build)
+    monkeypatch.setattr(ds_mod, "_refresh_indices", interleaved_build)
     with pytest.raises(ConcurrentCommitError):
         build_dataset_indices(spark, lstore, "bic", ["g"])
     monkeypatch.undo()

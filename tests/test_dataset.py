@@ -250,7 +250,7 @@ def test_many_file_staged_commit_pooled_renames(spark, store):
     assert sorted(r["v"] for r in out.collect()) == list(range(2000))
 
 
-def test_index_driver_tier_matches_spark_tier(spark, store):
+def test_index_driver_tier_matches_spark_tier(spark, store, monkeypatch):
     """KB-scale commits build/merge index sidecars driver-side (zero
     Spark jobs); the sidecar CONTENT must be identical to the Spark
     aggregation's — same values, same sorted label arrays — or pruning
@@ -277,23 +277,34 @@ def test_index_driver_tier_matches_spark_tier(spark, store):
     meta = DatasetMetadata.load(store, "ix")
     driver_idx = SecondaryIndex.load(store, meta.indices["tag"], "tag")
 
-    import os
-    os.environ["PLATEAU_SPARK_INDEX_DRIVER_BYTES"] = "0"
-    try:
-        store2 = Store(str(store.path("") ).rstrip("/") + "_spark")
-        store_dataframe_as_dataset(
-            spark, store2, "ix", df, partition_on=["grp"], secondary_indices=["tag"]
-        )
-        update_dataset_from_dataframe(
-            spark, store2, "ix",
-            spark.range(300, 400).select(
-                F.col("id").alias("k"), (F.col("id") % 5).alias("grp"),
-                F.concat(F.lit("t"), (F.col("id") % 11).cast("string")).alias("tag"),
-            ),
-            partition_on=["grp"],
-        )
-    finally:
-        del os.environ["PLATEAU_SPARK_INDEX_DRIVER_BYTES"]
+    import plateau_spark.plans.index as index_mod
+    import plateau_spark.sources.dataset as ds_mod
+
+    # force the Spark tier through the one driver-tier gate, and prove
+    # the Spark-tier writer ran for the build and for the merge
+    monkeypatch.setattr(index_mod, "DRIVER_MAX_BYTES", 0)
+    spark_tier = []
+    real_persist = ds_mod.persist_index_dataframe
+
+    def spy(*args, **kw):
+        spark_tier.append(args[3])
+        return real_persist(*args, **kw)
+
+    monkeypatch.setattr(ds_mod, "persist_index_dataframe", spy)
+    store2 = Store(str(store.path("") ).rstrip("/") + "_spark")
+    store_dataframe_as_dataset(
+        spark, store2, "ix", df, partition_on=["grp"], secondary_indices=["tag"]
+    )
+    update_dataset_from_dataframe(
+        spark, store2, "ix",
+        spark.range(300, 400).select(
+            F.col("id").alias("k"), (F.col("id") % 5).alias("grp"),
+            F.concat(F.lit("t"), (F.col("id") % 11).cast("string")).alias("tag"),
+        ),
+        partition_on=["grp"],
+    )
+    monkeypatch.undo()
+    assert spark_tier == ["tag", "tag"]
     meta2 = DatasetMetadata.load(store2, "ix")
     spark_idx = SecondaryIndex.load(store2, meta2.indices["tag"], "tag")
     # label SETS must agree per value (labels embed partition uuids, so

@@ -243,7 +243,7 @@ def test_embedding_dup_pairs_hot_bucket_join_fallback(spark, monkeypatch):
         ).collect()
     }
     # cap of 3 forces every bucket through the fallback join
-    monkeypatch.setenv("PLATEAU_SPARK_BUCKET_GEMM_CAP_ROWS", "3")
+    monkeypatch.setattr(dd, "_BUCKET_GEMM_CAP_ROWS", 3)
     routed = {
         (p.id_a, p.id_b)
         for p in embedding_cosine_dup_pairs(
