@@ -660,7 +660,8 @@ def consolidate_statistics(spark, store, stats_uuid: str):
     from plateau_spark.core.metadata import DatasetMetadata
     from plateau_spark.sources.dataset import (
         _commit_base_snapshot,
-        _commit_update_with_merge,
+        _commit_files,
+        _drop_sidecar_keys,
         _ensure_store,
         _write_files,
         read_table,
@@ -690,18 +691,10 @@ def consolidate_statistics(spark, store, stats_uuid: str):
         )
     base = _commit_base_snapshot(meta_obj)
     partitions = _write_files(merged, st, stats_uuid, [])
-    new_meta = DatasetMetadata(
-        uuid=stats_uuid,
-        partitions={p.label: p for p in partitions},
-        partition_keys=[],
-        schema=meta_obj.schema,
-        metadata=dict(meta),
-        generation=meta_obj.generation,
-    )
-    return _commit_update_with_merge(
-        st, new_meta, new_partitions=partitions,
-        removed=sorted(meta_obj.partitions), extra_metadata=None, **base,
-    )
+    removed = sorted(meta_obj.partitions)
+    meta_obj.partition_keys = []
+    _drop_sidecar_keys(meta_obj)
+    return _commit_files(spark, st, meta_obj, base, partitions, removed=removed)
 
 
 def population_stability(

@@ -82,27 +82,21 @@ def _conjunction_allowed_labels(
     return out
 
 
-def plan_scan(
-    metadata: DatasetMetadata,
-    store: Store,
-    predicates: Predicates | None = None,
-    *,
-    index_loader=None,
-) -> list[Partition]:
-    """Prune the partition list; returns surviving partitions sorted by label.
+def _tier_filters(
+    metadata: DatasetMetadata, store: Store, predicates: Predicates, index_loader
+):
+    """Tier setup shared by :func:`plan_scan` and :func:`explain_scan`:
+    yields ``(conjunction, index_allowed, bloom_allowed)`` per predicate
+    conjunction, each label set None when that tier does not constrain
+    it. Partition keys and zone maps are checked per file by the
+    callers.
 
-    ``index_loader(column, literals)`` overrides how secondary indexes
-    are fetched — a DatasetFactory passes its cached loader here so
-    repeated plans don't re-GET index files."""
-    check_predicates(predicates)
-    parts = metadata.partitions
-    if predicates is None:
-        return [parts[label] for label in sorted(parts)]
-
-    # Load only the indexes that can constrain this query, restricted to
-    # the query's own literal values (pyarrow row-group filters) — a
-    # point lookup on a high-cardinality index never materializes the
-    # whole index on the driver.
+    Only the indexes that can constrain this query are loaded,
+    restricted to the query's own literal values (pyarrow row-group
+    filters) — a point lookup on a high-cardinality index never
+    materializes the whole index on the driver. ``index_loader(column,
+    literals)`` overrides how they are fetched (a DatasetFactory passes
+    its cached loader so repeated plans don't re-GET index files)."""
     pred_cols = columns_in_predicates(predicates)
     needed = [
         c for c in pred_cols if metadata.has_index(c) and c not in metadata.partition_keys
@@ -119,22 +113,38 @@ def plan_scan(
     # then never consulted (_conjunction_allowed_labels re-checks
     # constrainability per literal). Skip the load outright.
     indexes = {c: index_loader(c, literals[c]) for c in needed if literals[c]}
-
     bloom = None
-    if metadata.blooms and any(
-        c in metadata.blooms for c in pred_cols
-    ):
+    if metadata.blooms and any(c in metadata.blooms for c in pred_cols):
         from plateau_spark.plans.blooms import BloomConsult
 
         bloom = BloomConsult(store, metadata.blooms)
+    all_labels = list(metadata.partitions)
+    for conjunction in predicates:
+        yield (
+            conjunction,
+            _conjunction_allowed_labels(conjunction, indexes),
+            bloom.allowed_labels(conjunction, all_labels) if bloom else None,
+        )
+
+
+def plan_scan(
+    metadata: DatasetMetadata,
+    store: Store,
+    predicates: Predicates | None = None,
+    *,
+    index_loader=None,
+) -> list[Partition]:
+    """Prune the partition list; returns surviving partitions sorted by
+    label. ``index_loader``: see ``_tier_filters``."""
+    check_predicates(predicates)
+    parts = metadata.partitions
+    if predicates is None:
+        return [parts[label] for label in sorted(parts)]
 
     surviving: set[str] = set()
-    all_labels = list(parts)
-    for conjunction in predicates:
-        allowed = _conjunction_allowed_labels(conjunction, indexes)
-        bloom_allowed = (
-            bloom.allowed_labels(conjunction, all_labels) if bloom else None
-        )
+    for conjunction, allowed, bloom_allowed in _tier_filters(
+        metadata, store, predicates, index_loader
+    ):
         for label, part in parts.items():
             if label in surviving:
                 continue
@@ -176,36 +186,11 @@ def explain_scan(
             {"label": lbl, "file": parts[lbl].file, "scanned": True, "pruned_by": []}
             for lbl in sorted(parts)
         ]
-    pred_cols = columns_in_predicates(predicates)
-    needed = [
-        c for c in pred_cols if metadata.has_index(c) and c not in metadata.partition_keys
-    ]
-    literals: dict[str, list[tuple[str, object]]] = {c: [] for c in needed}
-    for conjunction in predicates:
-        for col, op, val in conjunction:
-            if col in literals and _literal_index_constrainable(op, val):
-                literals[col].append((op, val))
-    if index_loader is None:
-        index_loader = lambda c, lits: metadata.secondary_index(store, c, literals=lits)  # noqa: E731
-    # a column whose every literal is non-constrainable (IS NULL forms)
-    # would be loaded UNFILTERED — the full index on the driver — and
-    # then never consulted (_conjunction_allowed_labels re-checks
-    # constrainability per literal). Skip the load outright.
-    indexes = {c: index_loader(c, literals[c]) for c in needed if literals[c]}
-    bloom = None
-    if metadata.blooms and any(c in metadata.blooms for c in pred_cols):
-        from plateau_spark.plans.blooms import BloomConsult
-
-        bloom = BloomConsult(store, metadata.blooms)
-
-    all_labels = list(parts)
     report: dict[str, set] = {lbl: set() for lbl in parts}
     scanned: set[str] = set()
-    for conjunction in predicates:
-        allowed = _conjunction_allowed_labels(conjunction, indexes)
-        bloom_allowed = (
-            bloom.allowed_labels(conjunction, all_labels) if bloom else None
-        )
+    for conjunction, allowed, bloom_allowed in _tier_filters(
+        metadata, store, predicates, index_loader
+    ):
         for label, part in parts.items():
             blockers = set()
             if allowed is not None and label not in allowed:

@@ -13,6 +13,7 @@ plateau/io_components/write.py:148-233):
   1. executors write parquet files under ``<uuid>/table/`` (hive dirs)
   2. driver enumerates the new files, builds partitions + indexes
   3. driver puts the metadata JSON — readers never see step 1-2 state.
+Steps 2-3 are one function, ``_commit_files``, for every mutating API.
 
 Update semantics (plateau/io_components/update.py:1-54): adding new
 partitions and deleting existing partitions (via ``delete_scope``);
@@ -409,9 +410,11 @@ def _write_files(
     ``raise_error`` filter (``_constraint_guard``) — a violation aborts
     the job, the staging prefix is deleted, and
     :class:`ConstraintViolationError` is raised before any commit.
-    EVERY dataset write path routes through here, so passing the loaded
-    ``meta.metadata["constraints"]`` gives each path enforcement with
-    zero extra jobs.
+    Every write path of this module routes through here, so passing the
+    loaded ``meta.metadata["constraints"]`` gives each path enforcement
+    with zero extra jobs. The DataSource writers (sources/datasource.py)
+    do not: their tasks stage files themselves and enforce the
+    constraints per Arrow batch.
 
     Shuffle strategy (shuffle_store_dask_partitions,
     plateau/io/dask/_shuffle.py:41-153, re-expressed):
@@ -684,28 +687,6 @@ def _index_dict_driver(
     return dct, value_type
 
 
-def _attach_zone_maps(
-    spark: SparkSession,
-    store: Store,
-    schema,
-    partitions: Sequence[Partition],
-    columns: Sequence[str] | None,
-) -> None:
-    """Harvest footer stats for the given columns onto the new
-    partitions (in place). No-op for empty columns/partitions."""
-    if not columns or not partitions:
-        return
-    from plateau_spark.plans.zonemaps import (
-        collect_partition_stats,
-        validate_zone_map_columns,
-    )
-
-    cols = validate_zone_map_columns(schema, columns)
-    stats = collect_partition_stats(spark, store, partitions, cols)
-    for p in partitions:
-        p.stats = stats.get(p.label, {})
-
-
 def _refresh_blooms(
     spark: SparkSession,
     store: Store,
@@ -721,9 +702,10 @@ def _refresh_blooms(
     ``meta.blooms``: the (word, label, bits) rows of ``partitions`` plus
     the column's current sidecar rows minus the ``removed`` labels,
     under a new key (the old key becomes garbage for GC). A column with
-    no sidecar yet is a build over ``partitions``, validated against the
-    schema, with ``n_bits``/``k`` (the defaults when None); an existing
-    sidecar keeps its own parameters (plans/blooms.py).
+    no sidecar yet (validated by the caller) is a build over
+    ``partitions`` with ``n_bits``/``k`` (the defaults when None); an
+    existing sidecar, or an entry whose key was dropped
+    (``_drop_sidecar_keys``), keeps its own parameters (plans/blooms.py).
 
     Per column the driver tier (pyarrow read + the bit-identical Python
     hash twin, zero Spark jobs) runs when the new files fit the gate of
@@ -741,13 +723,9 @@ def _refresh_blooms(
         persist_bloom_rows,
         read_bloom_rows,
         remove_labels_from_bloom_df,
-        validate_bloom_columns,
     )
 
     columns = list(dict.fromkeys(columns))
-    new_columns = [c for c in columns if c not in meta.blooms]
-    if new_columns:
-        validate_bloom_columns(meta.schema, new_columns, meta.partition_keys)
     parts = list(partitions)
     rm = {str(x) for x in removed}
     dtypes = {f.name: f.dataType for f in (meta.schema or [])}
@@ -784,6 +762,157 @@ def _refresh_blooms(
                 bloom_df = remove_labels_from_bloom_df(old, rm).unionByName(bloom_df)
             key = persist_bloom_dataframe(bloom_df, store, meta.uuid, col)
         meta.blooms[col] = {**info, "key": key}
+
+
+def _drop_sidecar_keys(meta: DatasetMetadata) -> None:
+    """Forget every sidecar's key, keeping each Bloom column's ``n_bits``
+    and ``k``, so the next ``_commit_files`` builds each sidecar over its
+    new files — for rewrites that replace every partition."""
+    meta.indices = dict.fromkeys(meta.indices)
+    meta.blooms = {c: {**info, "key": None} for c, info in meta.blooms.items()}
+
+
+def _validate_declared_columns(
+    schema,
+    partition_keys: Sequence[str],
+    dataset_uuid: str,
+    *,
+    index_columns: Sequence[str] | None = None,
+    bloom_columns: Sequence[str] | None = None,
+    zone_map_columns: Sequence[str] | None = None,
+) -> None:
+    """Reject declared index, Bloom and zone-map columns the schema
+    cannot serve BEFORE any write job, so a bad call stages nothing. A
+    missing index column raises the reference's error shape
+    (plateau/io_components/metapartition.py:1025) instead of a Spark
+    AnalysisException from inside the build job."""
+    from plateau_spark.plans.blooms import validate_bloom_columns
+    from plateau_spark.plans.zonemaps import validate_zone_map_columns
+
+    known = {f.name for f in (schema or [])} | set(partition_keys)
+    for col in index_columns or ():
+        if known and col not in known:
+            raise RuntimeError(
+                f"Column `{col}` could not be found in the dataset "
+                f"`{dataset_uuid}`. Please check for any typos and "
+                f"validate your dataset."
+            )
+    if bloom_columns:
+        validate_bloom_columns(schema, bloom_columns, partition_keys)
+    if zone_map_columns:
+        validate_zone_map_columns(schema, zone_map_columns)
+
+
+def _commit_files(
+    spark: SparkSession,
+    store: Store,
+    meta: DatasetMetadata,
+    base: dict | None,
+    new_partitions: Sequence[Partition],
+    *,
+    removed: Sequence[str] = (),
+    index_columns: Sequence[str] | None = (),
+    bloom_columns: Sequence[str] | None = (),
+    bloom_n_bits: int | None = None,
+    bloom_k: int | None = None,
+    zone_map_columns: Sequence[str] | None = (),
+    metadata=None,
+    override_metadata=None,
+) -> DatasetMetadata:
+    """The one commit step of every mutating API — the reference's
+    update_dataset_from_partitions (plateau/io_components/update.py:20-54)
+    and store_dataset_from_partitions (write.py:103-134). In order:
+
+    1. swap: drop the ``removed`` labels, add ``new_partitions``;
+    2. harvest zone maps onto the new files for ``zone_map_columns``
+       plus every column a partition live before the change tracks
+       (within the schema): a commit never leaves new files unprunable
+       where old files prune;
+    3. refresh every existing index and Bloom sidecar: the new files'
+       entries in, the removed labels' out (nothing to do when the
+       commit adds and removes no file);
+    4. build newly declared ``index_columns`` / ``bloom_columns`` and
+       reference-embedded indices (never written back inline) over all
+       live partitions;
+    5. resolve ``metadata`` / ``override_metadata`` callables — after
+       the write job, so write-time Observation values land in this
+       commit — and commit: one put when ``base`` is None (creation),
+       else ``_commit_update_with_merge`` against the ``base`` snapshot
+       (a commit that removes labels raises ConcurrentCommitError on a
+       concurrent commit instead of silently dropping it).
+    """
+    from plateau_spark.plans.zonemaps import collect_partition_stats
+
+    new_partitions = list(new_partitions)
+    tracked = {c for p in meta.partitions.values() for c in p.stats}
+    for label in removed:
+        del meta.partitions[label]
+    for p in new_partitions:
+        if p.label in meta.partitions:
+            raise RuntimeError(f"Duplicate partition label in commit: {p.label}")
+        meta.partitions[p.label] = p
+
+    names = {f.name for f in (meta.schema or [])}
+    zm_cols = sorted(c for c in {*(zone_map_columns or ()), *tracked} if c in names)
+    if zm_cols and new_partitions:
+        stats = collect_partition_stats(spark, store, new_partitions, zm_cols)
+        for p in new_partitions:
+            p.stats = stats.get(p.label, {})
+
+    if new_partitions or removed:
+        meta.explicit_partitions = True
+        _refresh_indices(spark, store, meta, new_partitions, list(meta.indices), removed)
+        _refresh_blooms(spark, store, meta, new_partitions, list(meta.blooms), removed)
+    live = list(meta.partitions.values())
+    _refresh_blooms(
+        spark, store, meta, live,
+        [c for c in bloom_columns or () if c not in meta.blooms],
+        n_bits=bloom_n_bits, k=bloom_k,
+    )
+    _refresh_indices(
+        spark, store, meta, live,
+        [*meta.embedded_indices]
+        + [c for c in index_columns or () if c not in meta.indices],
+    )
+
+    metadata = _resolve_metadata(metadata)
+    override_metadata = _resolve_metadata(override_metadata)
+    if base is None:
+        meta.metadata.update(metadata or {})
+        _deep_override(meta.metadata, override_metadata or {})
+        meta.commit(store)
+        return meta
+    return _commit_update_with_merge(
+        store, meta, new_partitions=new_partitions, removed=removed,
+        extra_metadata=metadata, override_metadata=override_metadata, **base,
+    )
+
+
+def _create_preamble(
+    store: Store | str,
+    dataset_uuid: str | None,
+    metadata_version: int,
+    partition_on: Sequence[str] | None,
+    secondary_indices: Sequence[str] | None,
+    overwrite: bool,
+) -> tuple[Store, str, bool]:
+    """Checks shared by the store paths: metadata version, dataset uuid
+    (generated when None), index/key overlap, and the overwrite rule.
+    Returns ``(store, dataset_uuid, exists)``; an existing dataset raises
+    unless ``overwrite=True``, and the caller deletes it only once the
+    new data has passed its checks, just before the first write job."""
+    naming.verify_metadata_version(metadata_version)
+    if dataset_uuid is None:
+        dataset_uuid = naming.gen_uuid()
+    naming.validate_dataset_uuid(dataset_uuid)
+    raise_if_indices_overlap(partition_on, secondary_indices)
+    store = _ensure_store(store)
+    exists = DatasetMetadata.exists(store, dataset_uuid)
+    if exists and not overwrite:
+        raise RuntimeError(
+            f"Dataset `{dataset_uuid}` already exists and overwrite is not permitted"
+        )
+    return store, dataset_uuid, exists
 
 
 @normalize_args("partition_on", "secondary_indices", "sort_partitions_by", "bucket_by", "columns", "dispatch_by", "zone_map_columns", "bloom_filter_columns")
@@ -851,22 +980,17 @@ def store_dataframe_as_dataset(
     (/root/reference/plateau/io/eager.py:449-491) + write_partition
     (plateau/io_components/write.py:38-79).
     """
-    naming.verify_metadata_version(metadata_version)
-    if dataset_uuid is None:
-        dataset_uuid = naming.gen_uuid()
-    naming.validate_dataset_uuid(dataset_uuid)
-    raise_if_indices_overlap(partition_on, secondary_indices)
-    store = _ensure_store(store)
-    if DatasetMetadata.exists(store, dataset_uuid):
-        if not overwrite:
-            raise RuntimeError(
-                f"Dataset `{dataset_uuid}` already exists and overwrite is not permitted"
-            )
-        delete_dataset(store, dataset_uuid)
-
+    store, dataset_uuid, exists = _create_preamble(
+        store, dataset_uuid, metadata_version, partition_on, secondary_indices, overwrite
+    )
     partition_on = list(partition_on or [])
     df = normalize_dataframe(df, partition_on)
-
+    _validate_declared_columns(
+        df.schema, partition_on, dataset_uuid, index_columns=secondary_indices,
+        bloom_columns=bloom_filter_columns, zone_map_columns=zone_map_columns,
+    )
+    if exists:
+        delete_dataset(store, dataset_uuid)
     partitions = _write_files(
         df,
         store,
@@ -880,30 +1004,18 @@ def store_dataframe_as_dataset(
         repartition=repartition,
         constraints=check_constraints,
     )
-    _attach_zone_maps(spark, store, df.schema, partitions, zone_map_columns)
-
-    # a callable defers metadata to AFTER the write job — so values a
+    meta = DatasetMetadata(uuid=dataset_uuid, partition_keys=partition_on, schema=df.schema)
+    # a callable ``metadata`` resolves AFTER the write job — so values a
     # Dataset Observation collected DURING the write (e.g. the BM25
-    # index's token totals) can land in the same atomic commit without
-    # a second data pass
-    metadata = _resolve_metadata(metadata)
-    if check_constraints:
-        metadata = dict(metadata or {})
-        metadata["constraints"] = dict(check_constraints)
-    ds = DatasetMetadata(
-        uuid=dataset_uuid,
-        partitions={p.label: p for p in partitions},
-        partition_keys=partition_on,
-        schema=df.schema,
-        metadata=metadata or {},
+    # index's token totals) land in the same atomic commit without a
+    # second data pass
+    return _commit_files(
+        spark, store, meta, None, partitions,
+        index_columns=secondary_indices, bloom_columns=bloom_filter_columns,
+        bloom_n_bits=bloom_n_bits, bloom_k=bloom_k,
+        zone_map_columns=zone_map_columns, metadata=metadata,
+        override_metadata=check_constraints and {"constraints": dict(check_constraints)},
     )
-    _refresh_blooms(
-        spark, store, ds, partitions, bloom_filter_columns or [],
-        n_bits=bloom_n_bits, k=bloom_k,
-    )
-    _refresh_indices(spark, store, ds, partitions, secondary_indices or [])
-    ds.commit(store)
-    return ds
 
 
 @normalize_args("partition_on", "secondary_indices", "sort_partitions_by", "bucket_by", "columns", "dispatch_by")
@@ -959,29 +1071,21 @@ def store_dataframes_as_dataset__iter(
     Reference: store_dataframes_as_dataset__iter
     (/root/reference/plateau/io/iter.py:166-245).
     """
-    naming.verify_metadata_version(metadata_version)
-    if dataset_uuid is None:
-        dataset_uuid = naming.gen_uuid()
-    naming.validate_dataset_uuid(dataset_uuid)
-    raise_if_indices_overlap(partition_on, secondary_indices)
-    store = _ensure_store(store)
-    if DatasetMetadata.exists(store, dataset_uuid):
-        if not overwrite:
-            raise RuntimeError(
-                f"Dataset `{dataset_uuid}` already exists and overwrite is not permitted"
-            )
-        delete_dataset(store, dataset_uuid)
-
+    store, dataset_uuid, exists = _create_preamble(
+        store, dataset_uuid, metadata_version, partition_on, secondary_indices, overwrite
+    )
     partition_on = list(partition_on or [])
-    if check_constraints:
-        metadata = dict(metadata or {})
-        metadata["constraints"] = dict(check_constraints)
     partitions: list[Partition] = []
     schema = None
     for df in df_generator:
         df = normalize_dataframe(df, partition_on)
         if schema is None:
             schema = df.schema
+            _validate_declared_columns(
+                schema, partition_on, dataset_uuid, index_columns=secondary_indices
+            )
+            if exists:
+                delete_dataset(store, dataset_uuid)
         else:
             validate_compatible(schema, df.schema)
         partitions.extend(
@@ -998,17 +1102,12 @@ def store_dataframes_as_dataset__iter(
         )
     if schema is None:
         raise ValueError("Cannot store a dataset from an empty generator")
-
-    ds = DatasetMetadata(
-        uuid=dataset_uuid,
-        partitions={p.label: p for p in partitions},
-        partition_keys=partition_on,
-        schema=schema,
-        metadata=metadata or {},
+    meta = DatasetMetadata(uuid=dataset_uuid, partition_keys=partition_on, schema=schema)
+    return _commit_files(
+        spark, store, meta, None, partitions, index_columns=secondary_indices,
+        metadata=metadata,
+        override_metadata=check_constraints and {"constraints": dict(check_constraints)},
     )
-    _refresh_indices(spark, store, ds, partitions, secondary_indices or [])
-    ds.commit(store)
-    return ds
 
 
 @normalize_args("partition_on", "secondary_indices", "sort_partitions_by", "bucket_by", "columns", "dispatch_by")
@@ -1052,7 +1151,9 @@ def update_dataset_from_dataframes__iter(
     meta = DatasetMetadata.load(store, dataset_uuid)
     validate_partition_keys(meta.partition_keys, partition_on)
     _base = _commit_base_snapshot(meta)
-
+    _validate_declared_columns(
+        meta.schema, meta.partition_keys, dataset_uuid, index_columns=secondary_indices
+    )
     new_partitions: list[Partition] = []
     for df in df_generator:
         df = normalize_dataframe(df, meta.partition_keys)
@@ -1072,27 +1173,9 @@ def update_dataset_from_dataframes__iter(
         )
 
     removed = _resolve_delete_scope(meta, store, delete_scope)
-    for label in removed:
-        del meta.partitions[label]
-    dupes = [p.label for p in new_partitions if p.label in meta.partitions]
-    if dupes:
-        raise RuntimeError(f"Duplicate partition labels in commit: {dupes}")
-    for p in new_partitions:
-        meta.partitions[p.label] = p
-
-    _refresh_indices(spark, store, meta, new_partitions, list(meta.indices), removed)
-    # reference-embedded indices (converted to sidecars: the commit file
-    # never writes them back inline) and newly declared index columns:
-    # builds over ALL live partitions, same commit
-    _refresh_indices(
-        spark, store, meta, list(meta.partitions.values()),
-        [*meta.embedded_indices]
-        + [c for c in secondary_indices or [] if c not in meta.indices],
-    )
-    meta.explicit_partitions = True
-    meta = _commit_update_with_merge(
-        store, meta, new_partitions=new_partitions, removed=removed,
-        extra_metadata=metadata, **_base,
+    meta = _commit_files(
+        spark, store, meta, _base, new_partitions, removed=removed,
+        index_columns=secondary_indices, metadata=metadata,
     )
     _invalidate_if_factory(_store_arg)
     return meta
@@ -1662,7 +1745,6 @@ def update_dataset_from_dataframe(
     validate_partition_keys(meta.partition_keys, partition_on)
     _base = _commit_base_snapshot(meta)
 
-    new_partitions: list[Partition] = []
     if df is not None:
         df = normalize_dataframe(df, meta.partition_keys)
         if schema_evolution:
@@ -1674,62 +1756,31 @@ def update_dataset_from_dataframe(
             meta.schema = merge_schemas_for_evolution(meta.schema, df.schema)
         else:
             validate_compatible(meta.schema, df.schema)
-        new_partitions = _write_files(
-            df,
-            store,
-            dataset_uuid,
-            meta.partition_keys,
-            sort_partitions_by=sort_partitions_by,
-            num_buckets=num_buckets,
-            bucket_by=bucket_by,
-            file_format=file_format,
-            compress=compress,
-            # CHECK constraints declared at store time gate every append
-            constraints=meta.metadata.get("constraints"),
-        )
-        # zone maps: requested columns ∪ columns existing partitions
-        # already track (an update must not silently leave new files
-        # unprunable where old files prune)
-        carried = {c for p in meta.partitions.values() for c in p.stats}
-        zm_cols = sorted(set(zone_map_columns or []) | carried)
-        zm_cols = [c for c in zm_cols if c in {f.name for f in df.schema.fields}]
-        _attach_zone_maps(spark, store, df.schema, new_partitions, zm_cols)
-
+    _validate_declared_columns(
+        meta.schema, meta.partition_keys, dataset_uuid,
+        index_columns=secondary_indices, bloom_columns=bloom_filter_columns,
+        zone_map_columns=zone_map_columns,
+    )
+    new_partitions = [] if df is None else _write_files(
+        df,
+        store,
+        dataset_uuid,
+        meta.partition_keys,
+        sort_partitions_by=sort_partitions_by,
+        num_buckets=num_buckets,
+        bucket_by=bucket_by,
+        file_format=file_format,
+        compress=compress,
+        # CHECK constraints declared at store time gate every append
+        constraints=meta.metadata.get("constraints"),
+    )
     removed = _resolve_delete_scope(meta, store, delete_scope)
-
-    # commit: drop removed, add new, refresh indexes, single put
-    for label in removed:
-        del meta.partitions[label]
-    dupes = [p.label for p in new_partitions if p.label in meta.partitions]
-    if dupes:
-        raise RuntimeError(f"Duplicate partition labels in commit: {dupes}")
-    for p in new_partitions:
-        meta.partitions[p.label] = p
-
-    _refresh_indices(spark, store, meta, new_partitions, list(meta.indices), removed)
-    _refresh_blooms(spark, store, meta, new_partitions, list(meta.blooms), removed)
-    # newly declared Bloom and index columns, and reference-embedded
-    # indices (converted to sidecars: the commit file never writes them
-    # back inline): builds over ALL live partitions, same commit
-    live = list(meta.partitions.values())
-    _refresh_blooms(
-        spark, store, meta, live,
-        [c for c in bloom_filter_columns or [] if c not in meta.blooms],
-        n_bits=bloom_n_bits, k=bloom_k,
-    )
-    _refresh_indices(
-        spark, store, meta, live,
-        [*meta.embedded_indices]
-        + [c for c in secondary_indices or [] if c not in meta.indices],
-    )
-    meta.explicit_partitions = True
-    meta = _commit_update_with_merge(
-        store, meta, new_partitions=new_partitions, removed=removed,
-        # callables resolve here, AFTER the write job, so metadata can
-        # carry write-time Observation values (e.g. BM25 token totals)
-        extra_metadata=_resolve_metadata(metadata),
-        override_metadata=_resolve_metadata(override_metadata),
-        **_base,
+    meta = _commit_files(
+        spark, store, meta, _base, new_partitions, removed=removed,
+        index_columns=secondary_indices, bloom_columns=bloom_filter_columns,
+        bloom_n_bits=bloom_n_bits, bloom_k=bloom_k,
+        zone_map_columns=zone_map_columns,
+        metadata=metadata, override_metadata=override_metadata,
     )
     _invalidate_if_factory(_store_arg)
     return meta
@@ -1903,36 +1954,15 @@ def commit_dataset(
     # refuse drifted staged files BEFORE any mutation (reference parity:
     # io_components/write.py:103-134) — on failure the staged files stay
     # invisible and GC-reclaimable, and the commit file is untouched
-    _validate_staged_schemas(store, meta, list(new_partitions or []))
-
+    new_partitions = list(new_partitions or [])
+    _validate_staged_schemas(store, meta, new_partitions)
     removed = _resolve_delete_scope(meta, store, delete_scope)
-    for label in removed:
-        del meta.partitions[label]
-    for p in new_partitions or []:
-        if p.label in meta.partitions:
-            raise RuntimeError(f"Duplicate partition label in commit: {p.label}")
-        meta.partitions[p.label] = p
-    if new_partitions:
-        meta.explicit_partitions = True
-
-    _refresh_indices(
-        spark, store, meta, list(new_partitions or []), list(meta.indices), removed
+    # the two-phase API exists FOR concurrent writers: an existing
+    # dataset commits through the merge path (append-only races merge,
+    # anything else fails loudly)
+    meta = _commit_files(
+        spark, store, meta, _base, new_partitions, removed=removed, metadata=metadata
     )
-    # reference-embedded indices become sidecars over all live partitions
-    _refresh_indices(
-        spark, store, meta, list(meta.partitions.values()), list(meta.embedded_indices)
-    )
-    if _base is None:
-        if metadata:
-            meta.metadata = combine_metadata(meta.metadata, metadata)
-        meta.commit(store)
-    else:
-        # the two-phase API exists FOR concurrent writers — merge
-        # append-only races, fail loudly otherwise
-        meta = _commit_update_with_merge(
-            store, meta, new_partitions=list(new_partitions or []),
-            removed=removed, extra_metadata=metadata, **_base,
-        )
     _invalidate_if_factory(_store_arg)
     return meta
 
@@ -1959,26 +1989,17 @@ def build_dataset_indices(
     store = _ensure_store(store)
     meta = DatasetMetadata.load(store, dataset_uuid)
     _base = _commit_base_snapshot(meta)
-    known = {f.name for f in (meta.schema or [])} | set(meta.partition_keys)
-    for col in columns:
-        if known and col not in known:
-            raise RuntimeError(
-                f"Column `{col}` could not be found in the dataset "
-                f"`{dataset_uuid}`. Please check for any typos and "
-                f"validate your dataset."
-            )
-    # a rebuild starts from no sidecar: drop the current ones first
+    _validate_declared_columns(
+        meta.schema, meta.partition_keys, dataset_uuid, index_columns=columns
+    )
+    # a rebuild starts from no sidecar: drop the current ones first. An
+    # index built over a stale partition list must not be committed over
+    # a concurrent append (the new files would be invisibly missing from
+    # it) — the merge path raises on any concurrent commit here because
+    # our indices diverged from the base snapshot
     for col in columns:
         meta.indices.pop(col, None)
-    _refresh_indices(spark, store, meta, list(meta.partitions.values()), columns)
-    # an index built over a stale partition list must not be committed
-    # over a concurrent append (the new files would be invisibly missing
-    # from the index) — the merge helper raises on any concurrent commit
-    # here because our indices diverged from the base snapshot
-    meta = _commit_update_with_merge(
-        store, meta, new_partitions=[], removed=[], extra_metadata=None, **_base,
-    )
-    return meta
+    return _commit_files(spark, store, meta, _base, [], index_columns=columns)
 
 
 def read_dataset_as_dataframes(
@@ -2067,8 +2088,12 @@ def delete_rows_from_dataset(
 
     df = _read_committed_files(spark, store, dataset_uuid, meta.schema, candidates)
     keep = df.where(~F.coalesce(dnf_to_column(predicates), F.lit(False)))
-    meta = _cow_swap_commit(
-        spark, store, meta, keep, candidates, compress=compress, base=_base
+    new_partitions = _write_files(
+        keep, store, dataset_uuid, meta.partition_keys, compress=compress
+    )
+    meta = _commit_files(
+        spark, store, meta, _base, new_partitions,
+        removed=[p.label for p in candidates],
     )
     _invalidate_if_factory(_store_arg)
     return meta
@@ -2139,72 +2164,15 @@ def merge_upsert_into_dataset(
         )
         keep = existing.join(updates.select(*key_columns), key_columns, "left_anti")
     merged = updates if keep is None else keep.unionByName(updates)
-    meta = _cow_swap_commit(
-        spark, store, meta, merged, candidates, compress=compress, base=_base
+    new_partitions = _write_files(
+        merged, store, dataset_uuid, meta.partition_keys, compress=compress
+    )
+    meta = _commit_files(
+        spark, store, meta, _base, new_partitions,
+        removed=[p.label for p in candidates],
     )
     _invalidate_if_factory(_store_arg)
     return meta
-
-
-def _cow_swap_commit(
-    spark: SparkSession,
-    store: Store,
-    meta: DatasetMetadata,
-    merged: DataFrame,
-    candidates,
-    *,
-    compress: bool,
-    base: dict,
-) -> DatasetMetadata:
-    """Shared copy-on-write tail of row deletes and MERGE-shaped
-    mutations: stage the rewritten candidate rows, carry zone maps, swap
-    the candidate labels for the new ones in ONE optimistic commit."""
-    new_partitions = _write_files(
-        merged, store, meta.uuid, meta.partition_keys, compress=compress
-    )
-    carried = sorted({c for p in candidates for c in p.stats})
-    carried = [c for c in carried if c in {f.name for f in meta.schema or []}]
-    if carried:
-        _attach_zone_maps(spark, store, merged.schema, new_partitions, carried)
-    return _swap_commit(
-        spark, store, meta, new_partitions, [p.label for p in candidates], base=base
-    )
-
-
-def _swap_commit(
-    spark: SparkSession,
-    store: Store,
-    meta: DatasetMetadata,
-    new_partitions: Sequence[Partition],
-    removed: Sequence[str],
-    *,
-    base: dict,
-) -> DatasetMetadata:
-    """Commit tail of every rewrite (row delete, MERGE, compaction): swap
-    the ``removed`` labels for ``new_partitions``, merge the index and
-    Bloom sidecars for exactly those labels, and commit through the
-    optimistic-concurrency path. The rewrite job runs for minutes at
-    scale, so a blind commit would silently drop any append committed
-    in that window; with ``removed`` non-empty the merge helper raises
-    ConcurrentCommitError instead (a pure insert with ``removed == []``
-    still merges append-vs-append races)."""
-    for label in removed:
-        del meta.partitions[label]
-    for p in new_partitions:
-        if p.label in meta.partitions:
-            raise RuntimeError(f"Duplicate partition label in commit: {p.label}")
-        meta.partitions[p.label] = p
-    _refresh_indices(spark, store, meta, new_partitions, list(meta.indices), removed)
-    _refresh_blooms(spark, store, meta, new_partitions, list(meta.blooms), removed)
-    # reference-embedded indices become sidecars over all live partitions
-    _refresh_indices(
-        spark, store, meta, list(meta.partitions.values()), list(meta.embedded_indices)
-    )
-    meta.explicit_partitions = True
-    return _commit_update_with_merge(
-        store, meta, new_partitions=new_partitions, removed=removed,
-        extra_metadata=None, **base,
-    )
 
 
 def _merge_key_candidates(
@@ -2361,8 +2329,12 @@ def merge_into_dataset(
     merged = pieces[0]
     for p in pieces[1:]:
         merged = merged.unionByName(p)
-    meta = _cow_swap_commit(
-        spark, store, meta, merged, candidates, compress=compress, base=_base
+    new_partitions = _write_files(
+        merged, store, dataset_uuid, meta.partition_keys, compress=compress
+    )
+    meta = _commit_files(
+        spark, store, meta, _base, new_partitions,
+        removed=[p.label for p in candidates],
     )
     _invalidate_if_factory(_store_arg)
     return meta
@@ -2600,6 +2572,10 @@ def compact_dataset(
             "zorder_by compaction applies to keyless datasets (hive keys "
             "already cluster the layout); drop partition_on or zorder_by"
         )
+    # z-order columns join the zone-map set
+    _validate_declared_columns(
+        meta.schema, meta.partition_keys, dataset_uuid, zone_map_columns=zorder_by
+    )
 
     groups: dict[tuple, list[Partition]] = {}
     for p in meta.partitions.values():
@@ -2664,16 +2640,9 @@ def compact_dataset(
             df.repartition(target_files_per_key), store, dataset_uuid, []
         )
 
-    # recollect zone maps over the compacted files for every column the
-    # old partitions tracked (compaction must not silently drop pruning)
-    zm_cols = sorted(
-        {c for p in meta.partitions.values() for c in p.stats} | set(zorder_by or [])
-    )
-    _attach_zone_maps(spark, store, meta.schema, partitions, zm_cols)
-
-    meta = _swap_commit(
-        spark, store, meta, partitions,
-        sorted(p.label for g in over for p in g), base=_base,
+    meta = _commit_files(
+        spark, store, meta, _base, partitions,
+        removed=sorted(p.label for g in over for p in g), zone_map_columns=zorder_by,
     )
     if gc:
         garbage_collect_dataset(store, dataset_uuid)
@@ -2720,6 +2689,10 @@ def repartition_dataset(
     missing = [c for c in partition_on if c not in schema_cols]
     if missing:
         raise ValueError(f"partition_on columns not in dataset schema: {missing}")
+    # every Bloom sidecar is rebuilt under the new keys
+    _validate_declared_columns(
+        meta.schema, partition_on, dataset_uuid, bloom_columns=list(meta.blooms)
+    )
 
     df = read_dataset_as_dataframe(spark, store, dataset_uuid)
     if partition_on:
@@ -2750,32 +2723,13 @@ def repartition_dataset(
         # count (repartition keeps the write parallel; no key to bucket)
         flat = df.repartition(num_buckets) if num_buckets else df
         partitions = _write_files(flat, store, dataset_uuid, [])
-    zm_cols = sorted({c for p in meta.partitions.values() for c in p.stats})
-    if zm_cols:
-        _attach_zone_maps(spark, store, meta.schema, partitions, zm_cols)
-    new_meta = DatasetMetadata(
-        uuid=dataset_uuid,
-        partitions={p.label: p for p in partitions},
-        partition_keys=partition_on,
-        schema=meta.schema,
-        metadata=dict(meta.metadata),
-        # same dataset, next generation (see compact_dataset)
-        generation=meta.generation,
-    )
-    indexed_cols = sorted(set(meta.indices) | set(meta.embedded_indices))
-    _refresh_indices(spark, store, new_meta, partitions, indexed_cols)
-    for col, info in meta.blooms.items():
-        _refresh_blooms(
-            spark, store, new_meta, partitions, [col],
-            n_bits=info["n_bits"], k=info["k"],
-        )
-    new_meta = _commit_update_with_merge(
-        store, new_meta, new_partitions=partitions,
-        removed=sorted(meta.partitions), extra_metadata=None, **_base,
-    )
+    removed = sorted(meta.partitions)
+    meta.partition_keys = partition_on
+    _drop_sidecar_keys(meta)
+    meta = _commit_files(spark, store, meta, _base, partitions, removed=removed)
     if gc:
         garbage_collect_dataset(store, dataset_uuid)
-    return new_meta
+    return meta
 
 
 def restore_dataset(

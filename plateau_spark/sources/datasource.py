@@ -735,7 +735,7 @@ class PlateauBatchWriter(DataSourceArrowWriter):
 
     # driver side
     def commit(self, messages):
-        from plateau_spark.core.metadata import DatasetMetadata, Partition
+        from plateau_spark.core.metadata import DatasetMetadata
         from plateau_spark.core.store import Store
         from plateau_spark.core.schema import validate_compatible
 
@@ -793,31 +793,7 @@ class PlateauBatchWriter(DataSourceArrowWriter):
         )
 
         base = _commit_base_snapshot(meta)
-        seen: set[str] = set()
-        new_parts = []
-        for m in files:
-            if m.staged_key in seen:
-                continue  # defensive: double-delivered task message
-            seen.add(m.staged_key)
-            try:
-                store.move(m.staged_key, m.final_key)
-            except FileNotFoundError:
-                # idempotency: a re-delivered message whose file was
-                # already renamed is fine; anything else is a real loss
-                if not store.exists(m.final_key):
-                    raise
-            p = Partition(label=m.label, file=m.final_key)
-            meta.partitions[m.label] = p
-            new_parts.append(p)
-        # drop the now-empty staging dirs (derived from the messages —
-        # executors may have staged under distinct commit ids)
-        import posixpath
-
-        for d in {posixpath.dirname(m.staged_key) for m in files}:
-            try:
-                store.delete(d)
-            except Exception:
-                pass
+        new_parts = _publish_staged(store, meta, files)
         if not exists:
             meta.commit(store)  # fresh dataset: nothing to race with
         else:
@@ -831,6 +807,40 @@ class PlateauBatchWriter(DataSourceArrowWriter):
         from plateau_spark.core.store import Store
 
         _drop_staged(Store(self._root), messages, self._uuid, self._commit_id)
+
+
+def _publish_staged(store, meta, files) -> list:
+    """Driver-side publish step of both writers: rename each staged file
+    to its final key and add its ``Partition`` to ``meta``, then drop the
+    now-empty staging dirs. Returns the new partitions."""
+    import posixpath
+
+    from plateau_spark.core.metadata import Partition
+
+    seen: set[str] = set()
+    new_parts = []
+    for m in files:
+        if m.staged_key in seen:
+            continue  # defensive: double-delivered task message
+        seen.add(m.staged_key)
+        try:
+            store.move(m.staged_key, m.final_key)
+        except FileNotFoundError:
+            # idempotency: a re-delivered message whose file was
+            # already renamed is fine; anything else is a real loss
+            if not store.exists(m.final_key):
+                raise
+        p = Partition(label=m.label, file=m.final_key)
+        meta.partitions[m.label] = p
+        new_parts.append(p)
+    # staging dirs derive from the messages — executors may have staged
+    # under distinct commit ids
+    for d in {posixpath.dirname(m.staged_key) for m in files}:
+        try:
+            store.delete(d)
+        except Exception:
+            pass
+    return new_parts
 
 
 def _drop_staged(store, messages, uuid: str, commit_id: str) -> None:
@@ -898,7 +908,7 @@ class PlateauStreamWriter(DataSourceStreamArrowWriter):
 
     # driver side
     def commit(self, messages, batchId: int) -> None:
-        from plateau_spark.core.metadata import DatasetMetadata, Partition
+        from plateau_spark.core.metadata import DatasetMetadata
         from plateau_spark.core.schema import validate_compatible
         from plateau_spark.core.store import Store
 
@@ -961,27 +971,7 @@ class PlateauStreamWriter(DataSourceStreamArrowWriter):
 
         base = _commit_base_snapshot(meta)
         fresh = not DatasetMetadata.exists(store, self._uuid)
-        seen: set[str] = set()
-        new_parts = []
-        for m in files:
-            if m.staged_key in seen:
-                continue
-            seen.add(m.staged_key)
-            try:
-                store.move(m.staged_key, m.final_key)
-            except FileNotFoundError:
-                if not store.exists(m.final_key):
-                    raise
-            p = Partition(label=m.label, file=m.final_key)
-            meta.partitions[m.label] = p
-            new_parts.append(p)
-        import posixpath
-
-        for d in {posixpath.dirname(m.staged_key) for m in files}:
-            try:
-                store.delete(d)
-            except Exception:
-                pass
+        new_parts = _publish_staged(store, meta, files)
         if fresh:
             meta.metadata.setdefault("stream_sink", {})[self._sink_id] = {
                 "last_batch": batchId

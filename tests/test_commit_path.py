@@ -1,0 +1,194 @@
+"""One commit path (sources/dataset.py ``_commit_files``): every mutating
+API leaves the same contract behind. After each operation the Bloom
+sidecars name exactly the live files, the index sidecars name no dead
+file and cover every live value, every live file carries stats for each
+tracked zone-map column, and a point lookup prunes every new file that
+does not hold the value. Declared columns are validated before the
+write job, so a bad call stages nothing."""
+
+from __future__ import annotations
+
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
+
+import plateau_spark.plans.index as index_mod
+from plateau_spark.core.metadata import DatasetMetadata
+from plateau_spark.operators.sketches import (
+    build_histogram_stats,
+    consolidate_statistics,
+)
+from plateau_spark.plans.blooms import read_bloom_rows
+from plateau_spark.plans.pruning import explain_scan
+from plateau_spark.sources.dataset import (
+    build_dataset_indices,
+    commit_dataset,
+    compact_dataset,
+    delete_rows_from_dataset,
+    merge_into_dataset,
+    merge_upsert_into_dataset,
+    read_table,
+    repartition_dataset,
+    store_dataframe_as_dataset,
+    store_dataframes_as_dataset__iter,
+    update_dataset_from_dataframe,
+    update_dataset_from_dataframes__iter,
+    write_single_partition,
+)
+
+UUID = "d"
+
+
+def _rows(spark, lo, hi):
+    return spark.range(lo, hi).select(
+        (F.col("id") % 4).alias("p"),
+        F.col("id").alias("k"),
+        (F.col("id") * 3).alias("num"),
+        F.concat(F.lit("t"), (F.col("id") % 7).cast("string")).alias("tag"),
+    )
+
+
+def _fixture(spark, store):
+    """4 files (one per ``p``), an index on ``tag``, a Bloom sidecar on
+    ``k`` and zone maps on ``num``."""
+    store_dataframe_as_dataset(
+        spark, store, UUID, _rows(spark, 0, 300), partition_on=["p"],
+        secondary_indices=["tag"], bloom_filter_columns=["k"],
+        zone_map_columns=["num"],
+    )
+
+
+def _stats_fixture(spark, store):
+    """A histogram statistics dataset with an index, a Bloom sidecar and
+    zone maps, declared by an update that appends all-zero counts."""
+    build_histogram_stats(spark, store, UUID, _rows(spark, 0, 300), ["tag"], "num", width=50.0)
+    zeros = read_table(spark, store, UUID).withColumn("cnt", F.col("cnt") * 0)
+    update_dataset_from_dataframe(
+        spark, store, UUID, zeros, secondary_indices=["tag"],
+        bloom_filter_columns=["bucket"], zone_map_columns=["bucket"],
+    )
+
+
+def _commit(spark, store):
+    parts = write_single_partition(spark, store, UUID, _rows(spark, 300, 400), partition_on=["p"])
+    commit_dataset(spark, store, UUID, new_partitions=parts, delete_scope=[{"p": 0}])
+
+
+def _compact(spark, store):
+    update_dataset_from_dataframe(spark, store, UUID, _rows(spark, 300, 400))
+    compact_dataset(spark, store, UUID)
+
+
+OPS = {
+    "store": lambda spark, store: None,
+    "store_iter": lambda spark, store: store_dataframes_as_dataset__iter(
+        spark, store, UUID, iter([_rows(spark, 0, 150), _rows(spark, 150, 300)]),
+        partition_on=["p"], secondary_indices=["tag"], overwrite=True,
+    ),
+    "update": lambda spark, store: update_dataset_from_dataframe(
+        spark, store, UUID, _rows(spark, 300, 400), delete_scope=[{"p": 0}]
+    ),
+    "update_iter": lambda spark, store: update_dataset_from_dataframes__iter(
+        spark, store, UUID, iter([_rows(spark, 300, 400)]), delete_scope=[{"p": 0}]
+    ),
+    "commit": _commit,
+    "build_indices": lambda spark, store: build_dataset_indices(spark, store, UUID, ["tag"]),
+    "delete_rows": lambda spark, store: delete_rows_from_dataset(
+        spark, store, UUID, [[("k", "<", 40)]]
+    ),
+    "upsert": lambda spark, store: merge_upsert_into_dataset(
+        spark, store, UUID, _rows(spark, 280, 320), "k"
+    ),
+    "merge_into": lambda spark, store: merge_into_dataset(
+        spark, store, UUID, _rows(spark, 280, 320), "k", when_matched_delete="s.k % 2 = 0"
+    ),
+    "compact": _compact,
+    "repartition": lambda spark, store: repartition_dataset(
+        spark, store, UUID, partition_on=[], num_buckets=3
+    ),
+    "consolidate": lambda spark, store: consolidate_statistics(spark, store, UUID),
+}
+
+
+def _file_values(store, meta, label, column):
+    table = pq.ParquetFile(store.path(meta.partitions[label].file)).read(columns=[column])
+    return [v for v in table.column(column).to_pylist() if v is not None]
+
+
+def _assert_contract(store, before: set[str]) -> None:
+    meta = DatasetMetadata.load(store, UUID)
+    live = set(meta.partitions)
+    for col, info in meta.blooms.items():
+        assert {r[1] for r in read_bloom_rows(store, info["key"])} == live, col
+    for col, key in meta.indices.items():
+        table = store.read_parquet(key)
+        plist = "partitions" if "partitions" in table.column_names else "partition"
+        posting = dict(zip(table.column(col).to_pylist(), table.column(plist).to_pylist()))
+        assert set().union(*posting.values()) <= live, col
+        for label in live:
+            for v in set(_file_values(store, meta, label, col)):
+                assert label in posting.get(v, []), (col, label, v)
+    tracked = {c for p in meta.partitions.values() for c in p.stats}
+    for label, p in meta.partitions.items():
+        assert tracked <= set(p.stats), (label, p.stats)
+    new = sorted(live - before)
+    if not (new and meta.blooms):
+        return
+    col = sorted(meta.blooms)[0]
+    value = _file_values(store, meta, new[0], col)[0]
+    for r in explain_scan(meta, store, [[(col, "==", value)]]):
+        if value in _file_values(store, meta, r["label"], col):
+            assert r["scanned"], r
+        elif r["label"] in new:
+            assert not r["scanned"] and {"bloom", "zone_map"} & set(r["pruned_by"]), r
+
+
+@pytest.mark.parametrize(
+    "op, tier",
+    [(op, "driver") for op in OPS] + [("update_iter", "spark"), ("commit", "spark")],
+)
+def test_every_mutating_api_keeps_the_contract(spark, store, monkeypatch, op, tier):
+    if tier == "spark":
+        monkeypatch.setattr(index_mod, "DRIVER_MAX_BYTES", 0)
+    (_stats_fixture if op == "consolidate" else _fixture)(spark, store)
+    before = set(DatasetMetadata.load(store, UUID).partitions)
+    OPS[op](spark, store)
+    _assert_contract(store, set() if op == "store" else before)
+
+
+BAD_COLUMNS = [
+    ({"bloom_filter_columns": ["nope"]}, ValueError, "not in schema"),
+    ({"zone_map_columns": ["nope"]}, ValueError, "not in schema"),
+    ({"secondary_indices": ["nope"]}, RuntimeError, "could not be found"),
+]
+
+
+@pytest.mark.parametrize("kwargs, error, match", BAD_COLUMNS)
+def test_store_rejects_bad_columns_before_writing(spark, store, kwargs, error, match):
+    with pytest.raises(error, match=match):
+        store_dataframe_as_dataset(spark, store, "bad", _rows(spark, 0, 20), **kwargs)
+    assert list(store.iter_keys("bad/")) == []
+
+
+@pytest.mark.parametrize("kwargs, error, match", BAD_COLUMNS)
+def test_update_rejects_bad_columns_before_writing(spark, store, kwargs, error, match):
+    """A zone-map column missing from the schema raises on update as it
+    does on store."""
+    store_dataframe_as_dataset(spark, store, UUID, _rows(spark, 0, 20), partition_on=["p"])
+    keys = sorted(store.iter_keys(f"{UUID}/"))
+    with pytest.raises(error, match=match):
+        update_dataset_from_dataframe(spark, store, UUID, _rows(spark, 20, 40), **kwargs)
+    assert sorted(store.iter_keys(f"{UUID}/")) == keys
+
+
+def test_failed_overwrite_keeps_the_existing_dataset(spark, store):
+    """``overwrite=True`` deletes the existing dataset only after the new
+    data's declared columns pass their checks."""
+    _fixture(spark, store)
+    before = DatasetMetadata.load(store, UUID)
+    with pytest.raises(ValueError, match="not in schema"):
+        store_dataframe_as_dataset(
+            spark, store, UUID, _rows(spark, 0, 20), overwrite=True,
+            bloom_filter_columns=["nope"],
+        )
+    assert DatasetMetadata.load(store, UUID).partitions.keys() == before.partitions.keys()

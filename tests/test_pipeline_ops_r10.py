@@ -852,6 +852,42 @@ def test_explain_scan_reports_pruning_tiers(spark, store):
     assert all(r["scanned"] and r["pruned_by"] == [] for r in rep_all)
 
 
+def test_explain_scan_scanned_labels_equal_plan_scan(spark, store):
+    """plan_scan and explain_scan share their tier setup: for a
+    predicate on each tier (and IS NULL, and a disjunction) the labels
+    explain_scan reports as scanned are exactly plan_scan's."""
+    from plateau_spark.core.metadata import DatasetMetadata
+    from plateau_spark.plans.pruning import explain_scan, plan_scan
+
+    df = spark.createDataFrame(
+        [
+            (i, "en" if i % 2 else "de", None if i % 10 == 0 else f"src{i // 25}", i)
+            for i in range(100)
+        ],
+        "doc_id long, lang string, source string, n_chars long",
+    )
+    store_dataframe_as_dataset(
+        spark, store, "par", df.repartitionByRange(4, "doc_id"), repartition=False,
+        partition_on=["lang"], secondary_indices=["source"],
+        zone_map_columns=["n_chars"], bloom_filter_columns=["doc_id"],
+    )
+    meta = DatasetMetadata.load(store, "par")
+    cases = [
+        ("index", [[("source", "==", "src1")]]),
+        ("bloom", [[("doc_id", "==", 7)]]),
+        ("zone_map", [[("n_chars", "<", 10)]]),
+        ("partition_key", [[("lang", "==", "de")]]),
+        (None, [[("source", "==", None)]]),
+        ("bloom", [[("doc_id", "==", 7)], [("lang", "==", "de"), ("n_chars", ">", 90)]]),
+    ]
+    for tier, preds in cases:
+        rep = explain_scan(meta, store, preds)
+        planned = {p.label for p in plan_scan(meta, store, preds)}
+        assert {r["label"] for r in rep if r["scanned"]} == planned, preds
+        if tier:
+            assert any(tier in r["pruned_by"] for r in rep), preds
+
+
 def test_explain_scan_bloom_tier(spark, store):
     from plateau_spark.core.metadata import DatasetMetadata
     from plateau_spark.plans.pruning import explain_scan
