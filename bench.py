@@ -208,6 +208,66 @@ BENCH_QUERIES = [
 ]
 
 
+REFERENCE_DEPTH = 20
+
+
+def _git(repo_dir: str, *args: str) -> str | None:
+    """stdout of ``git args`` in ``repo_dir``, or None on any failure."""
+    import subprocess
+
+    try:
+        out = subprocess.run(
+            ["git", *args], capture_output=True, text=True,
+            cwd=repo_dir, timeout=10,
+        )
+    except (OSError, subprocess.SubprocessError):
+        return None
+    return out.stdout if out.returncode == 0 else None
+
+
+def newest_record(repo_dir: str) -> dict:
+    """The committed ``BENCH_LOCAL.json`` at HEAD whatever its
+    quiet/cpus (the on-disk copy without git history), or {}."""
+    try:
+        show = _git(repo_dir, "show", "HEAD:BENCH_LOCAL.json")
+        if show and show.strip():
+            return json.loads(show)
+        with open(os.path.join(repo_dir, "BENCH_LOCAL.json")) as fh:
+            return json.load(fh)
+    except (OSError, ValueError):
+        return {}
+
+
+def reference_record(repo_dir: str, cpus) -> "tuple[str, dict] | None":
+    """``(commit, record)`` of the newest committed ``BENCH_LOCAL.json``
+    among the last ``REFERENCE_DEPTH`` commits touching it that was
+    taken on a quiet box (``quiet: true``) with the same ``cpus`` as
+    this run, or None when there is none (or no git history)."""
+    log = _git(
+        repo_dir, "log", "-n", str(REFERENCE_DEPTH), "--format=%H", "--",
+        "BENCH_LOCAL.json",
+    )
+    for commit in (log or "").split():
+        try:
+            record = json.loads(_git(repo_dir, "show", f"{commit}:BENCH_LOCAL.json") or "")
+        except ValueError:
+            continue
+        if record.get("quiet") is True and str(record.get("cpus")) == str(cpus):
+            return commit, record
+    return None
+
+
+def error_line_flags(times: dict, prev: dict) -> dict[str, dict]:
+    """Lines that now fail (an ``{"err": ...}`` entry) but had a time in
+    ``prev``: flagged whatever the load or the reference, since an error
+    is code, not machine load."""
+    return {
+        k: {"prev": prev[k], "now": "error", "ratio": None}
+        for k, v in times.items()
+        if isinstance(v, dict) and isinstance(prev.get(k), (int, float))
+    }
+
+
 def phase_benchmarks(spark, sf_dir: str) -> dict[str, float]:
     """Attributed timings for composite fixtures (SPARK_GRAFT_PHASES=1):
 
@@ -477,9 +537,10 @@ def main() -> None:
     # total — r12 shipped a 2.7× bitext regression whose driver signal
     # was written off as machine load. Machine load moves every line
     # roughly uniformly; a code regression moves one. So: if the
-    # run-median drift vs the committed BENCH_LOCAL.json is <1.3×
-    # (quiet-ish run), flag any line whose min-of-reps exceeds 1.5× its
-    # committed value (and by >0.3s absolute, to skip sub-second noise).
+    # run-median drift vs the reference record (the newest committed
+    # quiet BENCH_LOCAL.json with the same cpus) is <1.3× (quiet-ish
+    # run), flag any line whose min-of-reps exceeds 1.5× its reference
+    # value (and by >0.3s absolute, to skip sub-second noise).
     local_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL.json"
     )
@@ -495,37 +556,35 @@ def main() -> None:
     quiet = load_start is None or load_start[0] < max(2.0, 0.25 * (os.cpu_count() or 1))
     summary["quiet"] = quiet
     outliers: dict[str, dict] = {}
+    # Compare against a COMMITTED quiet record taken with the same core
+    # count, never the on-disk file this run is about to overwrite
+    # (successive runs would rebaseline against each other and a gradual
+    # regression would ratchet in unflagged), nor a loaded run (its
+    # inflated times would hide real regressions). Without one there are
+    # no per-line ratio flags; error-line flags need no reference.
+    here = os.path.dirname(local_path)
+    found = reference_record(here, summary["cpus"])
+    summary["reference_commit"] = found[0] if found else None
+    if found is None:
+        print(
+            f"# no quiet BENCH_LOCAL.json with cpus={summary['cpus']} committed "
+            f"in the last {REFERENCE_DEPTH} commits touching it — per-line "
+            "ratio flags skipped",
+            file=sys.stderr,
+        )
     try:
-        # Compare against the COMMITTED artifact, not the on-disk file this
-        # run is about to overwrite: successive runs otherwise rebaseline
-        # against each other and a gradual regression ratchets in unflagged.
-        prev = None
-        try:
-            import subprocess
-
-            show = subprocess.run(
-                ["git", "show", "HEAD:BENCH_LOCAL.json"],
-                capture_output=True, text=True,
-                cwd=os.path.dirname(local_path), timeout=10,
-            )
-            if show.returncode == 0 and show.stdout.strip():
-                prev = json.loads(show.stdout).get("queries", {})
-        except Exception:  # noqa: BLE001 — fall back to on-disk copy
-            prev = None
-        if prev is None:
-            with open(local_path) as fh:
-                prev = json.load(fh).get("queries", {})
         # a line that regressed all the way to FAILURE is the worst
-        # regression of all — flag it unconditionally (no median-drift
-        # gate: an error is code, not machine load)
-        for k, v in times.items():
-            if isinstance(v, dict) and isinstance(prev.get(k), (int, float)):
-                outliers[k] = {"prev": prev[k], "now": "error", "ratio": None}
-                print(
-                    f"# REGRESSION? {k}: {prev[k]}s -> ERROR "
-                    f"({str(v.get('err'))[:120]})",
-                    file=sys.stderr,
-                )
+        # regression of all — flag it against the newest committed
+        # record, loaded or not (no reference or median-drift gate)
+        latest = newest_record(here).get("queries", {})
+        for k, o in error_line_flags(times, latest).items():
+            outliers[k] = o
+            print(
+                f"# REGRESSION? {k}: {o['prev']}s -> ERROR "
+                f"({str(times[k].get('err'))[:120]})",
+                file=sys.stderr,
+            )
+        prev = found[1].get("queries", {}) if found else {}
         ratios = {
             k: times[k] / prev[k]
             for k in times
@@ -577,7 +636,6 @@ def main() -> None:
     try:
         import subprocess
 
-        here = os.path.dirname(local_path)
         head = subprocess.run(
             ["git", "rev-parse", "--short", "HEAD"],
             capture_output=True, text=True, cwd=here, timeout=10,

@@ -33,13 +33,16 @@ from __future__ import annotations
 import hashlib
 from typing import Any, Sequence
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from plateau_spark.core import naming
 from plateau_spark.core.store import Store
-from plateau_spark.plans.index import _utc_ts, read_column_driver
+from plateau_spark.plans.index import _utc_ts, index_value_kind, read_column_driver
 
 N_BITS_DEFAULT = 1 << 13  # 8192 bits = 1 KB per file per column
 K_DEFAULT = 5
@@ -124,6 +127,31 @@ def bloom_positions(value: Any, n_bits: int, k: int) -> list[int]:
     return [(h1 + i * h2) % n_bits for i in range(k)]
 
 
+_U60 = np.uint64((1 << 60) - 1)
+
+
+def bloom_position_array(values: pa.Array, n_bits: int, k: int) -> np.ndarray:
+    """Vector twin of ``bloom_positions``: a ``(len(values), k)`` uint64
+    array of the positions of each value of a NULL-free integer or
+    string Arrow array. One md5 per value over ``pc.cast(values,
+    string)`` (the same rendering as Spark's cast and Python's ``str``
+    for these types); the k positions of the double-hash walk are one
+    vector expression (h1 and h2 are under 2^60 and k <= 7, so
+    ``h1 + i*h2`` never wraps)."""
+    md5 = hashlib.md5
+    strings = pc.cast(values, pa.string()).cast(pa.binary())
+    blobs = strings.to_numpy(zero_copy_only=False)
+    digests = np.frombuffer(
+        b"".join([md5(b).digest() for b in blobs]), np.uint8
+    ).reshape(len(blobs), 16)
+    # hex digits 0-14 are the top 60 bits of digest bytes 0-7; hex
+    # digits 15-29 the low 60 bits of bytes 7-14 (both big-endian)
+    h1 = digests[:, 0:8].copy().view(">u8")[:, 0] >> np.uint64(4)
+    h2 = (digests[:, 7:15].copy().view(">u8")[:, 0] & _U60) | np.uint64(1)
+    steps = np.arange(k, dtype=np.uint64)
+    return (h1[:, None] + steps[None, :] * h2[:, None]) % np.uint64(n_bits)
+
+
 def build_bloom_dataframe(
     spark: SparkSession,
     store: Store,
@@ -206,11 +234,17 @@ def build_bloom_dataframe(
 # A KB-scale commit's Bloom rows are folded on the driver: the new files'
 # column comes from the one gated pyarrow reader shared with the index
 # sidecars (``plans/index.py`` ``read_column_driver``: at most 16 files,
-# 8 MiB and 50,000 rows), and ``bloom_positions`` — the bit-identical
-# twin of the codegen hash chain — sets the bits, so the rows equal
-# ``build_bloom_dataframe``'s and a commit pays zero Spark jobs. Over the
-# gate the refresh (``sources/dataset.py`` ``_refresh_blooms``) runs the
-# Spark job instead.
+# 8 MiB and 50,000 rows), ``bloom_position_array`` — the vector form of
+# the bit-identical twin of the codegen hash chain — gives every
+# value's k positions, and one ``np.bitwise_or.at`` per file sets the
+# bits, so the rows equal ``build_bloom_dataframe``'s and a commit pays
+# zero Spark jobs. The merge and the write stay Arrow tables
+# (``BLOOM_SCHEMA``). Over the gate the refresh (``sources/dataset.py``
+# ``_refresh_blooms``) runs the Spark job instead.
+
+BLOOM_SCHEMA = pa.schema(
+    [("word", pa.int32()), ("label", pa.string()), ("bits", pa.int64())]
+)
 
 
 def build_bloom_rows_driver(
@@ -220,10 +254,12 @@ def build_bloom_rows_driver(
     *,
     n_bits: int,
     k: int,
-) -> "list[tuple[int, str, int]] | None":
-    """Driver-tier twin of ``build_bloom_dataframe``: returns the same
-    (word, label, bits) rows — bit-identical, via ``bloom_positions`` —
-    or None when the parquet files do not fit the driver gate (caller
+) -> "pa.Table | None":
+    """Driver-tier twin of ``build_bloom_dataframe``: the same (word,
+    label, bits) rows as a ``BLOOM_SCHEMA`` table — bit-identical, bits
+    stored as signed int64 like the Spark path's two's-complement
+    ``bit_or`` — or None when the parquet files do not fit the driver
+    gate or hold a column that is neither integer nor string (caller
     takes the Spark job). Non-parquet files get no rows, exactly like
     the Spark path; a file missing the column (pre-evolution) yields
     only its coverage marker (the Spark path's explicit-schema NULL
@@ -235,59 +271,53 @@ def build_bloom_rows_driver(
     )
     if columns is None:
         return None
-    rows: list[tuple[int, str, int]] = []
-    for p, values in columns:
-        acc: dict[int, int] = {}
-        for v in values:
-            if v is None:
-                continue
-            for pos in bloom_positions(v, n_bits, k):
-                w = pos >> 6
-                acc[w] = acc.get(w, 0) | (1 << (pos & 63))
-        rows.extend(
-            # bits stored as SIGNED int64 — the Spark path's shiftleft/
-            # bit_or arithmetic is two's-complement, and the consult
-            # (load_bloom_words) does signed-python bit probes
-            (w, p.label, b - (1 << 64) if b >= (1 << 63) else b)
-            for w, b in sorted(acc.items())
+    words = np.zeros((len(columns), (int(n_bits) + 63) >> 6), np.uint64)
+    for i, (_, values) in enumerate(columns):
+        values = values.drop_null()
+        if not len(values):
+            continue
+        if index_value_kind(values.type) is None:
+            return None
+        pos = bloom_position_array(values, n_bits, k).ravel()
+        np.bitwise_or.at(
+            words[i], (pos >> np.uint64(6)).astype(np.intp),
+            np.uint64(1) << (pos & np.uint64(63)),
         )
-        rows.append((COVERAGE_WORD, p.label, 0))
-    return rows
-
-
-def read_bloom_rows(store: Store, key: str) -> list[tuple[int, str, int]]:
-    """Whole-sidecar read as (word, label, bits) rows (driver merge)."""
-    table = store.read_parquet(key)
-    return list(
-        zip(
-            table.column("word").to_pylist(),
-            table.column("label").to_pylist(),
-            table.column("bits").to_pylist(),
-        )
+    file_of, word = np.nonzero(words)
+    n_files = len(columns)
+    labels = pa.array([p.label for p, _ in columns], pa.string())
+    return pa.table(
+        {
+            "word": np.concatenate(
+                [word, np.full(n_files, COVERAGE_WORD)]
+            ).astype(np.int32),
+            "label": labels.take(np.concatenate([file_of, np.arange(n_files)])),
+            "bits": np.concatenate(
+                [words[file_of, word].view(np.int64), np.zeros(n_files, np.int64)]
+            ),
+        },
+        schema=BLOOM_SCHEMA,
     )
+
+
+def read_bloom_table(store: Store, key: str) -> pa.Table:
+    """Whole-sidecar read as a ``BLOOM_SCHEMA`` table (driver merge)."""
+    return store.read_parquet(key).select(BLOOM_SCHEMA.names).cast(BLOOM_SCHEMA)
 
 
 def persist_bloom_rows(
-    rows: "list[tuple[int, str, int]]", store: Store, dataset_uuid: str, column: str
+    rows: "pa.Table", store: Store, dataset_uuid: str, column: str
 ) -> str:
-    """Driver-tier twin of ``persist_bloom_dataframe``: one small
-    parquet file, sorted by (word, label) so a k-word lookup prunes row
-    groups; returns the store key. Schema matches the Spark writer
-    (word int32, label string, bits int64) so ``load_bloom_words`` and
+    """Driver-tier twin of ``persist_bloom_dataframe``: the
+    ``BLOOM_SCHEMA`` rows as one small parquet file, sorted by (word,
+    label) so a k-word lookup prunes row groups; returns the store key.
+    The schema matches the Spark writer's so ``load_bloom_words`` and
     the Spark merge reader consume either interchangeably."""
     import io
 
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    rows = sorted(rows, key=lambda r: (r[0], r[1]))
-    table = pa.table(
-        {
-            "word": pa.array([r[0] for r in rows], pa.int32()),
-            "label": pa.array([r[1] for r in rows], pa.string()),
-            "bits": pa.array([r[2] for r in rows], pa.int64()),
-        }
-    )
+    table = rows.sort_by([("word", "ascending"), ("label", "ascending")])
     key = naming.bloom_key(dataset_uuid, column, _utc_ts())
     buf = io.BytesIO()
     pq.write_table(table, buf)

@@ -62,7 +62,7 @@ from plateau_spark.plans.index import (
     LABEL_COL,
     SecondaryIndex,
     build_index_pairs_driver,
-    index_value_type_ok,
+    index_value_kind,
     persist_index_dataframe,
     persist_index_dict,
     sidecar_fits_driver,
@@ -104,6 +104,27 @@ def _read_committed_files(
         )
         out = df if out is None else out.unionByName(df)
     return out
+
+
+def _scan_partitions(
+    spark: SparkSession,
+    store: Store,
+    dataset_uuid: str,
+    meta: DatasetMetadata,
+    partitions: Sequence[Partition],
+) -> DataFrame:
+    """The files of ``partitions`` (from the loaded ``meta``) as one
+    DataFrame in canonical column order (partition keys first, payload
+    alphabetical); an empty frame of the schema when there are none."""
+    if not partitions:
+        if meta.schema is None:
+            raise ValueError(
+                f"Dataset {dataset_uuid!r}: no partitions survive pruning and "
+                "the commit file carries no schema to type an empty result"
+            )
+        return spark.createDataFrame([], schema=meta.schema)
+    df = _read_committed_files(spark, store, dataset_uuid, meta.schema, partitions)
+    return df.select(*normalized_column_order(df.columns, meta.partition_keys))
 
 
 def _ensure_store(store: Store | str) -> Store:
@@ -563,7 +584,7 @@ def _refresh_indices(
     merge_indices (plateau/io_components/write.py:93-118,
     plateau/core/index.py:760-791).
 
-    Per column the driver tier (``_index_dict_driver``, zero Spark jobs)
+    Per column the driver tier (``_index_pairs_driver``, zero Spark jobs)
     runs when the new files fit the gate of ``plans/index.py``
     ``read_column_driver`` and the old sidecar fits its byte budget;
     otherwise ONE Spark job unions the new pairs with the old sidecar's
@@ -576,10 +597,9 @@ def _refresh_indices(
     scan = None
     for col in dict.fromkeys(columns):
         old_key = meta.indices.get(col)
-        driver = _index_dict_driver(store, meta, parts, col, old_key, rm)
-        if driver is not None:
-            dct, value_type = driver
-            key = persist_index_dict(dct, store, meta.uuid, col, value_type)
+        pairs = _index_pairs_driver(store, meta, parts, col, old_key, rm)
+        if pairs is not None:
+            key = persist_index_dict(pairs, store, meta.uuid, col)
         else:
             if not parts:
                 pairs = _empty_index_df(spark, meta, col).select(
@@ -624,7 +644,7 @@ def _refresh_indices(
         meta.embedded_indices.pop(col, None)
 
 
-def _index_dict_driver(
+def _index_pairs_driver(
     store: Store,
     meta: DatasetMetadata,
     partitions: list[Partition],
@@ -632,13 +652,17 @@ def _index_dict_driver(
     old_key: str | None,
     removed: set[str],
 ):
-    """Driver tier of ``_refresh_indices``: ``(value → labels, arrow
-    value type)``, or None when the column takes the Spark tier. The
-    value type is the old sidecar's (a merge) or the schema's (a build);
-    it must be integer or string, and every new value exactly that
-    Python type (bool is an int subclass), so Python equality matches
-    Spark groupBy equality."""
+    """Driver tier of ``_refresh_indices``: the refreshed sidecar's
+    ``(column, LABEL_COL)`` pairs as one Arrow table (duplicates allowed;
+    ``persist_index_dict`` folds them), or None when the column takes
+    the Spark tier. The value type is the old sidecar's (a merge) or the
+    schema's (a build); it must be integer or string, and the new values
+    of the same kind, so Arrow equality matches Spark groupBy equality.
+    The old sidecar is flattened to pairs with ``list_flatten`` /
+    ``list_parent_indices`` and the removed labels dropped with
+    ``is_in``."""
     import pyarrow as pa
+    import pyarrow.compute as pc
     from pyspark.sql.pandas.types import to_arrow_type
 
     if old_key is None:
@@ -646,17 +670,23 @@ def _index_dict_driver(
             value_type = to_arrow_type(meta.schema[column].dataType)
         except Exception:  # noqa: BLE001 — unsupported type → Spark tier
             return None
-        if not index_value_type_ok(value_type):
+        if index_value_kind(value_type) is None:
             return None
     if column in meta.partition_keys:
-        new: dict | None = {}
-        for p in partitions:
-            new.setdefault(p.key_values[column], set()).add(p.label)
+        try:
+            new = pa.table({
+                column: [p.key_values[column] for p in partitions],
+                LABEL_COL: pa.array([p.label for p in partitions], pa.string()),
+            })
+        except (pa.ArrowException, TypeError, ValueError, OverflowError):
+            return None  # key values of mixed or out-of-range Python types
+        if new.column(column).null_count:
+            return None
     else:
         new = build_index_pairs_driver(store, partitions, column)
     if new is None:
         return None
-    dct: dict = {}
+    old = None
     if old_key is not None:
         if not sidecar_fits_driver(store, old_key):
             return None
@@ -667,24 +697,28 @@ def _index_dict_driver(
         if column not in table.column_names:
             return None
         value_type = table.schema.field(column).type
-        if not index_value_type_ok(value_type):
+        if index_value_kind(value_type) is None:
             return None
         # reference-written sidecars name the posting list "partition"
         plist = "partitions" if "partitions" in table.column_names else "partition"
-        dct = {
-            v: set(labels)
-            for v, labels in zip(
-                table.column(column).to_pylist(), table.column(plist).to_pylist()
-            )
-        }
+        postings = table.column(plist).combine_chunks()
+        labels = pc.list_flatten(postings).cast(pa.string())
+        values = table.column(column).combine_chunks().take(
+            pc.list_parent_indices(postings)
+        )
+        # the Spark tier drops NULL values and the removed labels alike
+        keep = pc.is_valid(values)
         if removed:
-            dct = {v: ls - removed for v, ls in dct.items() if ls - removed}
-    want = int if pa.types.is_integer(value_type) else str
-    if not all(type(v) is want for v in new):
+            keep = pc.and_(
+                keep, pc.invert(pc.is_in(labels, value_set=pa.array(sorted(removed))))
+            )
+        old = pa.table({column: values.filter(keep), LABEL_COL: labels.filter(keep)})
+    if len(new) and index_value_kind(new.schema.field(column).type) is not (
+        index_value_kind(value_type)
+    ):
         return None
-    for v, labels in new.items():
-        dct.setdefault(v, set()).update(labels)
-    return dct, value_type
+    new = new.cast(pa.schema([(column, value_type), (LABEL_COL, pa.string())]))
+    return new if old is None else pa.concat_tables([old, new])
 
 
 def _refresh_blooms(
@@ -707,12 +741,17 @@ def _refresh_blooms(
     existing sidecar, or an entry whose key was dropped
     (``_drop_sidecar_keys``), keeps its own parameters (plans/blooms.py).
 
-    Per column the driver tier (pyarrow read + the bit-identical Python
-    hash twin, zero Spark jobs) runs when the new files fit the gate of
-    ``plans/index.py`` ``read_column_driver`` and the old sidecar fits
-    its byte budget; otherwise ONE Spark job, projection-pruned to the
-    column, unions the new rows with the old sidecar's (labels never
-    repeat, so there is nothing to aggregate)."""
+    Per column the driver tier (pyarrow read + the bit-identical
+    vectorized hash twin, zero Spark jobs) runs when the new files fit
+    the gate of ``plans/index.py`` ``read_column_driver`` and the old
+    sidecar fits its byte budget: the old sidecar table, filtered by
+    label with ``is_in``, and the new rows are concatenated as Arrow
+    tables. Otherwise ONE Spark job, projection-pruned to the column,
+    unions the new rows with the old sidecar's (labels never repeat, so
+    there is nothing to aggregate)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
     from plateau_spark.plans.blooms import (
         HASH_FAMILY,
         K_DEFAULT,
@@ -721,7 +760,7 @@ def _refresh_blooms(
         build_bloom_rows_driver,
         persist_bloom_dataframe,
         persist_bloom_rows,
-        read_bloom_rows,
+        read_bloom_table,
         remove_labels_from_bloom_df,
     )
 
@@ -739,17 +778,17 @@ def _refresh_blooms(
         old_key, col_bits, col_k = info["key"], int(info["n_bits"]), int(info["k"])
         rows = build_bloom_rows_driver(store, parts, col, n_bits=col_bits, k=col_k)
         if rows is not None and old_key is not None:
-            old_rows = None
+            old = None
             if sidecar_fits_driver(store, old_key):
                 try:
-                    old_rows = read_bloom_rows(store, old_key)
+                    old = read_bloom_table(store, old_key)
                 except OSError:
                     pass
-            rows = (
-                None
-                if old_rows is None
-                else [r for r in old_rows if r[1] not in rm] + rows
-            )
+            if old is not None and rm:
+                old = old.filter(
+                    pc.invert(pc.is_in(old["label"], value_set=pa.array(sorted(rm))))
+                )
+            rows = None if old is None else pa.concat_tables([old, rows])
         if rows is not None:
             key = persist_bloom_rows(rows, store, meta.uuid, col)
         else:
@@ -1329,18 +1368,7 @@ def read_dataset_as_dataframe(
         index_loader=None if generation is not None else factory.secondary_index,
     )
 
-    if not surviving:
-        if meta.schema is None:
-            raise ValueError(
-                f"Dataset {dataset_uuid!r}: no partitions survive pruning and "
-                "the commit file carries no schema to type an empty result"
-            )
-        df = spark.createDataFrame([], schema=meta.schema)
-    else:
-        df = _read_committed_files(spark, store, dataset_uuid, meta.schema, surviving)
-        # canonical column order (partition keys first, payload alphabetical)
-        df = df.select(*normalized_column_order(df.columns, meta.partition_keys))
-
+    df = _scan_partitions(spark, store, dataset_uuid, meta, surviving)
     df = apply_predicates(df, predicates, pushdown_to_io=predicate_pushdown_to_io)
     if filter_query:
         df = df.where(filter_query)
@@ -2538,10 +2566,10 @@ def compact_dataset(
     ``target_files_per_key`` files are rewritten. Every other group
     keeps its files, labels and zone-map stats, so the pass costs
     O(fragmented data), not O(dataset). One read job over the
-    over-target groups (a partition-key DNF prunes the scan) + one
-    write job (the same shuffle shape as a bucketed store: repartition
-    on the keys, or on (keys ⊕ hash-bucket) for
-    ``target_files_per_key > 1``), then index and Bloom sidecars are
+    over-target groups (an explicit-path scan of exactly their files in
+    the loaded commit) + one write job (the same shuffle shape as a
+    bucketed store: repartition on the keys, or on (keys ⊕ hash-bucket)
+    for ``target_files_per_key > 1``), then index and Bloom sidecars are
     MERGED like any other commit (rewritten labels dropped, new files'
     entries added — never rebuilt over the whole dataset) and ONE
     atomic commit swaps the rewritten labels. Superseded files are NOT
@@ -2585,23 +2613,12 @@ def compact_dataset(
     if not zorder_by and not over:
         return meta
 
-    # a partition-key DNF reads only the over-target groups; no predicate
-    # when every group is rewritten (keyless and zorder_by included), and
-    # none for a NaN key (driver-side == would prune its own group)
-    rewrite_all = zorder_by or len(over) == len(groups) or any(
-        v != v for g in over for v in g[0].key_values.values()
-    )
-    if rewrite_all:
+    # scan exactly the loaded partitions of the rewritten groups
+    if zorder_by:
         over = list(groups.values())
-        df = read_dataset_as_dataframe(spark, store, dataset_uuid)
-    else:
-        df = read_dataset_as_dataframe(
-            spark, store, dataset_uuid,
-            predicates=[
-                [(c, "==", v) for c, v in sorted(g[0].key_values.items())]
-                for g in over
-            ],
-        )
+    df = _scan_partitions(
+        spark, store, dataset_uuid, meta, [p for g in over for p in g]
+    )
     if zorder_by:
         from plateau_spark.plans.zorder import cluster_by_zorder
 
@@ -2694,7 +2711,9 @@ def repartition_dataset(
         meta.schema, partition_on, dataset_uuid, bloom_columns=list(meta.blooms)
     )
 
-    df = read_dataset_as_dataframe(spark, store, dataset_uuid)
+    df = _scan_partitions(
+        spark, store, dataset_uuid, meta, list(meta.partitions.values())
+    )
     if partition_on:
         # bucket on the NON-key columns: the bucket hash must vary WITHIN
         # a partition key or num_buckets silently degenerates to one file

@@ -21,20 +21,37 @@ from plateau_spark.sources.dataset import (
 
 
 def test_python_and_spark_hash_positions_agree(spark):
-    """The planner replays the JVM build hashing in Python — the two
-    implementations must be bit-identical for ints and strings."""
-    from plateau_spark.plans.blooms import _position_cols
+    """The planner replays the JVM build hashing in Python, and the
+    driver-tier build in numpy — the three must be bit-identical for
+    integers of every width (negatives included) and strings (empty
+    and non-ASCII included), down to positions on bit 63 of a word,
+    which the sidecar stores as a negative ``bits``."""
+    import pyarrow as pa
 
-    df = spark.createDataFrame(
-        [(5,), (-17,), (999999999999,)], "v long"
-    ).select("v", F.array(*_position_cols("v", 8192, 5)).alias("pos"))
-    for r in df.collect():
-        assert r["pos"] == bloom_positions(r["v"], 8192, 5)
-    sdf = spark.createDataFrame(
-        [("hello",), ("",), ("naïve — ünïcode",)], "v string"
-    ).select("v", F.array(*_position_cols("v", 4096, 3)).alias("pos"))
-    for r in sdf.collect():
-        assert r["pos"] == bloom_positions(r["v"], 4096, 3)
+    from plateau_spark.plans.blooms import _position_cols, bloom_position_array
+
+    cases = [
+        ("long", pa.int64(), [5, -17, 999999999999, 0, -(2**63), 2**63 - 1]
+         + list(range(-40, 40))),
+        ("int", pa.int32(), [-(2**31), 2**31 - 1, -1, 7]),
+        ("smallint", pa.int16(), [-32768, 32767, -300, 12]),
+        ("tinyint", pa.int8(), [-128, 127, -1, 0, 64]),
+        ("string", pa.string(), ["hello", "", "naïve — ünïcode", "日本語", "a" * 300]
+         + [f"v{i}" for i in range(40)]),
+    ]
+    on_bit_63 = 0
+    for spark_type, arrow_type, values in cases:
+        for n_bits, k in ((8192, 5), (4096, 3), (1000, 7)):
+            df = spark.createDataFrame([(v,) for v in values], f"v {spark_type}").select(
+                "v", F.array(*_position_cols("v", n_bits, k)).alias("pos")
+            )
+            jvm = {r["v"]: r["pos"] for r in df.collect()}
+            vec = bloom_position_array(pa.array(values, arrow_type), n_bits, k)
+            assert vec.shape == (len(values), k)
+            for v, row in zip(values, vec.tolist()):
+                assert row == bloom_positions(v, n_bits, k) == jvm[v], (spark_type, v)
+            on_bit_63 += int((vec % 64 == 63).sum())
+    assert on_bit_63 > 0
 
 
 @pytest.fixture()
@@ -267,10 +284,13 @@ def test_driver_tier_rows_match_spark_tier(spark, bloom_store):
 
     meta = DatasetMetadata.load(bloom_store, "ev")
     parts = list(meta.partitions.values())
-    driver_rows = build_bloom_rows_driver(
+    driver_table = build_bloom_rows_driver(
         bloom_store, parts, "event_id", n_bits=N_BITS_DEFAULT, k=K_DEFAULT
     )
-    assert driver_rows is not None  # small fixture → driver tier fires
+    assert driver_table is not None  # small fixture → driver tier fires
+    driver_rows = list(
+        zip(*(driver_table.column(c).to_pylist() for c in ("word", "label", "bits")))
+    )
     spark_rows = build_bloom_dataframe(
         spark, bloom_store, parts, "event_id",
         n_bits=N_BITS_DEFAULT, k=K_DEFAULT,

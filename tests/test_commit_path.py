@@ -18,7 +18,7 @@ from plateau_spark.operators.sketches import (
     build_histogram_stats,
     consolidate_statistics,
 )
-from plateau_spark.plans.blooms import read_bloom_rows
+from plateau_spark.plans.blooms import read_bloom_table
 from plateau_spark.plans.pruning import explain_scan
 from plateau_spark.sources.dataset import (
     build_dataset_indices,
@@ -119,7 +119,7 @@ def _assert_contract(store, before: set[str]) -> None:
     meta = DatasetMetadata.load(store, UUID)
     live = set(meta.partitions)
     for col, info in meta.blooms.items():
-        assert {r[1] for r in read_bloom_rows(store, info["key"])} == live, col
+        assert set(read_bloom_table(store, info["key"])["label"].to_pylist()) == live, col
     for col, key in meta.indices.items():
         table = store.read_parquet(key)
         plist = "partitions" if "partitions" in table.column_names else "partition"

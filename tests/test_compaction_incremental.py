@@ -95,26 +95,56 @@ def test_nothing_over_target_is_a_no_op(spark, tmp_path):
 
 
 def test_reads_only_over_target_groups(spark, tmp_path, monkeypatch):
-    """A partial compaction reads through a partition-key DNF of the
-    over-target groups; a full one passes no predicate at all."""
+    """Compaction scans exactly the loaded files of the over-target
+    groups — every group's when all are over target."""
     store = Store(str(tmp_path / "store"))
     _fragmented(spark, store)
     update_dataset_from_dataframe(spark, store, "inc", _rows(spark, 300, 310, ["b"]))
-    calls = []
-    real = ds_mod.read_dataset_as_dataframe
+    scanned = []
+    real = ds_mod._read_committed_files
 
-    def spy(spark_, store_, uuid_, **kw):
-        calls.append(kw)
-        return real(spark_, store_, uuid_, **kw)
+    def spy(spark_, store_, uuid_, schema_, parts_, **kw):
+        scanned.append({p.label for p in parts_})
+        return real(spark_, store_, uuid_, schema_, parts_, **kw)
 
-    monkeypatch.setattr(ds_mod, "read_dataset_as_dataframe", spy)
+    def labels_of(meta, groups):
+        return {l for l, p in meta.partitions.items() if p.key_values["g"] in groups}
+
+    monkeypatch.setattr(ds_mod, "_read_committed_files", spy)
+    before = DatasetMetadata.load(store, "inc")
     compact_dataset(spark, store, "inc")  # a: 4 files, b: 2, c: 1
-    assert calls == [{"predicates": [[("g", "==", "a")], [("g", "==", "b")]]}]
+    assert scanned == [labels_of(before, {"a", "b"})]
     update_dataset_from_dataframe(spark, store, "inc", _rows(spark, 400, 430, ["a", "b", "c"]))
-    calls.clear()
+    before = DatasetMetadata.load(store, "inc")
+    scanned.clear()
     compact_dataset(spark, store, "inc")  # every group at 2 files
-    assert calls == [{}]
+    assert scanned == [set(before.partitions)]
     assert _by_group(DatasetMetadata.load(store, "inc")) == {"a": 1, "b": 1, "c": 1}
+
+
+class CountingStore(Store):
+    def __init__(self, root):
+        super().__init__(root)
+        self.counts = {"get_json": 0}
+
+    def get_json(self, key):
+        self.counts["get_json"] += 1
+        return super().get_json(key)
+
+
+def test_compaction_and_repartition_load_the_commit_file_once(spark, tmp_path):
+    """The rewrite scans the partitions of the commit the call loaded:
+    one commit-file GET for the load, one for the optimistic commit's
+    conflict check — no second load to plan the read."""
+    store = CountingStore(str(tmp_path / "store"))
+    _fragmented(spark, store)
+    store.counts["get_json"] = 0
+    compact_dataset(spark, store, "inc")
+    assert store.counts["get_json"] == 2
+    store.counts["get_json"] = 0
+    ds_mod.repartition_dataset(spark, store, "inc", partition_on=[])
+    assert store.counts["get_json"] == 2
+    assert read_dataset_as_dataframe(spark, store, "inc").count() == 150
 
 
 def test_keyless_and_zorder_rewrite_everything(spark, tmp_path):
@@ -144,9 +174,9 @@ def test_keyless_and_zorder_rewrite_everything(spark, tmp_path):
 
 
 def test_nan_key_group_is_not_lost(spark, tmp_path):
-    """A NaN partition key never equals itself driver-side, so a
-    partition-key DNF would select none of its files: compaction falls
-    back to rewriting every group instead of dropping the NaN rows."""
+    """A NaN partition key never equals itself, so no key predicate
+    could select its group: compaction scans the loaded files of the
+    over-target groups by path, and the NaN group's rows are kept."""
     store = Store(str(tmp_path / "store"))
     mk = lambda rows: spark.createDataFrame(rows, "k long, x double")  # noqa: E731
     store_dataframe_as_dataset(
@@ -203,7 +233,7 @@ def test_pruned_reads_unchanged_and_no_false_negatives(spark, tmp_path):
         truth.setdefault(r["c"], set()).add(label_of[r["__file__"]])
     assert {v: set(idx.query(v)) for v in idx.observed_values()} == truth
     # ...and the Bloom sidecar covers every live label, stale ones dropped
-    from plateau_spark.plans.blooms import read_bloom_rows
+    from plateau_spark.plans.blooms import read_bloom_table
 
-    bloom_labels = {row[1] for row in read_bloom_rows(store, meta.blooms["k"]["key"])}
+    bloom_labels = set(read_bloom_table(store, meta.blooms["k"]["key"])["label"].to_pylist())
     assert bloom_labels == set(meta.partitions)

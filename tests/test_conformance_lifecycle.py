@@ -1029,11 +1029,11 @@ def test_compact_concurrent_append_raises_not_reverted(spark, lstore, monkeypatc
         spark, lstore, "ccr",
         spark.createDataFrame([(i,) for i in range(6)], "k long").repartition(3),
     )
-    real_read = ds_mod.read_dataset_as_dataframe
+    real_read = ds_mod._read_committed_files
     fired = {"done": False}
 
-    def interleaved_read(spark_, store_, uuid_, **kw):
-        out = real_read(spark_, store_, uuid_, **kw)
+    def interleaved_read(spark_, store_, uuid_, schema_, parts_, **kw):
+        out = real_read(spark_, store_, uuid_, schema_, parts_, **kw)
         if not fired["done"]:
             fired["done"] = True
             update_dataset_from_dataframe(
@@ -1042,9 +1042,10 @@ def test_compact_concurrent_append_raises_not_reverted(spark, lstore, monkeypatc
             )
         return out
 
-    monkeypatch.setattr(ds_mod, "read_dataset_as_dataframe", interleaved_read)
+    monkeypatch.setattr(ds_mod, "_read_committed_files", interleaved_read)
     with pytest.raises(ConcurrentCommitError):
         compact_dataset(spark, lstore, "ccr", target_files_per_key=1)
+    assert fired["done"]
     monkeypatch.undo()
     # the concurrent append survived untouched
     out = read_dataset_as_dataframe(spark, lstore, "ccr")

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 import plateau_spark.plans.index as index_mod
 import plateau_spark.sources.dataset as ds_mod
 from plateau_spark.core.metadata import DatasetMetadata
-from plateau_spark.plans.blooms import read_bloom_rows
+from plateau_spark.plans.blooms import read_bloom_table
 from plateau_spark.plans.index import SecondaryIndex
 from plateau_spark.sources.dataset import (
     delete_rows_from_dataset,
@@ -88,28 +88,117 @@ def test_index_sidecar_sorted_by_value(spark, store, monkeypatch, tier):
             assert len(values) == len(set(values))
 
 
+def _bloom_rows(store, key) -> set[tuple[int, str, int]]:
+    """A Bloom sidecar's (word, label, bits) rows."""
+    table = read_bloom_table(store, key)
+    return set(zip(*(table.column(c).to_pylist() for c in table.column_names)))
+
+
 def _refresh_both(spark, store, meta, parts, columns, removed=()):
     ds_mod._refresh_indices(spark, store, meta, parts, columns["index"], removed)
     ds_mod._refresh_blooms(spark, store, meta, parts, columns["bloom"], removed)
 
 
-@pytest.mark.parametrize("tiers", [("spark", "driver"), ("driver", "spark")])
-def test_cross_tier_build_then_merge_equals_driver_only(
-    spark, store, monkeypatch, tiers
-):
-    """A sidecar built on one tier and merged on the other equals the
-    all-driver sidecar: the same index dict per column (payload and
-    partition-key indices) and the same Bloom row set."""
+def _edge_frame(spark, lo, hi):
+    """Small integer types with negatives, empty and non-ASCII strings,
+    NULLs, and values repeated within and across files."""
+    words = F.array(*[F.lit(w) for w in ("", "ü", "naïve", "日本語", "a", "Z")])
+    return spark.range(lo, hi).select(
+        F.col("id").alias("k"),
+        (F.col("id") % 6).alias("grp"),
+        (F.lit(60) - F.col("id") % 121).cast("tinyint").alias("b"),
+        ((F.col("id") * 37) % 1001 - 500).cast("smallint").alias("s"),
+        F.when(F.col("id") % 5 == 0, None).otherwise(F.col("id") % 4 - 2).alias("n"),
+        F.when(F.col("id") % 7 == 0, None)
+        .otherwise(F.element_at(words, (F.col("id") % 5 + 1).cast("int")))
+        .alias("u"),
+    )
+
+
+def _case_base(spark, store):
     store_dataframe_as_dataset(
         spark, store, "xt", _frame(spark, 0, 240), partition_on=["grp"]
     )
     parts = sorted(
-        DatasetMetadata.load(store, "xt").partitions.values(),
-        key=lambda p: p.label,
+        DatasetMetadata.load(store, "xt").partitions.values(), key=lambda p: p.label
     )
     first, second = parts[:4], parts[4:]
-    removed = [first[0].label]
-    columns = {"index": ["num", "tag", "grp"], "bloom": ["k", "tag"]}
+    return first, second, [first[0].label]
+
+
+def _case_edge(spark, store):
+    store_dataframe_as_dataset(
+        spark, store, "xt", _edge_frame(spark, 0, 240), partition_on=["grp"]
+    )
+    update_dataset_from_dataframe(
+        spark, store, "xt", _edge_frame(spark, 240, 300), partition_on=["grp"]
+    )
+    parts = sorted(
+        DatasetMetadata.load(store, "xt").partitions.values(), key=lambda p: p.label
+    )
+    first, second = parts[:7], parts[7:]
+    return first, second, [first[0].label, first[3].label, first[5].label]
+
+
+def _case_evolved(spark, store):
+    """The build covers files written before column ``extra`` existed."""
+    store_dataframe_as_dataset(
+        spark, store, "xt", _frame(spark, 0, 120), partition_on=["grp"]
+    )
+    first = list(DatasetMetadata.load(store, "xt").partitions.values())
+    update_dataset_from_dataframe(
+        spark, store, "xt",
+        _frame(spark, 120, 240).withColumn(
+            "extra", F.concat(F.lit("é"), (F.col("k") % 9).cast("string"))
+        ),
+        partition_on=["grp"], schema_evolution=True,
+    )
+    labels = {p.label for p in first}
+    second = [
+        p for p in DatasetMetadata.load(store, "xt").partitions.values()
+        if p.label not in labels
+    ]
+    return first, second, [first[0].label]
+
+
+# case -> (setup, sidecar columns, an indexed column with a value in
+# every file, whose posting lists must cover every live label)
+CROSS_TIER_CASES = {
+    "base": (
+        _case_base, {"index": ["num", "tag", "grp"], "bloom": ["k", "tag"]}, "tag"
+    ),
+    "edge": (
+        _case_edge,
+        {"index": ["b", "s", "n", "u", "grp"], "bloom": ["b", "s", "n", "u"]},
+        "s",
+    ),
+    "evolved": (
+        _case_evolved, {"index": ["extra", "grp"], "bloom": ["extra"]}, "grp"
+    ),
+}
+
+
+@pytest.mark.parametrize(
+    "tiers, case",
+    [
+        # the base case keeps its original ids, tiers0 and tiers1
+        pytest.param(tiers, case, id=f"tiers{i}" + ("" if case == "base" else f"-{case}"))
+        for case in CROSS_TIER_CASES
+        for i, tiers in enumerate([("spark", "driver"), ("driver", "spark")])
+    ],
+)
+def test_cross_tier_build_then_merge_equals_driver_only(
+    spark, store, monkeypatch, tiers, case
+):
+    """A sidecar built on one tier and merged on the other equals the
+    all-driver sidecar: the same index dict per column (payload and
+    partition-key indices) and the same Bloom row set — for small and
+    negative integers, empty and non-ASCII strings, NULLs, repeated
+    values, several removed labels and a file that lacks an evolved
+    column."""
+    make, columns, covering = CROSS_TIER_CASES[case]
+    first, second, removed = make(spark, store)
+    parts = first + second
 
     def run(build_tier, merge_tier):
         meta = DatasetMetadata.load(store, "xt")
@@ -133,15 +222,16 @@ def test_cross_tier_build_then_merge_equals_driver_only(
                 for col in columns["index"]
             },
             {
-                col: set(read_bloom_rows(store, meta.blooms[col]["key"]))
+                col: _bloom_rows(store, meta.blooms[col]["key"])
                 for col in columns["bloom"]
             },
         )
 
     expected = run("driver", "driver")
     live = {p.label for p in parts} - set(removed)
-    assert {l for ls in expected[0]["tag"].values() for l in ls} == live
-    assert {r[1] for r in expected[1]["k"]} == live
+    assert {l for ls in expected[0][covering].values() for l in ls} == live
+    for col in columns["bloom"]:
+        assert {r[1] for r in expected[1][col]} == live, col
     assert run(*tiers) == expected
 
 
@@ -163,7 +253,7 @@ def test_kb_scale_mutations_stay_on_driver_tier(spark, store, monkeypatch):
     meta = DatasetMetadata.load(store, "kb")
     idx = SecondaryIndex.load(store, meta.indices["tag"], "tag")
     assert {l for ls in idx.index_dct.values() for l in ls} == set(meta.partitions)
-    bloom_labels = {r[1] for r in read_bloom_rows(store, meta.blooms["k"]["key"])}
+    bloom_labels = set(read_bloom_table(store, meta.blooms["k"]["key"])["label"].to_pylist())
     assert bloom_labels == set(meta.partitions)
 
 
