@@ -227,6 +227,15 @@ class DatasetMetadata:
         raise KeyError(f"Dataset does not exist. Tried {json_key} and {mp_key}")
 
     @classmethod
+    def load_if_exists(cls, store: Store, dataset_uuid: str) -> "DatasetMetadata | None":
+        """``load``, or None when the dataset has no commit file — one
+        probe fewer than ``exists`` followed by ``load``."""
+        try:
+            return cls.load(store, dataset_uuid)
+        except KeyError:
+            return None
+
+    @classmethod
     def _parse(cls, get, key: str) -> "DatasetMetadata":
         """Decode + validate one commit document, converting parse/shape
         failures into :class:`MetadataConsistencyError` naming the key.
@@ -318,8 +327,7 @@ class DatasetMetadata:
             )
         else:
             raise ValueError(f"Unknown storage_format: {storage_format!r}")
-        if store.exists(stale):
-            store.delete(stale)
+        store.delete(stale)  # a no-op when there is none
 
     def has_index(self, column: str) -> bool:
         return column in self.indices or column in self.embedded_indices

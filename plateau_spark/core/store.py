@@ -7,7 +7,8 @@ Hadoop FileSystem connectors natively (s3a:// abfss:// gs:// file://);
 this class only needs the *metadata-plane* operations: put/get small
 JSON blobs, list keys under a prefix, delete keys — O(1) remote calls
 per query plan, matching the reference's design goal
-(docs/spec/format_specification.rst:25-26).
+(docs/spec/format_specification.rst:25-26) — plus ``open_parquet`` for
+the commit harvest's driver placement (``plans/harvest.py``).
 
 Implementation: local paths use the Python stdlib (fast path for tests);
 any other scheme goes through the active SparkSession's Hadoop
@@ -217,8 +218,9 @@ class Store:
     def read_parquet(self, key: str, filters=None, columns=None):
         """Read a parquet file/directory under ``key`` into a pyarrow
         Table through the store abstraction — works on object stores
-        where pyarrow can't open ``s3a://`` URIs directly (metadata
-        plane only: index files, footers — never bulk data).
+        where pyarrow can't open ``s3a://`` URIs directly. Used for
+        sidecars (index and Bloom files), which are small by design;
+        data files go through ``open_parquet``.
 
         ``filters`` is a pyarrow.compute expression; on the local fast
         path it prunes row groups at read time, elsewhere it's applied
@@ -247,20 +249,24 @@ class Store:
             table = table.filter(filters)
         return table  # pragma: no cover
 
-    def parquet_schema(self, key: str):
-        """Arrow schema of the parquet file at ``key`` (footer only on
-        the local fast path). Used by the driver-tier sidecar builders
-        to decide whether a column is genuinely absent from a file
-        (schema evolution) rather than parsing pyarrow error strings,
-        whose wording is not a stable contract."""
-        import pyarrow as pa
+    def pyarrow_location(self, key: str) -> str:
+        """Where pyarrow itself opens ``key``, on the driver or on an
+        executor: the local path, or the URI with Hadoop's ``s3a://`` /
+        ``s3n://`` spelled ``s3://`` (pyarrow's native filesystems)."""
+        if self._is_local:
+            return self.path(key)
+        for scheme in ("s3a://", "s3n://"):  # pragma: no cover
+            if self.root.startswith(scheme):
+                return "s3://" + self.url(key)[len(scheme):]
+        return self.url(key)  # pragma: no cover
+
+    def open_parquet(self, key: str):
+        """The parquet file at ``key`` as an open ``pq.ParquetFile``: the
+        footer is read now, data pages only when asked for (the commit
+        harvest, ``plans/harvest.py``)."""
         import pyarrow.parquet as pq
 
-        if self._is_local:
-            return pq.ParquetFile(self.path(key)).schema_arrow
-        return pq.ParquetFile(  # pragma: no cover
-            pa.BufferReader(self._hadoop_get(key))
-        ).schema_arrow
+        return pq.ParquetFile(self.pyarrow_location(key))
 
     def iter_keys(self, prefix: str = "") -> Iterator[str]:
         """All keys (files) whose relative path starts with ``prefix``,

@@ -7,9 +7,9 @@ spans the full value range and nothing prunes. Secondary inverted
 indexes solve that exactly, but cost a full shuffle to build and grow
 with the data. A per-file Bloom filter is the middle tier (the
 Parquet/Iceberg bloom idea lifted to the driver-side planner): a fixed
-``n_bits`` bitmap per (file, column), built by one scan-side
-aggregation (no shuffle of values — map-side ``bit_or`` partials), that
-lets the planner drop files for ``==`` / ``in`` literals before Spark
+``n_bits`` bitmap per (file, column), built file by file in the commit
+harvest (``plans/harvest.py``; no shuffle of values), that lets the
+planner drop files for ``==`` / ``in`` literals before Spark
 schedules a single task. False positives only cost an extra file scan;
 false negatives are impossible, and files written without a bloom
 (other formats, pre-existing commits) are never pruned.
@@ -22,10 +22,13 @@ so the planner reads O(k × matching row groups) via pyarrow filters,
 never the whole sidecar (same discipline as ``SecondaryIndex.load``).
 At 8192 bits (default) the sidecar is ≤ ~1 KB per file per column.
 
-Hashing is md5-derived (``pmod(conv(substr(md5(value|i),1,15),16,10),
-n_bits)``) — computed by JVM codegen at build time and replayed
-bit-identically in Python at plan time (and in any other engine), so
-the sidecar is portable and the planner needs no Spark session.
+Hashing is md5-derived: one md5 of the value's string rendering, h1 and
+h2 from its first two 15-hex-digit slices (h2 forced odd), positions
+``(h1 + i*h2) % n_bits`` for i < k — the same bits as Spark SQL's
+``pmod(conv(substring(md5(v), 1, 15), 16, 10) + i * h2, n_bits)``. The
+build computes them with numpy (``bloom_position_array``), the planner
+with ``bloom_positions``, and any other engine can replay them, so the
+sidecar is portable and the planner needs no Spark session.
 """
 
 from __future__ import annotations
@@ -36,13 +39,13 @@ from typing import Any, Sequence
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from plateau_spark.core import naming
 from plateau_spark.core.store import Store
-from plateau_spark.plans.index import _utc_ts, index_value_kind, read_column_driver
+from plateau_spark.plans.index import _utc_ts
 
 N_BITS_DEFAULT = 1 << 13  # 8192 bits = 1 KB per file per column
 K_DEFAULT = 5
@@ -90,37 +93,10 @@ HASH_FAMILY = "md5-km"  # Kirsch-Mitzenmacher double hashing over one md5
 _K_MAX = 7  # (k-1)*h2 + h1 must stay under 2^63 with 60-bit h1/h2
 
 
-def _double_hash_cols(column: str) -> tuple[Column, Column]:
-    """(h1, h2) Kirsch-Mitzenmacher bases as codegen expressions. Keep
-    these HOISTED into their own projection before the position array:
-    generator (explode) inputs are never subexpression-eliminated, so
-    inlining the md5+conv chain into k array slots re-evaluates it 2k
-    times per row (measured 3-4× the build time)."""
-    h = F.md5(F.encode(F.col(column).cast("string"), "UTF-8"))
-    h1 = F.conv(F.substring(h, 1, 15), 16, 10).cast("long")
-    # force h2 odd so a zero/even stride can't degenerate the probe walk
-    h2 = F.conv(F.substring(h, 16, 15), 16, 10).cast("long").bitwiseOR(F.lit(1))
-    return h1, h2
-
-
-def _position_cols(column: str, n_bits: int, k: int) -> list[Column]:
-    """k bit positions as codegen expressions — ONE JVM md5 per value,
-    positions derived by double hashing (h1 + i*h2: Kirsch-Mitzenmacher,
-    asymptotically as good as k independent hashes). NOTE: referencing
-    these k expressions in one projection re-evaluates the hash chain
-    per slot (fine for tests/small frames); the build path uses
-    ``_double_hash_cols`` with an explicit hoist projection instead."""
-    if k > _K_MAX:
-        raise ValueError(f"k must be <= {_K_MAX}, got {k}")
-    h1, h2 = _double_hash_cols(column)
-    return [
-        F.pmod(h1 + F.lit(i) * h2, F.lit(int(n_bits))) for i in range(k)
-    ]
-
-
 def bloom_positions(value: Any, n_bits: int, k: int) -> list[int]:
-    """Python twin of ``_position_cols`` — bit-identical by construction
-    (md5 of the same rendered string, same double-hash walk)."""
+    """The k bit positions of ``value``: md5 of its rendered string, then
+    the double-hash walk (h1 + i*h2: Kirsch-Mitzenmacher, asymptotically
+    as good as k independent hashes)."""
     hx = hashlib.md5(str(value).encode()).hexdigest()
     h1 = int(hx[:15], 16)
     h2 = int(hx[15:30], 16) | 1
@@ -152,140 +128,23 @@ def bloom_position_array(values: pa.Array, n_bits: int, k: int) -> np.ndarray:
     return (h1[:, None] + steps[None, :] * h2[:, None]) % np.uint64(n_bits)
 
 
-def build_bloom_dataframe(
-    spark: SparkSession,
-    store: Store,
-    partitions: Sequence,
-    column: str,
-    *,
-    n_bits: int = N_BITS_DEFAULT,
-    k: int = K_DEFAULT,
-    dtype: T.DataType | None = None,
-) -> DataFrame:
-    """(word, label, bits) rows for the given partitions' parquet files.
-
-    One scan of ONLY ``column`` (explicit paths, projection-pruned) →
-    k codegen hash positions per value → ``groupBy(label, word)``
-    ``bit_or`` — the partial aggregation ORs bitmap words map-side, so
-    the exchange carries at most ``n_bits/64`` longs per file
-    regardless of row count. Non-parquet files get no rows (and no
-    coverage marker), so the planner never prunes them.
-    """
-    pq = [p for p in partitions if p.file.endswith(".parquet")]
-    cover = [(COVERAGE_WORD, p.label, 0) for p in pq]
-    schema = "word int, label string, bits long"
-    if not pq:
-        return spark.createDataFrame([], schema)
-    file_to_label = [(store.url(p.file), p.label) for p in pq]
-    mapping = spark.createDataFrame(file_to_label, "___file string, label string")
-    # explicit single-column schema (when the caller knows the type):
-    # projection-pruned scan, and a file predating an evolved column
-    # reads NULL → zero bits + a coverage marker → correctly pruned for
-    # every non-null literal (no rows there can match)
-    reader = spark.read
-    if dtype is not None:
-        reader = reader.schema(T.StructType([T.StructField(column, dtype, True)]))
-    scan = (
-        reader.parquet(*[u for u, _ in file_to_label])
-        .select(F.col(column), F.input_file_name().alias("___file"))
-        .where(F.col(column).isNotNull())
-    )
-    if k > _K_MAX:
-        raise ValueError(f"k must be <= {_K_MAX}, got {k}")
-    h1, h2 = _double_hash_cols(column)
-    rows = (
-        scan.join(F.broadcast(mapping), "___file")
-        # hoist the md5+conv bases into their own projection: explode
-        # inputs are never subexpression-eliminated, so inlining the
-        # chain into k array slots costs 2k evaluations per row
-        # (measured 3-4x the single-file build time)
-        .select("label", h1.alias("__h1__"), h2.alias("__h2__"))
-        .select(
-            "label",
-            F.explode(
-                F.array(
-                    *[
-                        F.pmod(
-                            F.col("__h1__") + F.lit(i) * F.col("__h2__"),
-                            F.lit(int(n_bits)),
-                        )
-                        for i in range(k)
-                    ]
-                )
-            ).alias("__pos__"),
-        )
-        .select(
-            F.shiftright(F.col("__pos__"), 6).cast("int").alias("word"),
-            F.col("label"),
-            # shiftleft() only takes a literal shift in the Python API —
-            # the variable-amount shift goes through expr()
-            F.expr("shiftleft(CAST(1 AS BIGINT), CAST(__pos__ % 64 AS INT))").alias(
-                "__bit__"
-            ),
-        )
-        .groupBy("word", "label")
-        .agg(F.bit_or("__bit__").alias("bits"))
-    )
-    return rows.unionByName(spark.createDataFrame(cover, schema))
-
-
-# --- driver tier (small commits) ------------------------------------------
-#
-# A KB-scale commit's Bloom rows are folded on the driver: the new files'
-# column comes from the one gated pyarrow reader shared with the index
-# sidecars (``plans/index.py`` ``read_column_driver``: at most 16 files,
-# 8 MiB and 50,000 rows), ``bloom_position_array`` — the vector form of
-# the bit-identical twin of the codegen hash chain — gives every
-# value's k positions, and one ``np.bitwise_or.at`` per file sets the
-# bits, so the rows equal ``build_bloom_dataframe``'s and a commit pays
-# zero Spark jobs. The merge and the write stay Arrow tables
-# (``BLOOM_SCHEMA``). Over the gate the refresh (``sources/dataset.py``
-# ``_refresh_blooms``) runs the Spark job instead.
-
 BLOOM_SCHEMA = pa.schema(
     [("word", pa.int32()), ("label", pa.string()), ("bits", pa.int64())]
 )
 
 
-def build_bloom_rows_driver(
-    store: Store,
-    partitions: Sequence,
-    column: str,
-    *,
-    n_bits: int,
-    k: int,
-) -> "pa.Table | None":
-    """Driver-tier twin of ``build_bloom_dataframe``: the same (word,
-    label, bits) rows as a ``BLOOM_SCHEMA`` table — bit-identical, bits
-    stored as signed int64 like the Spark path's two's-complement
-    ``bit_or`` — or None when the parquet files do not fit the driver
-    gate or hold a column that is neither integer nor string (caller
-    takes the Spark job). Non-parquet files get no rows, exactly like
-    the Spark path; a file missing the column (pre-evolution) yields
-    only its coverage marker (the Spark path's explicit-schema NULL
-    read does the same)."""
-    if k > _K_MAX:
-        raise ValueError(f"k must be <= {_K_MAX}, got {k}")
-    columns = read_column_driver(
-        store, [p for p in partitions if p.file.endswith(".parquet")], column
-    )
-    if columns is None:
-        return None
-    words = np.zeros((len(columns), (int(n_bits) + 63) >> 6), np.uint64)
-    for i, (_, values) in enumerate(columns):
-        values = values.drop_null()
-        if not len(values):
-            continue
-        if index_value_kind(values.type) is None:
-            return None
-        pos = bloom_position_array(values, n_bits, k).ravel()
-        np.bitwise_or.at(
-            words[i], (pos >> np.uint64(6)).astype(np.intp),
-            np.uint64(1) << (pos & np.uint64(63)),
-        )
-    file_of, word = np.nonzero(words)
-    n_files = len(columns)
-    labels = pa.array([p.label for p, _ in columns], pa.string())
+def build_bloom_rows_driver(words: Sequence[tuple[str, np.ndarray]]) -> "pa.Table":
+    """The sidecar rows of ``(label, uint64 bitmap words)`` per file (the
+    commit harvest's Bloom words, ``plans/harvest.py``) as a
+    ``BLOOM_SCHEMA`` table: one row per non-zero word, bits stored as
+    signed int64 (two's complement), plus one coverage row per file.
+    Both harvest placements build their rows here."""
+    if not words:
+        return BLOOM_SCHEMA.empty_table()
+    bitmap = np.stack([w for _, w in words])
+    file_of, word = np.nonzero(bitmap)
+    n_files = len(words)
+    labels = pa.array([label for label, _ in words], pa.string())
     return pa.table(
         {
             "word": np.concatenate(
@@ -293,11 +152,20 @@ def build_bloom_rows_driver(
             ).astype(np.int32),
             "label": labels.take(np.concatenate([file_of, np.arange(n_files)])),
             "bits": np.concatenate(
-                [words[file_of, word].view(np.int64), np.zeros(n_files, np.int64)]
+                [bitmap[file_of, word].view(np.int64), np.zeros(n_files, np.int64)]
             ),
         },
         schema=BLOOM_SCHEMA,
     )
+
+
+def build_bloom_dataframe(frame: DataFrame, column: str) -> DataFrame:
+    """The Spark twin of ``build_bloom_rows_driver``: ``column``'s
+    (word, label, bits) rows from a Spark-placed harvest's frame
+    (``plans/harvest.py``, rows of kind ``bloom``)."""
+    return frame.where(
+        (F.col("kind") == "bloom") & (F.col("col") == column)
+    ).select("word", "label", "bits")
 
 
 def read_bloom_table(store: Store, key: str) -> pa.Table:
@@ -308,7 +176,7 @@ def read_bloom_table(store: Store, key: str) -> pa.Table:
 def persist_bloom_rows(
     rows: "pa.Table", store: Store, dataset_uuid: str, column: str
 ) -> str:
-    """Driver-tier twin of ``persist_bloom_dataframe``: the
+    """Driver twin of ``persist_bloom_dataframe``: the
     ``BLOOM_SCHEMA`` rows as one small parquet file, sorted by (word,
     label) so a k-word lookup prunes row groups; returns the store key.
     The schema matches the Spark writer's so ``load_bloom_words`` and

@@ -11,15 +11,13 @@ Lifecycle — one refresh per commit (``sources/dataset.py``
 ``_refresh_indices``; reference update_indices_from_partitions +
 merge_indices, plateau/io_components/write.py:93-118):
 
-  refresh — the (value, label) pairs of the new partitions, plus the old
-            sidecar's pairs minus the removed labels, aggregated to
+  refresh — the (value, label) pairs of the new partitions (the commit
+            harvest, ``plans/harvest.py``: ``pc.unique`` per file), plus
+            the old sidecar's pairs minus the removed labels, folded to
             (value, sorted label array) and written as a new sidecar
             sorted by value. A build is a refresh with no old sidecar.
-            Small inputs take the driver tier (``read_column_driver``,
-            the one gate shared with the Bloom sidecars): pyarrow reads
-            and one Arrow sort of the pairs, zero Spark jobs. Anything
-            larger runs one Spark job per column
-            (``SecondaryIndex.build_dataframe`` over the unioned pairs,
+            The fold is ``persist_index_dict`` on the driver, else one
+            Spark job (``SecondaryIndex.build_dataframe``,
             ``persist_index_dataframe``).
   load    — driver-side pyarrow read of ONE small parquet, restricted
             via row-group filters to the literals of the current query
@@ -199,7 +197,7 @@ class SecondaryIndex:
 
 
 # ---------------------------------------------------------------------------
-# Sidecar writers and the driver tier
+# Sidecar writers and the driver fold
 # ---------------------------------------------------------------------------
 
 
@@ -209,7 +207,7 @@ def persist_index_dataframe(
     """Persist a (column, partitions) index DataFrame; returns the store
     key. One small file by design — plan-time loads must be one GET
     (docs/spec/indexing.rst:9-18) — sorted by value like the driver
-    tier's ``persist_index_dict``, so a value-filtered
+    fold's ``persist_index_dict``, so a value-filtered
     ``SecondaryIndex.load`` prunes row groups. repartition(1), NOT
     coalesce(1): coalesce removes the post-shuffle parallelism so the
     whole index aggregation would run in a single reduce task; the extra
@@ -224,122 +222,8 @@ def persist_index_dataframe(
     return key
 
 
-# --- the driver tier: one gate for index and Bloom sidecars ---------------
-#
-# A streaming micro-batch or small append commits a handful of KB-scale
-# parquet files, and a Spark job per sidecar column (scan of the new
-# files + exchange + sidecar write) is pure scheduling floor at that
-# size. So every sidecar refresh (sources/dataset.py ``_refresh_indices``
-# and ``_refresh_blooms``) first reads the new files' column with
-# pyarrow through ``read_column_driver`` and folds it on the driver, with
-# Arrow compute and numpy kernels, into the exact rows the Spark tier
-# writes; the old sidecar's rows are merged in when
-# ``sidecar_fits_driver``. Anything over the gate runs one Spark job per
-# column, so corpus-scale builds stay distributed. The row cap was set
-# where a per-value Python fold met a Spark job's ~0.2-0.3 s scheduling
-# floor. Read included, on one pinned core over 48,000 distinct int64 or
-# string values in 8 files, that fold took ~8-9 us per value for a Bloom
-# and ~6-8 us for an index build; the columnar fold takes ~1.3 us for a
-# Bloom (one md5 per value; the positions and ORs are numpy) and
-# ~0.9-1.6 us for an index build. So the cap is conservative, and
-# commits still sit orders of magnitude on either side of it.
-
-DRIVER_MAX_FILES = 16
-DRIVER_MAX_BYTES = 8 << 20
-DRIVER_MAX_ROWS = 50_000
-
-
-def column_in_footer(store: Store, key: str, column: str) -> bool:
-    """True iff the parquet footer schema at ``key`` contains
-    ``column``. Errors reading the footer count as 'present' so the
-    caller falls back to the Spark path rather than silently treating
-    the file as contributing nothing."""
-    try:
-        return column in set(store.parquet_schema(key).names)
-    except Exception:  # noqa: BLE001 — unreadable footer → Spark path
-        return True
-
-
-def read_column_driver(
-    store: Store, partitions: Sequence, column: str
-) -> "list[tuple[Any, pa.Array]] | None":
-    """``[(partition, column as one pyarrow array)]``, or None when the
-    partitions do not fit the driver gate (more than
-    ``DRIVER_MAX_FILES`` files, any non-parquet file, more than
-    ``DRIVER_MAX_BYTES`` of data or ``DRIVER_MAX_ROWS`` rows, or an
-    unreadable file): the caller then takes the Spark tier. A file
-    missing the column (pre-evolution) yields an empty array, exactly
-    like the Spark tier's explicit-schema NULL read; dictionary-encoded
-    columns come back decoded."""
-    parts = list(partitions)
-    if len(parts) > DRIVER_MAX_FILES or not all(
-        p.file.endswith(".parquet") for p in parts
-    ):
-        return None
-    try:
-        if sum(store.size(p.file) for p in parts) > DRIVER_MAX_BYTES:
-            return None
-    except OSError:
-        return None
-    if getattr(store, "_is_local", False):
-        # footer-only row precheck, free on a local store
-        import pyarrow.parquet as pqt
-
-        try:
-            if (
-                sum(
-                    pqt.ParquetFile(store.path(p.file)).metadata.num_rows
-                    for p in parts
-                )
-                > DRIVER_MAX_ROWS
-            ):
-                return None
-        except OSError:
-            return None
-    out: list[tuple[Any, pa.Array]] = []
-    n_read = 0
-    for p in parts:
-        try:
-            table = store.read_parquet(p.file, columns=[column])
-            values = table.column(column).combine_chunks()
-        except (KeyError, OSError):
-            values = pa.nulls(0)
-        except Exception:  # noqa: BLE001 — pyarrow read errors
-            # decide "evolved column absent from this file" from the
-            # parquet footer schema, not the exception wording (which
-            # pyarrow does not keep stable across releases); any other
-            # failure takes the Spark tier
-            if column_in_footer(store, p.file, column):
-                return None
-            values = pa.nulls(0)
-        if pa.types.is_dictionary(values.type):
-            values = values.dictionary_decode()
-        # object-store guard (no free footer precheck there)
-        n_read += len(values)
-        if n_read > DRIVER_MAX_ROWS:
-            return None
-        out.append((p, values))
-    return out
-
-
-def sidecar_fits_driver(store: Store, key: str) -> bool:
-    """True iff the sidecar at ``key`` (a file, or a directory of part
-    files as the Spark writer lays them out) is at most
-    ``DRIVER_MAX_BYTES``, so the driver tier may read it whole."""
-    import os
-
-    try:
-        if getattr(store, "_is_local", False) and os.path.isdir(store.path(key)):
-            size = sum(store.size(k) for k in store.iter_keys(key.rstrip("/") + "/"))
-        else:
-            size = store.size(key)
-    except OSError:
-        return False
-    return size <= DRIVER_MAX_BYTES
-
-
 def index_value_kind(arrow_type) -> "type | None":
-    """``int`` or ``str`` for the value types the driver tier may merge,
+    """``int`` or ``str`` for the value types the driver fold may merge,
     else None: Arrow equality must provably match Spark groupBy equality
     (floats normalize NaN, nested types have no total order, a bool is
     not an integer). Widths of one kind (int32 and int64, string and
@@ -352,32 +236,21 @@ def index_value_kind(arrow_type) -> "type | None":
 
 
 def build_index_pairs_driver(
-    store: Store, partitions: Sequence, column: str
-) -> "pa.Table | None":
-    """The distinct ``(column, LABEL_COL)`` pairs of the given
-    partitions' files as one Arrow table (``pc.unique`` over each file's
-    non-null values), or None when they do not fit the driver gate
-    (``read_column_driver``) or hold values of no single integer or
-    string kind."""
-    columns = read_column_driver(store, partitions, column)
-    if columns is None:
-        return None
-    uniques = [(p, pc.unique(values.drop_null())) for p, values in columns]
-    uniques = [(p, u) for p, u in uniques if len(u)]
-    types = {u.type for _, u in uniques}
-    kinds = {index_value_kind(t) for t in types}
-    if None in kinds or len(kinds) > 1:
-        return None
-    if len(types) > 1:
-        # one kind in several widths (an evolved column): one common type
-        common = pa.int64() if kinds == {int} else pa.string()
-        uniques = [(p, u.cast(common)) for p, u in uniques]
-    labels = pa.array([p.label for p, _ in uniques], pa.string())
+    uniques: Sequence[tuple[str, "pa.Array"]], column: str, value_type
+) -> "pa.Table":
+    """The ``(column, LABEL_COL)`` pairs of a driver-placed harvest as
+    one Arrow table: each ``(label, distinct non-null values)`` of a
+    file (``plans/harvest.py`` ``harvest_file``), the values cast to
+    ``value_type``. Pairs are distinct: each file's values are unique
+    under its own label."""
+    uniques = [(label, u.cast(value_type)) for label, u in uniques if len(u)]
+    labels = pa.array([label for label, _ in uniques], pa.string())
     file_of = np.repeat(np.arange(len(uniques)), [len(u) for _, u in uniques])
     return pa.table(
         {
             column: (
-                pa.concat_arrays([u for _, u in uniques]) if uniques else pa.nulls(0)
+                pa.concat_arrays([u for _, u in uniques])
+                if uniques else pa.array([], value_type)
             ),
             LABEL_COL: labels.take(file_of),
         }
@@ -387,24 +260,23 @@ def build_index_pairs_driver(
 def persist_index_dict(
     pairs: "pa.Table", store: Store, dataset_uuid: str, column: str
 ) -> str:
-    """Driver-tier twin of ``persist_index_dataframe``: folds the
-    ``(column, LABEL_COL)`` pairs (duplicates allowed) into the same
-    (value, sorted label array) rows — distinct pairs, one
-    ``sort_by(value, label)``, one posting list per run of equal values
-    — sorted by value (row-group pruning), one small parquet file;
-    returns the store key. The value column keeps the pairs' type."""
+    """Driver twin of ``persist_index_dataframe``: folds the distinct
+    ``(column, LABEL_COL)`` pairs into the same (value, sorted label
+    array) rows — one ``sort_by(value, label)``, one posting list per
+    run of equal values — sorted by value (row-group pruning), one
+    small parquet file; returns the store key. The value column keeps
+    the pairs' type. The pairs are distinct by construction: a file's
+    values are ``pc.unique`` under its own label, a partition key gives
+    one pair per label, and the old sidecar only labels outside the
+    commit."""
     import io
 
     import pyarrow.parquet as pqt
 
-    distinct = (
-        pairs.group_by([column, LABEL_COL], use_threads=False)
-        .aggregate([])
-        .sort_by([(column, "ascending"), (LABEL_COL, "ascending")])
-    )
-    runs = pc.run_end_encode(distinct.column(column).combine_chunks())
+    ordered = pairs.sort_by([(column, "ascending"), (LABEL_COL, "ascending")])
+    runs = pc.run_end_encode(ordered.column(column).combine_chunks())
     offsets = pa.concat_arrays([pa.array([0], pa.int32()), runs.run_ends])
-    labels = distinct.column(LABEL_COL).combine_chunks()
+    labels = ordered.column(LABEL_COL).combine_chunks()
     table = pa.table(
         {column: runs.values, "partitions": pa.ListArray.from_arrays(offsets, labels)}
     )

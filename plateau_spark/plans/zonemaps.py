@@ -12,9 +12,10 @@ the stats column (range-repartitioned or sorted writes) — for hash-
 scattered columns every file spans the full range and nothing prunes
 (correct, just not helpful).
 
-Scale shape: collection is one Arrow-batched ``mapInPandas`` job over
-the new files' footers (same machinery as ``collect_dataset_metadata``)
-and the driver keeps |partitions|·|columns| triples — metadata-scale.
+Scale shape: the stats come from each new file's footer in the commit
+harvest (``plans/harvest.py``: on the driver for small commits, in its
+Spark job otherwise) and the driver keeps |partitions|·|columns|
+triples — metadata-scale.
 
 Columns are restricted to numeric/date/timestamp/boolean types: parquet
 string statistics may be truncated by writers, and a truncated max
@@ -25,10 +26,8 @@ from __future__ import annotations
 
 from typing import Any, Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from plateau_spark.core.store import Store
 
 _STATS_OK_TYPES = (
     T.ByteType,
@@ -62,33 +61,19 @@ def validate_zone_map_columns(
     return list(columns)
 
 
-# Below this many files, footers are read on the driver (thread pool —
-# the cost is object-store GET latency, not CPU) instead of paying a
-# Spark job + Python-worker round trip (~2 s fixed overhead on local
-# mode). A streaming micro-batch commits a handful of files; compaction
-# and bulk writes cross the threshold and go distributed.
-DRIVER_FOOTER_TIER = 64
-
-
-def _footer_stats_for_file(url: str, columns: Sequence[str]):
-    """Per-file footer harvest: [(col, mn_repr, mx_repr, nulls)].
-
-    No data pages touched. A column chunk without recorded min/max
-    yields ``(None, None, null_count)`` — the planner treats missing
-    bounds as unprunable, never wrong.
-    """
+def footer_stats(pf, columns: Sequence[str]) -> dict[str, list]:
+    """``{column: [min, max, null_count]}`` of one open parquet file,
+    from its footer alone (the commit harvest, ``plans/harvest.py``).
+    A column chunk without recorded min/max yields ``[None, None,
+    null_count]`` — the planner treats missing bounds as unprunable,
+    never wrong. Columns the file lacks are left out."""
     import math
-
-    import pyarrow.parquet as _pq
-
-    from plateau_spark.operators.dataflow import _pyarrow_location
 
     def _nan(v):
         return isinstance(v, float) and math.isnan(v)
 
-    pf = _pq.ParquetFile(_pyarrow_location(url))
     names = {c: i for i, c in enumerate(pf.schema_arrow.names)}
-    out = []
+    out = {}
     for col in columns:
         ci = names.get(col)
         if ci is None:
@@ -125,72 +110,20 @@ def _footer_stats_for_file(url: str, columns: Sequence[str]):
             mx = st.max if mx is None or st.max > mx else mx
         if not have_bounds:
             mn = mx = None
-        out.append((col, repr_stat(mn), repr_stat(mx), nulls))
+        out[col] = [mn, mx, nulls]
     return out
 
 
-def collect_partition_stats(
-    spark: SparkSession,
-    store: Store,
-    partitions: Sequence,
-    columns: Sequence[str],
-) -> dict[str, dict[str, list]]:
-    """label → {column: [min, max, null_count]} from parquet footers.
-
-    Size-tiered: ≤ ``DRIVER_FOOTER_TIER`` files are read by a driver
-    thread pool (micro-batch commits — saves a fixed Spark-job +
-    Python-worker round trip per batch); larger file lists go through
-    one distributed footer-read job. Same harvest code either way
-    (``_footer_stats_for_file``); non-parquet files are skipped.
-    """
-    columns = list(columns)
-    rows = [
-        (p.label, store.url(p.file))
-        for p in partitions
-        if p.file.endswith(".parquet")
-    ]
-    if not rows or not columns:
-        return {}
-
-    if len(rows) <= DRIVER_FOOTER_TIER:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(len(rows), 16)) as pool:
-            per_file = pool.map(
-                lambda lr: (lr[0], _footer_stats_for_file(lr[1], columns)), rows
-            )
-        collected = [
-            {"label": label, "col": col, "mn": mn, "mx": mx, "nulls": nulls}
-            for label, stats in per_file
-            for col, mn, mx, nulls in stats
-        ]
-    else:
-        paths_df = spark.createDataFrame(
-            rows, "label string, url string"
-        ).repartition(min(len(rows), 256))
-
-        def footer_stats(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                out = []
-                for label, url in zip(pdf["label"], pdf["url"]):
-                    for col, mn, mx, nulls in _footer_stats_for_file(url, columns):
-                        out.append((label, col, mn, mx, nulls))
-                yield pd.DataFrame(
-                    out, columns=["label", "col", "mn", "mx", "nulls"]
-                )
-
-        collected = paths_df.mapInPandas(
-            footer_stats, "label string, col string, mn string, mx string, nulls long"
-        ).collect()
-
+def collect_partition_stats(harvested) -> dict[str, dict[str, list]]:
+    """label → {column: [min, max, null_count]}: the zone maps a commit
+    harvest (``plans/harvest.py``) read from its files' footers, from
+    its driver results or from the ``stats`` rows of its Spark job."""
+    if harvested.on_driver:
+        return {label: stats for label, stats, _, _ in harvested.files if stats}
     out: dict[str, dict[str, list]] = {}
-    for r in collected:
+    for r in harvested.frame.where(F.col("kind") == "stats").collect():
         out.setdefault(r["label"], {})[r["col"]] = [
-            unrepr_stat(r["mn"]),
-            unrepr_stat(r["mx"]),
-            r["nulls"],
+            unrepr_stat(r["mn"]), unrepr_stat(r["mx"]), r["nulls"]
         ]
     return out
 
@@ -269,7 +202,7 @@ def literal_may_match_stats(op: str, val: Any, stat: list) -> bool:
       - ``==``/``in`` with non-NaN literals stay sound (NaN == v is
         false for finite v); a NaN literal never prunes.
     NaN bounds themselves are discarded at collection time
-    (``collect_partition_stats``) — bounds here are NaN-free.
+    (``footer_stats``) — bounds here are NaN-free.
     """
     mn, mx, nulls = stat
     if op in ("==", "=") and val is None:  # IS NULL

@@ -27,6 +27,7 @@ import posixpath
 from concurrent.futures import ThreadPoolExecutor
 from typing import Any, Callable, Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -58,16 +59,21 @@ from plateau_spark.sources.serializers import (
     read_files,
     write_staged,
 )
+from plateau_spark.plans.harvest import (
+    Harvest,
+    Request,
+    harvest,
+    sidecar_fits_driver,
+)
 from plateau_spark.plans.index import (
     LABEL_COL,
     SecondaryIndex,
-    build_index_pairs_driver,
     index_value_kind,
     persist_index_dataframe,
     persist_index_dict,
-    sidecar_fits_driver,
 )
 from plateau_spark.plans.pruning import plan_scan
+from plateau_spark.plans.zonemaps import collect_partition_stats
 
 
 def _table_prefix(dataset_uuid: str) -> str:
@@ -551,25 +557,46 @@ def _resolve_metadata(md):
     return md() if callable(md) else md
 
 
-def _empty_index_df(
-    spark: SparkSession, metadata: DatasetMetadata, column: str
-) -> DataFrame:
-    from pyspark.sql import types as T
+def _declare_blooms(
+    meta: DatasetMetadata,
+    columns: Sequence[str] | None,
+    n_bits: int | None = None,
+    k: int | None = None,
+) -> list[str]:
+    """Give each of ``columns`` without a ``meta.blooms`` entry a keyless
+    one with ``n_bits``/``k`` (the defaults when None); returns those
+    columns, whose sidecars are still to be built."""
+    from plateau_spark.plans.blooms import HASH_FAMILY, K_DEFAULT, N_BITS_DEFAULT
 
-    value_field = metadata.schema[column] if metadata.schema is not None else T.StructField(column, T.StringType())
-    schema = T.StructType(
-        [
-            T.StructField(column, value_field.dataType),
-            T.StructField("partitions", T.ArrayType(T.StringType())),
-        ]
+    new = [c for c in dict.fromkeys(columns or ()) if c not in meta.blooms]
+    for c in new:
+        meta.blooms[c] = {
+            "key": None,
+            "n_bits": N_BITS_DEFAULT if n_bits is None else int(n_bits),
+            "k": K_DEFAULT if k is None else int(k),
+            "hash": HASH_FAMILY,
+        }
+    return new
+
+
+def _harvest_request(
+    meta: DatasetMetadata, stats: Sequence[str], index: Sequence[str], bloom: Sequence[str]
+) -> Request:
+    """What the commit harvest reads from a file: zone maps of ``stats``,
+    the pairs of the payload columns of ``index`` (a partition-key index
+    takes its pairs from key_values) and the words of ``bloom``."""
+    return Request(
+        tuple(stats),
+        tuple(c for c in index if c not in meta.partition_keys),
+        tuple((c, int(meta.blooms[c]["n_bits"]), int(meta.blooms[c]["k"])) for c in bloom),
     )
-    return spark.createDataFrame([], schema=schema)
 
 
 def _refresh_indices(
     spark: SparkSession,
     store: Store,
     meta: DatasetMetadata,
+    harvested: Harvest,
     partitions: Sequence[Partition],
     columns: Sequence[str],
     removed: Sequence[str] = (),
@@ -584,51 +611,48 @@ def _refresh_indices(
     merge_indices (plateau/io_components/write.py:93-118,
     plateau/core/index.py:760-791).
 
-    Per column the driver tier (``_index_pairs_driver``, zero Spark jobs)
-    runs when the new files fit the gate of ``plans/index.py``
-    ``read_column_driver`` and the old sidecar fits its byte budget;
-    otherwise ONE Spark job unions the new pairs with the old sidecar's
-    pairs and aggregates once. A partition-key index takes its new pairs
-    from the commit file's key_values, never from the data.
+    The new pairs come from the commit harvest ``harvested``; a
+    partition-key index takes them from the commit file's key_values.
+    The fold stays on the driver (``_index_pairs_driver``,
+    ``persist_index_dict``: zero Spark jobs) for a driver-placed harvest
+    of integer or string values over parquet files whose old sidecar
+    fits ``sidecar_fits_driver``; otherwise ONE Spark job unions the new
+    pairs with the old sidecar's and aggregates once. Non-parquet files,
+    which the harvest cannot open, are scanned by that job.
     """
     parts = list(partitions)
+    columns = list(dict.fromkeys(columns))
     rm = {str(x) for x in removed}
     key_cols = set(meta.partition_keys)
-    scan = None
-    for col in dict.fromkeys(columns):
+    others = [p for p in parts if not p.file.endswith(".parquet")]
+    for col in columns:
         old_key = meta.indices.get(col)
-        pairs = _index_pairs_driver(store, meta, parts, col, old_key, rm)
+        new = _key_pairs(parts, col) if col in key_cols else harvested.index_pairs(col)
+        pairs = None
+        if isinstance(new, pa.Table) and (col in key_cols or not others):
+            pairs = _index_pairs_driver(store, meta, new, col, old_key, rm)
         if pairs is not None:
             key = persist_index_dict(pairs, store, meta.uuid, col)
         else:
-            if not parts:
-                pairs = _empty_index_df(spark, meta, col).select(
-                    F.col(col), F.explode("partitions").alias(LABEL_COL)
-                )
-            elif col in key_cols:
+            schema = T.StructType(
+                [meta.schema[col], T.StructField(LABEL_COL, T.StringType())]
+            )
+            if col in key_cols:
                 pairs = spark.createDataFrame(
-                    [(p.key_values[col], p.label) for p in parts]
-                ).toDF(col, LABEL_COL)
-            else:
-                if scan is None:
-                    # one scan and file → label map shared by every column
-                    file_to_label = {store.url(p.file): p.label for p in parts}
-                    scan = (
-                        _read_committed_files(
-                            spark, store, meta.uuid, meta.schema, parts
-                        ),
-                        spark.createDataFrame(
-                            list(file_to_label.items()),
-                            f"___file string, {LABEL_COL} string",
-                        ),
-                    )
-                df, mapping = scan
-                pairs = (
-                    df.select(F.col(col), F.input_file_name().alias("___file"))
-                    .where(F.col(col).isNotNull())
-                    .join(F.broadcast(mapping), "___file")
-                    .select(col, LABEL_COL)
+                    [(p.key_values[col], p.label) for p in parts], schema
                 )
+            else:
+                pairs = new
+                if isinstance(new, pa.Table):
+                    pairs = spark.createDataFrame(new, schema)
+                for p in others:
+                    pairs = pairs.unionByName(
+                        _read_committed_files(
+                            spark, store, meta.uuid, meta.schema, [p]
+                        )
+                        .where(F.col(col).isNotNull())
+                        .select(F.col(col), F.lit(p.label).alias(LABEL_COL))
+                    )
             if old_key is not None:
                 old = spark.read.parquet(store.url(old_key))
                 # reference-written sidecars name the posting list "partition"
@@ -644,48 +668,47 @@ def _refresh_indices(
         meta.embedded_indices.pop(col, None)
 
 
+def _key_pairs(partitions: list[Partition], column: str) -> "pa.Table | None":
+    """The ``(column, LABEL_COL)`` pairs of a partition-key index, one per
+    label from key_values, or None when the key values have NULLs or no
+    single Arrow type (the Spark fold takes them)."""
+    try:
+        pairs = pa.table({
+            column: [p.key_values[column] for p in partitions],
+            LABEL_COL: pa.array([p.label for p in partitions], pa.string()),
+        })
+    except (pa.ArrowException, TypeError, ValueError, OverflowError):
+        return None  # key values of mixed or out-of-range Python types
+    return None if pairs.column(column).null_count else pairs
+
+
 def _index_pairs_driver(
     store: Store,
     meta: DatasetMetadata,
-    partitions: list[Partition],
+    new: "pa.Table",
     column: str,
     old_key: str | None,
     removed: set[str],
 ):
-    """Driver tier of ``_refresh_indices``: the refreshed sidecar's
-    ``(column, LABEL_COL)`` pairs as one Arrow table (duplicates allowed;
-    ``persist_index_dict`` folds them), or None when the column takes
-    the Spark tier. The value type is the old sidecar's (a merge) or the
-    schema's (a build); it must be integer or string, and the new values
-    of the same kind, so Arrow equality matches Spark groupBy equality.
-    The old sidecar is flattened to pairs with ``list_flatten`` /
+    """The driver fold's input: the refreshed sidecar's distinct
+    ``(column, LABEL_COL)`` pairs as one Arrow table — the ``new`` pairs
+    plus the old sidecar's — or None when the column takes the Spark
+    fold. The value type is the old sidecar's (a merge) or the schema's
+    (a build); it must be integer or string, and the new values of the
+    same kind, so Arrow equality matches Spark groupBy equality. The old
+    sidecar is flattened to pairs with ``list_flatten`` /
     ``list_parent_indices`` and the removed labels dropped with
     ``is_in``."""
-    import pyarrow as pa
     import pyarrow.compute as pc
     from pyspark.sql.pandas.types import to_arrow_type
 
     if old_key is None:
         try:
             value_type = to_arrow_type(meta.schema[column].dataType)
-        except Exception:  # noqa: BLE001 — unsupported type → Spark tier
+        except Exception:  # noqa: BLE001 — unsupported type → Spark fold
             return None
         if index_value_kind(value_type) is None:
             return None
-    if column in meta.partition_keys:
-        try:
-            new = pa.table({
-                column: [p.key_values[column] for p in partitions],
-                LABEL_COL: pa.array([p.label for p in partitions], pa.string()),
-            })
-        except (pa.ArrowException, TypeError, ValueError, OverflowError):
-            return None  # key values of mixed or out-of-range Python types
-        if new.column(column).null_count:
-            return None
-    else:
-        new = build_index_pairs_driver(store, partitions, column)
-    if new is None:
-        return None
     old = None
     if old_key is not None:
         if not sidecar_fits_driver(store, old_key):
@@ -706,7 +729,7 @@ def _index_pairs_driver(
         values = table.column(column).combine_chunks().take(
             pc.list_parent_indices(postings)
         )
-        # the Spark tier drops NULL values and the removed labels alike
+        # the Spark fold drops NULL values and the removed labels alike
         keep = pc.is_valid(values)
         if removed:
             keep = pc.and_(
@@ -725,58 +748,40 @@ def _refresh_blooms(
     spark: SparkSession,
     store: Store,
     meta: DatasetMetadata,
-    partitions: Sequence[Partition],
+    harvested: Harvest,
     columns: Sequence[str],
     removed: Sequence[str] = (),
-    *,
-    n_bits: int | None = None,
-    k: int | None = None,
 ) -> None:
     """Refresh the Bloom sidecar of each of ``columns`` in
-    ``meta.blooms``: the (word, label, bits) rows of ``partitions`` plus
+    ``meta.blooms``: the (word, label, bits) rows the commit harvest
+    ``harvested`` took from the files that asked for the column, plus
     the column's current sidecar rows minus the ``removed`` labels,
     under a new key (the old key becomes garbage for GC). A column with
-    no sidecar yet (validated by the caller) is a build over
-    ``partitions`` with ``n_bits``/``k`` (the defaults when None); an
-    existing sidecar, or an entry whose key was dropped
-    (``_drop_sidecar_keys``), keeps its own parameters (plans/blooms.py).
+    no sidecar yet (``_declare_blooms``, or an entry whose key was
+    dropped by ``_drop_sidecar_keys``) is a build with its entry's
+    ``n_bits``/``k`` (plans/blooms.py).
 
-    Per column the driver tier (pyarrow read + the bit-identical
-    vectorized hash twin, zero Spark jobs) runs when the new files fit
-    the gate of ``plans/index.py`` ``read_column_driver`` and the old
-    sidecar fits its byte budget: the old sidecar table, filtered by
-    label with ``is_in``, and the new rows are concatenated as Arrow
-    tables. Otherwise ONE Spark job, projection-pruned to the column,
-    unions the new rows with the old sidecar's (labels never repeat, so
-    there is nothing to aggregate)."""
-    import pyarrow as pa
+    For a driver-placed harvest whose old sidecar fits
+    ``sidecar_fits_driver``, the old sidecar table, filtered by label
+    with ``is_in``, and the new rows are concatenated as Arrow tables
+    (zero Spark jobs). Otherwise ONE Spark job unions the new rows with
+    the old sidecar's (labels never repeat, so there is nothing to
+    aggregate)."""
     import pyarrow.compute as pc
 
     from plateau_spark.plans.blooms import (
-        HASH_FAMILY,
-        K_DEFAULT,
-        N_BITS_DEFAULT,
-        build_bloom_dataframe,
-        build_bloom_rows_driver,
         persist_bloom_dataframe,
         persist_bloom_rows,
         read_bloom_table,
         remove_labels_from_bloom_df,
     )
 
-    columns = list(dict.fromkeys(columns))
-    parts = list(partitions)
     rm = {str(x) for x in removed}
-    dtypes = {f.name: f.dataType for f in (meta.schema or [])}
-    for col in columns:
-        info = meta.blooms.get(col) or {
-            "key": None,
-            "n_bits": N_BITS_DEFAULT if n_bits is None else int(n_bits),
-            "k": K_DEFAULT if k is None else int(k),
-            "hash": HASH_FAMILY,
-        }
-        old_key, col_bits, col_k = info["key"], int(info["n_bits"]), int(info["k"])
-        rows = build_bloom_rows_driver(store, parts, col, n_bits=col_bits, k=col_k)
+    for col in dict.fromkeys(columns):
+        info = meta.blooms[col]
+        old_key = info["key"]
+        new = harvested.bloom_rows(col)
+        rows = new if isinstance(new, pa.Table) else None
         if rows is not None and old_key is not None:
             old = None
             if sidecar_fits_driver(store, old_key):
@@ -792,10 +797,7 @@ def _refresh_blooms(
         if rows is not None:
             key = persist_bloom_rows(rows, store, meta.uuid, col)
         else:
-            bloom_df = build_bloom_dataframe(
-                spark, store, parts, col, n_bits=col_bits, k=col_k,
-                dtype=dtypes.get(col),
-            )
+            bloom_df = spark.createDataFrame(new) if isinstance(new, pa.Table) else new
             if old_key is not None:
                 old = spark.read.parquet(store.url(old_key))
                 bloom_df = remove_labels_from_bloom_df(old, rm).unionByName(bloom_df)
@@ -863,10 +865,12 @@ def _commit_files(
     and store_dataset_from_partitions (write.py:103-134). In order:
 
     1. swap: drop the ``removed`` labels, add ``new_partitions``;
-    2. harvest zone maps onto the new files for ``zone_map_columns``
-       plus every column a partition live before the change tracks
-       (within the schema): a commit never leaves new files unprunable
-       where old files prune;
+    2. one harvest (``plans/harvest.py``) opens each file once: the new
+       files give the zone maps of ``zone_map_columns`` plus every
+       column a partition live before the change tracks (within the
+       schema: a commit never leaves new files unprunable where old
+       files prune) and the pairs and words of every sidecar column;
+       the other live files give those of the newly declared columns;
     3. refresh every existing index and Bloom sidecar: the new files'
        entries in, the removed labels' out (nothing to do when the
        commit adds and removes no file);
@@ -880,8 +884,6 @@ def _commit_files(
        (a commit that removes labels raises ConcurrentCommitError on a
        concurrent commit instead of silently dropping it).
     """
-    from plateau_spark.plans.zonemaps import collect_partition_stats
-
     new_partitions = list(new_partitions)
     tracked = {c for p in meta.partitions.values() for c in p.stats}
     for label in removed:
@@ -892,27 +894,43 @@ def _commit_files(
         meta.partitions[p.label] = p
 
     names = {f.name for f in (meta.schema or [])}
-    zm_cols = sorted(c for c in {*(zone_map_columns or ()), *tracked} if c in names)
-    if zm_cols and new_partitions:
-        stats = collect_partition_stats(spark, store, new_partitions, zm_cols)
-        for p in new_partitions:
-            p.stats = stats.get(p.label, {})
-
-    if new_partitions or removed:
-        meta.explicit_partitions = True
-        _refresh_indices(spark, store, meta, new_partitions, list(meta.indices), removed)
-        _refresh_blooms(spark, store, meta, new_partitions, list(meta.blooms), removed)
+    zm_cols = sorted(
+        c for c in {*(zone_map_columns or ()), *tracked} if c in names and new_partitions
+    )
+    refresh = bool(new_partitions or removed)
+    indices = list(meta.indices) if refresh else []
+    blooms = list(meta.blooms) if refresh else []
+    new_indices = [
+        c for c in dict.fromkeys([*meta.embedded_indices, *(index_columns or ())])
+        if c not in meta.indices
+    ]
+    new_blooms = _declare_blooms(meta, bloom_columns, bloom_n_bits, bloom_k)
     live = list(meta.partitions.values())
-    _refresh_blooms(
-        spark, store, meta, live,
-        [c for c in bloom_columns or () if c not in meta.blooms],
-        n_bits=bloom_n_bits, k=bloom_k,
+    # one harvest: the new files give everything, the other live files
+    # only the newly declared columns
+    fresh = {p.label for p in new_partitions}
+    requests = (
+        _harvest_request(meta, zm_cols, indices + new_indices, blooms + new_blooms),
+        _harvest_request(meta, (), new_indices, new_blooms),
     )
-    _refresh_indices(
-        spark, store, meta, live,
-        [*meta.embedded_indices]
-        + [c for c in index_columns or () if c not in meta.indices],
-    )
+    harvested = harvest(spark, store, meta.schema, [
+        (p, requests[p.label not in fresh]) for p in live
+    ])
+    try:
+        if zm_cols:
+            stats = collect_partition_stats(harvested)
+            for p in new_partitions:
+                p.stats = stats.get(p.label, {})
+        if refresh:
+            meta.explicit_partitions = True
+            _refresh_indices(
+                spark, store, meta, harvested, new_partitions, indices, removed
+            )
+            _refresh_blooms(spark, store, meta, harvested, blooms, removed)
+        _refresh_blooms(spark, store, meta, harvested, new_blooms)
+        _refresh_indices(spark, store, meta, harvested, live, new_indices)
+    finally:
+        harvested.release()
 
     metadata = _resolve_metadata(metadata)
     override_metadata = _resolve_metadata(override_metadata)
@@ -1172,7 +1190,8 @@ def update_dataset_from_dataframes__iter(
     """
     _store_arg = store
     store = _ensure_store(store)
-    if not DatasetMetadata.exists(store, dataset_uuid):
+    meta = DatasetMetadata.load_if_exists(store, dataset_uuid)
+    if meta is None:
         out = store_dataframes_as_dataset__iter(
             spark,
             store,
@@ -1187,7 +1206,6 @@ def update_dataset_from_dataframes__iter(
         )
         _invalidate_if_factory(_store_arg)
         return out
-    meta = DatasetMetadata.load(store, dataset_uuid)
     validate_partition_keys(meta.partition_keys, partition_on)
     _base = _commit_base_snapshot(meta)
     _validate_declared_columns(
@@ -1737,7 +1755,8 @@ def update_dataset_from_dataframe(
     """
     _store_arg = store
     store = _ensure_store(store)
-    if not DatasetMetadata.exists(store, dataset_uuid):
+    meta = DatasetMetadata.load_if_exists(store, dataset_uuid)
+    if meta is None:
         if df is None:
             raise ValueError(
                 f"Dataset {dataset_uuid!r} does not exist and no data was "
@@ -1769,7 +1788,6 @@ def update_dataset_from_dataframe(
         )
         _invalidate_if_factory(_store_arg)
         return out
-    meta = DatasetMetadata.load(store, dataset_uuid)
     validate_partition_keys(meta.partition_keys, partition_on)
     _base = _commit_base_snapshot(meta)
 
@@ -1844,8 +1862,8 @@ def write_single_partition(
     partition_on = list(partition_on or [])
     df = normalize_dataframe(df, partition_on)
     constraints = None
-    if DatasetMetadata.exists(store, dataset_uuid):
-        meta = DatasetMetadata.load(store, dataset_uuid)
+    meta = DatasetMetadata.load_if_exists(store, dataset_uuid)
+    if meta is not None:
         validate_compatible(meta.schema, df.schema)
         constraints = meta.metadata.get("constraints")
     return _write_files(
@@ -1965,8 +1983,8 @@ def commit_dataset(
     _store_arg = store
     store = _ensure_store(store)
     _base = None
-    if DatasetMetadata.exists(store, dataset_uuid):
-        meta = DatasetMetadata.load(store, dataset_uuid)
+    meta = DatasetMetadata.load_if_exists(store, dataset_uuid)
+    if meta is not None:
         _base = _commit_base_snapshot(meta)
     else:
         if schema is None:

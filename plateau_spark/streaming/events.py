@@ -522,8 +522,8 @@ def commit_stream_batch(
         batch_df = batch_df.persist()
         pinned = True
     try:
-        if DatasetMetadata.exists(store, dataset_uuid):
-            meta = DatasetMetadata.load(store, dataset_uuid)
+        meta = DatasetMetadata.load_if_exists(store, dataset_uuid)
+        if meta is not None:
             if str(batch_id) in meta.metadata.get("stream_batches", {}):
                 return False
             if not assume_nonempty and batch_df.isEmpty():

@@ -20,15 +20,25 @@ from plateau_spark.sources.dataset import (
 )
 
 
+def _spark_positions(column: str, n_bits: int, k: int):
+    """The hash format in Spark SQL, the reference that pins the
+    on-disk bits: ``pmod(h1 + i*h2, n_bits)`` with h1 and h2 the first
+    two 15-hex-digit slices of the value's md5, h2 forced odd."""
+    h = F.md5(F.encode(F.col(column).cast("string"), "UTF-8"))
+    h1 = F.conv(F.substring(h, 1, 15), 16, 10).cast("long")
+    h2 = F.conv(F.substring(h, 16, 15), 16, 10).cast("long").bitwiseOR(F.lit(1))
+    return [F.pmod(h1 + F.lit(i) * h2, F.lit(int(n_bits))) for i in range(k)]
+
+
 def test_python_and_spark_hash_positions_agree(spark):
-    """The planner replays the JVM build hashing in Python, and the
-    driver-tier build in numpy — the three must be bit-identical for
-    integers of every width (negatives included) and strings (empty
-    and non-ASCII included), down to positions on bit 63 of a word,
-    which the sidecar stores as a negative ``bits``."""
+    """The planner hashes in Python and the build in numpy — both must
+    be bit-identical to Spark's own md5/conv/pmod for integers of every
+    width (negatives included) and strings (empty and non-ASCII
+    included), down to positions on bit 63 of a word, which the sidecar
+    stores as a negative ``bits``."""
     import pyarrow as pa
 
-    from plateau_spark.plans.blooms import _position_cols, bloom_position_array
+    from plateau_spark.plans.blooms import bloom_position_array
 
     cases = [
         ("long", pa.int64(), [5, -17, 999999999999, 0, -(2**63), 2**63 - 1]
@@ -43,7 +53,7 @@ def test_python_and_spark_hash_positions_agree(spark):
     for spark_type, arrow_type, values in cases:
         for n_bits, k in ((8192, 5), (4096, 3), (1000, 7)):
             df = spark.createDataFrame([(v,) for v in values], f"v {spark_type}").select(
-                "v", F.array(*_position_cols("v", n_bits, k)).alias("pos")
+                "v", F.array(*_spark_positions("v", n_bits, k)).alias("pos")
             )
             jvm = {r["v"]: r["pos"] for r in df.collect()}
             vec = bloom_position_array(pa.array(values, arrow_type), n_bits, k)
@@ -270,31 +280,29 @@ def test_bloom_on_evolved_column_prunes_pre_evolution_files(spark, tmp_path):
     assert len(out.inputFiles()) == 1
 
 
-def test_driver_tier_rows_match_spark_tier(spark, bloom_store):
+def test_driver_tier_rows_match_spark_tier(spark, bloom_store, monkeypatch):
     """KB-scale commits build their sidecars driver-side (zero Spark
     jobs); the rows must be IDENTICAL to the Spark build's — same words,
     same bits, same coverage markers — or pruning semantics would
     depend on commit size."""
-    from plateau_spark.plans.blooms import (
-        N_BITS_DEFAULT,
-        K_DEFAULT,
-        build_bloom_dataframe,
-        build_bloom_rows_driver,
-    )
+    import plateau_spark.plans.harvest as harvest_mod
+    from plateau_spark.plans.blooms import K_DEFAULT, N_BITS_DEFAULT
+    from plateau_spark.plans.harvest import Request, harvest
 
     meta = DatasetMetadata.load(bloom_store, "ev")
-    parts = list(meta.partitions.values())
-    driver_table = build_bloom_rows_driver(
-        bloom_store, parts, "event_id", n_bits=N_BITS_DEFAULT, k=K_DEFAULT
-    )
-    assert driver_table is not None  # small fixture → driver tier fires
+    request = Request(bloom=(("event_id", N_BITS_DEFAULT, K_DEFAULT),))
+    items = [(p, request) for p in meta.partitions.values()]
+    on_driver = harvest(spark, bloom_store, meta.schema, items)
+    assert on_driver.on_driver  # small fixture → driver tier fires
+    driver_table = on_driver.bloom_rows("event_id")
     driver_rows = list(
         zip(*(driver_table.column(c).to_pylist() for c in ("word", "label", "bits")))
     )
-    spark_rows = build_bloom_dataframe(
-        spark, bloom_store, parts, "event_id",
-        n_bits=N_BITS_DEFAULT, k=K_DEFAULT,
-    ).collect()
+    monkeypatch.setattr(harvest_mod, "DRIVER_MAX_BYTES", 0)
+    on_spark = harvest(spark, bloom_store, meta.schema, items)
+    assert not on_spark.on_driver
+    spark_rows = on_spark.bloom_rows("event_id").collect()
+    on_spark.release()
     assert sorted(driver_rows) == sorted(
         (r["word"], r["label"], r["bits"]) for r in spark_rows
     )
@@ -306,20 +314,19 @@ def test_driver_tier_budget_zero_falls_back_to_spark(
     """With the driver byte budget forced to 0 every build/merge takes
     the distributed tier — lookups must be unaffected (the two tiers
     are interchangeable)."""
-    import plateau_spark.plans.blooms as blooms_mod
-    import plateau_spark.plans.index as index_mod
+    import plateau_spark.plans.harvest as harvest_mod
 
     # force the Spark tier through the one driver-tier gate, and prove
     # the Spark-tier builder ran for the build and for the merge
-    monkeypatch.setattr(index_mod, "DRIVER_MAX_BYTES", 0)
+    monkeypatch.setattr(harvest_mod, "DRIVER_MAX_BYTES", 0)
     spark_tier = []
-    real_build = blooms_mod.build_bloom_dataframe
+    real_build = harvest_mod.build_bloom_dataframe
 
     def spy(*args, **kw):
-        spark_tier.append(args[3])
+        spark_tier.append(args[1])
         return real_build(*args, **kw)
 
-    monkeypatch.setattr(blooms_mod, "build_bloom_dataframe", spy)
+    monkeypatch.setattr(harvest_mod, "build_bloom_dataframe", spy)
     store = Store(str(tmp_path / "store"))
     df = spark.range(500).select(
         F.col("id").alias("event_id"), (F.col("id") % 3).alias("v")

@@ -12,7 +12,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-import plateau_spark.plans.index as index_mod
+import plateau_spark.plans.harvest as harvest_mod
 from plateau_spark.core.metadata import DatasetMetadata
 from plateau_spark.operators.sketches import (
     build_histogram_stats,
@@ -20,6 +20,7 @@ from plateau_spark.operators.sketches import (
 )
 from plateau_spark.plans.blooms import read_bloom_table
 from plateau_spark.plans.pruning import explain_scan
+from plateau_spark.streaming.events import commit_stream_batch
 from plateau_spark.sources.dataset import (
     build_dataset_indices,
     commit_dataset,
@@ -149,7 +150,7 @@ def _assert_contract(store, before: set[str]) -> None:
 )
 def test_every_mutating_api_keeps_the_contract(spark, store, monkeypatch, op, tier):
     if tier == "spark":
-        monkeypatch.setattr(index_mod, "DRIVER_MAX_BYTES", 0)
+        monkeypatch.setattr(harvest_mod, "DRIVER_MAX_BYTES", 0)
     (_stats_fixture if op == "consolidate" else _fixture)(spark, store)
     before = set(DatasetMetadata.load(store, UUID).partitions)
     OPS[op](spark, store)
@@ -192,3 +193,60 @@ def test_failed_overwrite_keeps_the_existing_dataset(spark, store):
             bloom_filter_columns=["nope"],
         )
     assert DatasetMetadata.load(store, UUID).partitions.keys() == before.partitions.keys()
+
+
+def _append(spark, store):
+    update_dataset_from_dataframe(spark, store, UUID, _rows(spark, 300, 400))
+
+
+# op -> (untraced preparation, traced mutation)
+OPEN_ONCE = {
+    "store": (None, lambda spark, store: store_dataframe_as_dataset(
+        spark, store, UUID, _rows(spark, 0, 300), partition_on=["p"],
+        secondary_indices=["tag"], bloom_filter_columns=["k"],
+        zone_map_columns=["num"], overwrite=True,
+    )),
+    "update": (None, OPS["update"]),
+    "stream_batch": (None, lambda spark, store: commit_stream_batch(
+        spark, store, UUID, _rows(spark, 300, 400), 1, partition_on=["p"]
+    )),
+    "upsert": (None, OPS["upsert"]),
+    "delete_rows": (None, OPS["delete_rows"]),
+    "compact": (_append, lambda spark, store: compact_dataset(spark, store, UUID)),
+}
+
+
+@pytest.mark.parametrize("op", list(OPEN_ONCE))
+def test_driver_placement_opens_each_new_file_once(spark, store, monkeypatch, op):
+    """A KB-scale commit of a dataset with an index, a Bloom sidecar and
+    zone maps harvests all three from ONE open of each new parquet file:
+    every pyarrow open or read of a data file during the mutation is
+    counted, and each new file is opened exactly once."""
+    import collections
+
+    prepare, mutate = OPEN_ONCE[op]
+    _fixture(spark, store)
+    if prepare is not None:
+        prepare(spark, store)
+    before = set(DatasetMetadata.load(store, UUID).partitions)
+    opened: collections.Counter = collections.Counter()
+    real_init, real_read = pq.ParquetFile.__init__, pq.read_table
+
+    def init(self, source, *args, **kw):
+        opened[str(source)] += 1
+        return real_init(self, source, *args, **kw)
+
+    def read_table(source, *args, **kw):
+        opened[str(source)] += 1
+        return real_read(source, *args, **kw)
+
+    monkeypatch.setattr(pq.ParquetFile, "__init__", init)
+    monkeypatch.setattr(pq, "read_table", read_table)
+    mutate(spark, store)
+    monkeypatch.undo()
+    meta = DatasetMetadata.load(store, UUID)
+    new = [meta.partitions[label].file for label in sorted(set(meta.partitions) - before)]
+    assert new, op
+    assert {f: opened[store.path(f)] for f in new} == {f: 1 for f in new}
+    data = {k: n for k, n in opened.items() if f"/{UUID}/table/" in k}
+    assert set(data) == {store.path(f) for f in new}, data

@@ -277,12 +277,12 @@ def test_index_driver_tier_matches_spark_tier(spark, store, monkeypatch):
     meta = DatasetMetadata.load(store, "ix")
     driver_idx = SecondaryIndex.load(store, meta.indices["tag"], "tag")
 
-    import plateau_spark.plans.index as index_mod
+    import plateau_spark.plans.harvest as harvest_mod
     import plateau_spark.sources.dataset as ds_mod
 
     # force the Spark tier through the one driver-tier gate, and prove
     # the Spark-tier writer ran for the build and for the merge
-    monkeypatch.setattr(index_mod, "DRIVER_MAX_BYTES", 0)
+    monkeypatch.setattr(harvest_mod, "DRIVER_MAX_BYTES", 0)
     spark_tier = []
     real_persist = ds_mod.persist_index_dataframe
 

@@ -11,10 +11,11 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-import plateau_spark.plans.index as index_mod
+import plateau_spark.plans.harvest as harvest_mod
 import plateau_spark.sources.dataset as ds_mod
 from plateau_spark.core.metadata import DatasetMetadata
 from plateau_spark.plans.blooms import read_bloom_table
+from plateau_spark.plans.harvest import harvest
 from plateau_spark.plans.index import SecondaryIndex
 from plateau_spark.sources.dataset import (
     delete_rows_from_dataset,
@@ -68,7 +69,7 @@ def test_index_sidecar_sorted_by_value(spark, store, monkeypatch, tier):
     value-filtered ``SecondaryIndex.load`` relies on to prune row
     groups — after the build and after the merge."""
     if tier == "spark":
-        monkeypatch.setattr(index_mod, "DRIVER_MAX_BYTES", 0)
+        monkeypatch.setattr(harvest_mod, "DRIVER_MAX_BYTES", 0)
     calls = _spy(monkeypatch)
     store_dataframe_as_dataset(
         spark, store, "srt", _frame(spark, 0, 200), partition_on=["grp"],
@@ -95,8 +96,17 @@ def _bloom_rows(store, key) -> set[tuple[int, str, int]]:
 
 
 def _refresh_both(spark, store, meta, parts, columns, removed=()):
-    ds_mod._refresh_indices(spark, store, meta, parts, columns["index"], removed)
-    ds_mod._refresh_blooms(spark, store, meta, parts, columns["bloom"], removed)
+    """Refresh both sidecar kinds over ``parts`` from one commit harvest."""
+    ds_mod._declare_blooms(meta, columns["bloom"])
+    request = ds_mod._harvest_request(meta, (), columns["index"], columns["bloom"])
+    harvested = harvest(spark, store, meta.schema, [(p, request) for p in parts])
+    try:
+        ds_mod._refresh_indices(
+            spark, store, meta, harvested, parts, columns["index"], removed
+        )
+        ds_mod._refresh_blooms(spark, store, meta, harvested, columns["bloom"], removed)
+    finally:
+        harvested.release()
 
 
 def _edge_frame(spark, lo, hi):
@@ -204,7 +214,7 @@ def test_cross_tier_build_then_merge_equals_driver_only(
         meta = DatasetMetadata.load(store, "xt")
         for tier, step in ((build_tier, "build"), (merge_tier, "merge")):
             monkeypatch.setattr(
-                index_mod, "DRIVER_MAX_BYTES", 0 if tier == "spark" else 8 << 20
+                harvest_mod, "DRIVER_MAX_BYTES", 0 if tier == "spark" else 8 << 20
             )
             calls = _spy(monkeypatch)
             if step == "build":
@@ -283,7 +293,7 @@ def test_reference_named_sidecar_merges_on_both_tiers(
     pq.write_table(table, buf)
     store.put_bytes(meta.indices["num"], buf.getvalue())
     if tier == "spark":
-        monkeypatch.setattr(index_mod, "DRIVER_MAX_BYTES", 0)
+        monkeypatch.setattr(harvest_mod, "DRIVER_MAX_BYTES", 0)
     calls = _spy(monkeypatch)
     update_dataset_from_dataframe(
         spark, store, "ref", _frame(spark, 120, 180), partition_on=["grp"]
@@ -296,3 +306,124 @@ def test_reference_named_sidecar_merges_on_both_tiers(
         for v in pq.read_table(store.path(p.file), columns=["num"])["num"].to_pylist():
             want.setdefault(v, set()).add(p.label)
     assert got == want
+
+
+def _mixed_frame(spark, lo, hi):
+    """Integer, string, float and date columns, and one that is NULL in
+    every row."""
+    return spark.range(lo, hi).select(
+        F.col("id").alias("k"),
+        (F.col("id") % 4).alias("grp"),
+        F.concat(F.lit("t"), (F.col("id") % 11).cast("string")).alias("tag"),
+        ((F.col("id") % 9) / 4 - 1).alias("f"),
+        F.date_add(F.lit("2024-01-01").cast("date"), (F.col("id") % 17).cast("int")).alias("d"),
+        F.lit(None).cast("long").alias("nn"),
+    )
+
+
+def test_harvest_placements_agree(spark, store, monkeypatch):
+    """The driver and the Spark placement of the commit harvest give the
+    same index dicts, Bloom rows and zone-map stats, for a build and a
+    merge with removed labels, over integer, string, float, date and
+    NULL-only columns, an evolved column older files lack and JSON
+    files the harvest cannot open (scanned by the Spark fold, never
+    covered by a Bloom, no zone map)."""
+    import plateau_spark.plans.harvest as harvest_mod
+    from plateau_spark.plans.zonemaps import collect_partition_stats
+
+    store_dataframe_as_dataset(
+        spark, store, "pp", _mixed_frame(spark, 0, 160), partition_on=["grp"]
+    )
+    older = set(DatasetMetadata.load(store, "pp").partitions)
+    evolved = lambda lo, hi: _mixed_frame(spark, lo, hi).select(  # noqa: E731
+        "*", F.concat(F.lit("é"), (F.col("k") % 5).cast("string")).alias("extra"),
+        (F.col("k") * 3).alias("xn"),
+    )
+    update_dataset_from_dataframe(
+        spark, store, "pp", evolved(160, 240), partition_on=["grp"],
+        schema_evolution=True,
+    )
+    update_dataset_from_dataframe(
+        spark, store, "pp", evolved(240, 280), partition_on=["grp"], file_format="json"
+    )
+    parts = sorted(
+        DatasetMetadata.load(store, "pp").partitions.values(), key=lambda p: p.label
+    )
+    assert any(p.file.endswith(".json.gz") for p in parts)
+    first = [p for p in parts if p.label in older]
+    second = [p for p in parts if p.label not in older]
+    removed = [first[0].label, first[2].label]
+    columns = {
+        "index": ["k", "tag", "f", "d", "nn", "extra", "grp"],
+        "bloom": ["k", "tag", "nn", "extra"],
+    }
+
+    def run(placement):
+        if placement == "spark":
+            monkeypatch.setattr(harvest_mod, "DRIVER_MAX_FILES", 0)
+        calls = _spy(monkeypatch)
+        folded = []  # the columns the driver fold writes
+        real_fold = ds_mod.persist_index_dict
+
+        def fold(pairs, *args):
+            folded.append(args[2])
+            return real_fold(pairs, *args)
+
+        monkeypatch.setattr(ds_mod, "persist_index_dict", fold)
+        meta = DatasetMetadata.load(store, "pp")
+        _refresh_both(spark, store, meta, first, columns)
+        _refresh_both(spark, store, meta, second, columns, removed)
+        request = ds_mod._harvest_request(meta, ["k", "f", "d", "nn", "xn"], (), ())
+        harvested = harvest(spark, store, meta.schema, [(p, request) for p in parts])
+        stats = collect_partition_stats(harvested)
+        harvested.release()
+        monkeypatch.undo()
+        # Bloom rows come from a Spark job only on the Spark placement;
+        # the float, date and JSON-covering index folds always run there,
+        # the partition-key index never
+        assert ("build_bloom_dataframe" in calls) == (placement == "spark")
+        assert set(folded) == (
+            {"k", "tag", "nn", "extra", "grp"} if placement == "driver" else {"grp"}
+        )
+        return (
+            {
+                col: SecondaryIndex.load(store, meta.indices[col], col).index_dct
+                for col in columns["index"]
+            },
+            {col: _bloom_rows(store, meta.blooms[col]["key"]) for col in columns["bloom"]},
+            stats,
+        )
+
+    indices, blooms, stats = run("driver")
+    live = {p.label for p in parts} - set(removed)
+    assert {l for ls in indices["k"].values() for l in ls} == live
+    assert indices["nn"] == {}
+    parquet = {p.label for p in parts if p.file.endswith(".parquet")} - set(removed)
+    for col in columns["bloom"]:
+        assert {r[1] for r in blooms[col]} == parquet, col
+    assert set(stats) == {p.label for p in parts if p.file.endswith(".parquet")}
+    assert (indices, blooms, stats) == run("spark")
+
+
+def test_merged_index_equals_rebuild(spark, store):
+    """An index sidecar merged commit by commit (appends, a row delete,
+    a scope drop) is the same table as one built from scratch over the
+    live files: the merge's pairs need no dedup."""
+    from plateau_spark.sources.dataset import build_dataset_indices
+
+    store_dataframe_as_dataset(
+        spark, store, "mg", _frame(spark, 0, 200), partition_on=["grp"],
+        secondary_indices=["num", "tag"],
+    )
+    update_dataset_from_dataframe(
+        spark, store, "mg", _frame(spark, 150, 260), partition_on=["grp"]
+    )
+    delete_rows_from_dataset(spark, store, "mg", [[("k", "<", 40)]])
+    update_dataset_from_dataframe(spark, store, "mg", delete_scope=[{"grp": 1}])
+    merged = DatasetMetadata.load(store, "mg").indices
+    rebuilt = build_dataset_indices(spark, store, "mg", ["num", "tag"]).indices
+    for col in ("num", "tag"):
+        assert merged[col] != rebuilt[col]
+        a = pq.read_table(store.path(merged[col]))
+        b = pq.read_table(store.path(rebuilt[col]))
+        assert a.equals(b), col
