@@ -195,6 +195,16 @@ def estimated_bytes(df: DataFrame) -> "int | None":
         return None
 
 
+def is_local_relation(df: DataFrame) -> bool:
+    """True iff ``df``'s optimized plan is one ``LocalRelation``: rows
+    the driver already holds, which Spark re-reads for free."""
+    try:
+        plan = df._jdf.queryExecution().optimizedPlan()
+        return plan.getClass().getName().endswith(".LocalRelation")
+    except Exception:  # noqa: BLE001 — plan inspection is best-effort
+        return False
+
+
 def release_local_checkpoint(*dfs: DataFrame) -> None:
     """Free the persisted blocks behind ``df.localCheckpoint(...)``
     frames.

@@ -34,6 +34,19 @@ def encode_partition_label(keys: Sequence[str], values: Sequence[Any]) -> str:
     return "/".join(f"{quote(k, safe='')}={encode_value(v)}" for k, v in zip(keys, values))
 
 
+# The characters Spark's ``ExternalCatalogUtils.escapePathName`` writes
+# as ``%XX`` in a hive directory name; every other character (NUL,
+# space and non-ASCII included) is kept as is.
+_SPARK_PATH_ESCAPES = frozenset(
+    chr(c) for c in (*range(1, 32), 34, 35, 37, 39, 42, 47, 58, 61, 63, 91, 92, 93, 94, 123, 127)
+)
+
+
+def escape_path_name(text: str) -> str:
+    """``text`` as Spark spells it in a hive directory name."""
+    return "".join(f"%{ord(c):02X}" if c in _SPARK_PATH_ESCAPES else c for c in text)
+
+
 def _infer_untyped(value: str) -> Any:
     """Best-effort typed revival when no schema is available (reference-
     written msgpack commit files carry no inline schema — the reference

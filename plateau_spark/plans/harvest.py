@@ -16,6 +16,15 @@ each Bloom column's bitmap words, reading each needed column once.
            and its cached rows feed the zone maps, index folds and Bloom
            writes.
 
+The write before the harvest has the same two placements, chosen by
+``driver_write`` from the same ``DRIVER_MAX_BYTES``: a keyed parquet
+write whose frame the optimizer sizes within it is collected once with
+``toArrow`` (one job, no shuffle) and staged by pyarrow, one file per
+key — the reference's in-process ``MetaPartition.store_dataframes``.
+Flat, bucketed, ``repartition=False`` and non-parquet writes, and keys
+of float, timestamp or decimal type (no canonical directory text), stay
+one Spark shuffle and write job.
+
 A Spark job per sidecar column costs a ~0.2-0.3 s scheduling floor; the
 row cap sits where a per-value Python fold (~6-9 us per value) met it,
 and the columnar fold takes ~1.3 us per value for a Bloom and ~0.9-1.6
@@ -39,6 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
 
+from plateau_spark.core.caching import estimated_bytes
 from plateau_spark.core.store import Store
 from plateau_spark.plans.blooms import (
     _K_MAX,
@@ -130,6 +140,33 @@ def driver_files(
         if {*r.index, *(c for c, _, _ in r.bloom)} & set(pf.schema_arrow.names)
     )
     return None if rows > DRIVER_MAX_ROWS else files
+
+
+def driver_write(
+    df, partition_on: Sequence[str], sort_by: Sequence[str] = (), *,
+    file_format: str, bucketed: bool, repartition: bool,
+) -> bool:
+    """The write placement gate: True when ``_write_files`` stages the
+    frame's files on the driver from one Arrow collect. That needs a
+    parquet write with partition keys, no buckets and
+    ``repartition=True`` (one file per key either way), keys of integral,
+    string, date or boolean type, a column besides them, sort columns
+    Arrow can order (not nested) and an optimizer size estimate of at most
+    ``DRIVER_MAX_BYTES``; an unknown estimate takes the Spark write."""
+    if file_format != "parquet" or not partition_on or bucketed or not repartition:
+        return False
+    types = {f.name: f.dataType for f in df.schema.fields}
+    keys = (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.StringType,
+            T.DateType, T.BooleanType)
+    nested = (T.ArrayType, T.MapType, T.StructType)
+    if len(types) <= len(partition_on):  # Spark refuses a file with no columns
+        return False
+    if not all(isinstance(types.get(c), keys) for c in partition_on):
+        return False
+    if not all(c in types and not isinstance(types[c], nested) for c in sort_by):
+        return False
+    size = estimated_bytes(df)
+    return size is not None and size <= DRIVER_MAX_BYTES
 
 
 def sidecar_fits_driver(store: Store, key: str) -> bool:

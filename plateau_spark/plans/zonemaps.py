@@ -72,7 +72,10 @@ def footer_stats(pf, columns: Sequence[str]) -> dict[str, list]:
     def _nan(v):
         return isinstance(v, float) and math.isnan(v)
 
-    names = {c: i for i, c in enumerate(pf.schema_arrow.names)}
+    # footer statistics are per leaf column: a nested column before
+    # ``col`` shifts its index, so look leaves up by path
+    leaves = pf.metadata.schema
+    names = {leaves.column(i).path: i for i in range(len(leaves))}
     out = {}
     for col in columns:
         ci = names.get(col)

@@ -3,14 +3,16 @@
 The Spark-first re-expression of the reference's io layer
 (/root/reference/plateau/io/eager.py, plateau/io_components/write.py,
 plateau/io_components/update.py). The execution substrate is the Spark
-DataFrame — writes are ``df.write.partitionBy(...).parquet`` jobs, reads
-are ``spark.read.parquet(*pruned_paths)`` — while dataset state lives in
+DataFrame — writes are ``df.write.partitionBy(...).parquet`` jobs (a
+small keyed write is one Arrow collect staged by pyarrow), reads are
+``spark.read.parquet(*pruned_paths)`` — while dataset state lives in
 one JSON commit file (core/metadata.py) whose single atomic put IS the
 commit (docs/spec/format_specification.rst:34-54).
 
 Write protocol (store_dataset_from_partitions,
 plateau/io_components/write.py:148-233):
-  1. executors write parquet files under ``<uuid>/table/`` (hive dirs)
+  1. executors (or the driver, ``_write_files``) write parquet files
+     under ``<uuid>/table/`` (hive dirs)
   2. driver enumerates the new files, builds partitions + indexes
   3. driver puts the metadata JSON — readers never see step 1-2 state.
 Steps 2-3 are one function, ``_commit_files``, for every mutating API.
@@ -28,6 +30,7 @@ from concurrent.futures import ThreadPoolExecutor
 from typing import Any, Callable, Sequence
 
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -55,6 +58,7 @@ from plateau_spark.core.utils import (
     validate_partition_keys,
 )
 from plateau_spark.sources.serializers import (
+    HIVE_NULL_DIR,
     is_payload_file,
     read_files,
     write_staged,
@@ -62,6 +66,7 @@ from plateau_spark.sources.serializers import (
 from plateau_spark.plans.harvest import (
     Harvest,
     Request,
+    driver_write,
     harvest,
     sidecar_fits_driver,
 )
@@ -362,9 +367,6 @@ def _commit_update_with_merge_locked(
     return latest
 
 
-_HIVE_NULL_DIR = "__HIVE_DEFAULT_PARTITION__"
-
-
 def _contains_map_type(dt: T.DataType) -> bool:
     if isinstance(dt, T.MapType):
         return True
@@ -417,6 +419,18 @@ def _raise_null_partition_keys(
     )
 
 
+def _sort_arrow(table: pa.Table, columns: Sequence[str]) -> pa.Table:
+    """``sortWithinPartitions`` of a collected table: ascending with
+    NULLs first and NaN above every number, as Spark orders rows."""
+    keys, order = table, []
+    for i, c in enumerate(columns):
+        if pa.types.is_floating(table.schema.field(c).type):
+            keys = keys.append_column(f"__nan{i}__", pc.is_nan(table[c]))
+            order.append((f"__nan{i}__", "ascending"))
+        order.append((c, "ascending"))
+    return table.take(pc.sort_indices(keys, sort_keys=order, null_placement="at_start"))
+
+
 def _write_files(
     df: DataFrame,
     store: Store,
@@ -431,11 +445,24 @@ def _write_files(
     compress: bool = True,
     constraints: dict | None = None,
 ) -> list[Partition]:
-    """One Spark write job; returns the new Partition entries.
+    """Stage ``df``'s payload files and promote them into the table;
+    returns the new Partition entries. The files are written in one of
+    two placements, picked by ``plans/harvest.py`` ``driver_write``:
 
-    ``constraints``: CHECK constraints folded into the write job as a
-    ``raise_error`` filter (``_constraint_guard``) — a violation aborts
-    the job, the staging prefix is deleted, and
+      driver — a keyed parquet write the optimizer sizes within
+               ``DRIVER_MAX_BYTES``: the guarded frame is collected once
+               with ``toArrow`` (one job, no shuffle) and pyarrow writes
+               one file per key (``serializers.write_staged``);
+      Spark  — every other write: one shuffle (below) and one Spark
+               write job.
+
+    Both end in the same staging prefix, null-key check and rename, so
+    labels, ``key_values`` and the commit protocol do not depend on the
+    placement.
+
+    ``constraints``: CHECK constraints folded into the write's one job
+    as a ``raise_error`` filter (``_constraint_guard``) — a violation
+    aborts the job, the staging prefix is deleted, and
     :class:`ConstraintViolationError` is raised before any commit.
     Every write path of this module routes through here, so passing the
     loaded ``meta.metadata["constraints"]`` gives each path enforcement
@@ -443,7 +470,7 @@ def _write_files(
     do not: their tasks stage files themselves and enforce the
     constraints per Arrow batch.
 
-    Shuffle strategy (shuffle_store_dask_partitions,
+    Shuffle strategy of the Spark placement (shuffle_store_dask_partitions,
     plateau/io/dask/_shuffle.py:41-153, re-expressed):
       - with buckets: repartition on (partition_on ⊕ hash-bucket) —
         guarantees ≤ num_buckets files per partition key while keeping
@@ -474,39 +501,25 @@ def _write_files(
 
     commit_id = _uuid.uuid4().hex[:16]
     staging = f"{dataset_uuid}/{naming.STAGING_DIR}/{commit_id}"
-
-    out = df
     partition_on = list(partition_on)
-    if num_buckets and bucket_by:
-        out = out.withColumn(
-            "__bucket__", F.pmod(F.xxhash64(*[F.col(c) for c in bucket_by]), F.lit(num_buckets))
-        )
-        # explicit partition count (REPARTITION_BY_NUM): AQE must not
-        # coalesce the shuffle — the writer emits one file per key per
-        # TASK, so coalescing distinct (key, bucket) groups into one task
-        # silently collapses the bucket split the caller asked for.
-        # num_buckets is a CAP, not an exact count: two buckets of one
-        # key can still hash-collide into the same task and merge; the
-        # 32× headroom over num_buckets makes that rare (p ≈ g²/2n for
-        # g groups over n tasks) without guaranteeing it — an exact
-        # split would need a custom RDD partitioner.
-        _n = max(_shuffle_partitions_conf(out.sparkSession), int(num_buckets) * 32)
-        out = out.repartition(_n, *(partition_on + ["__bucket__"])) if partition_on else out.repartition(
-            num_buckets, "__bucket__"
-        )
-        out = out.drop("__bucket__")
-    elif partition_on and repartition:
-        out = out.repartition(*partition_on)
-    if sort_partitions_by:
-        # disjoint row-group stats for better pushdown
-        # (sort_values_categorical, plateau/io_components/utils.py:399-410)
-        out = out.sortWithinPartitions(*sort_partitions_by)
-    out = _constraint_guard(out, constraints)
-
+    sort_by = list(sort_partitions_by or [])
+    bucketed = bool(num_buckets and bucket_by)
     try:
-        write_staged(
-            out, store.url(staging), partition_on, file_format=file_format, compress=compress
-        )
+        if driver_write(
+            df, partition_on, sort_by, file_format=file_format, bucketed=bucketed,
+            repartition=repartition,
+        ):
+            table = _constraint_guard(df, constraints).toArrow()
+            if sort_by:
+                table = _sort_arrow(table, sort_by)
+            write_staged(table, store.pyarrow_location(staging), partition_on)
+        else:
+            write_staged(
+                _shuffled(df, partition_on, sort_by, num_buckets if bucketed else None,
+                          bucket_by, repartition, constraints),
+                store.url(staging), partition_on, file_format=file_format,
+                compress=compress,
+            )
     except Exception as e:  # noqa: BLE001 — classify then re-raise
         msg = str(e)
         if _CHECK_MARKER in msg:
@@ -525,7 +538,7 @@ def _write_files(
 
     key_types = {f.name: f.dataType for f in df.schema.fields if f.name in partition_on}
     staged = sorted(store.iter_keys(staging + "/"))
-    if any(_HIVE_NULL_DIR in key for key in staged):
+    if any(HIVE_NULL_DIR in key for key in staged):
         _raise_null_partition_keys(store, staging, partition_on)
 
     def _promote(key: str) -> Partition:
@@ -548,6 +561,49 @@ def _write_files(
         partitions = list(pool.map(_promote, payload_keys))
     store.delete(staging)  # leftover _SUCCESS marker etc.
     return partitions
+
+
+def _shuffled(
+    df: DataFrame, partition_on: list, sort_by: list, num_buckets: int | None,
+    bucket_by, repartition: bool, constraints: dict | None,
+) -> DataFrame:
+    """The Spark placement's frame: shuffled per ``_write_files``'
+    strategy, sorted within partitions, constraint-guarded."""
+    out = df
+    if num_buckets:
+        out = out.withColumn(
+            "__bucket__", F.pmod(F.xxhash64(*[F.col(c) for c in bucket_by]), F.lit(num_buckets))
+        )
+        # explicit partition count (REPARTITION_BY_NUM): AQE must not
+        # coalesce the shuffle — the writer emits one file per key per
+        # TASK, so coalescing distinct (key, bucket) groups into one task
+        # silently collapses the bucket split the caller asked for.
+        # num_buckets is a CAP, not an exact count: two buckets of one
+        # key can still hash-collide into the same task and merge; the
+        # 32× headroom over num_buckets makes that rare (p ≈ g²/2n for
+        # g groups over n tasks) without guaranteeing it — an exact
+        # split would need a custom RDD partitioner.
+        _n = max(_shuffle_partitions_conf(out.sparkSession), int(num_buckets) * 32)
+        out = out.repartition(_n, *(partition_on + ["__bucket__"])) if partition_on else out.repartition(
+            num_buckets, "__bucket__"
+        )
+        out = out.drop("__bucket__")
+    elif partition_on and repartition:
+        out = out.repartition(*partition_on)
+    if sort_by:
+        # disjoint row-group stats for better pushdown
+        # (sort_values_categorical, plateau/io_components/utils.py:399-410).
+        # The keys lead: a partitioned write sorts its rows by them, and
+        # the optimizer drops a local sort beneath that one.
+        out = out.sortWithinPartitions(*partition_on, *sort_by)
+    return _constraint_guard(out, constraints)
+
+
+def _in_commit_order(df: DataFrame, schema, file_format: str) -> DataFrame:
+    """``df`` with a CSV payload's columns in commit-schema order: CSV is
+    read positionally under that schema. Evolution only appends fields,
+    so a CSV file written before it still reads as a prefix."""
+    return df.select(*schema.names) if file_format == "csv" and schema else df
 
 
 def _resolve_metadata(md):
@@ -699,7 +755,6 @@ def _index_pairs_driver(
     sidecar is flattened to pairs with ``list_flatten`` /
     ``list_parent_indices`` and the removed labels dropped with
     ``is_in``."""
-    import pyarrow.compute as pc
     from pyspark.sql.pandas.types import to_arrow_type
 
     if old_key is None:
@@ -767,8 +822,6 @@ def _refresh_blooms(
     (zero Spark jobs). Otherwise ONE Spark job unions the new rows with
     the old sidecar's (labels never repeat, so there is nothing to
     aggregate)."""
-    import pyarrow.compute as pc
-
     from plateau_spark.plans.blooms import (
         persist_bloom_dataframe,
         persist_bloom_rows,
@@ -1217,7 +1270,7 @@ def update_dataset_from_dataframes__iter(
         validate_compatible(meta.schema, df.schema)
         new_partitions.extend(
             _write_files(
-                df,
+                _in_commit_order(df, meta.schema, file_format),
                 store,
                 dataset_uuid,
                 meta.partition_keys,
@@ -1802,6 +1855,7 @@ def update_dataset_from_dataframe(
             meta.schema = merge_schemas_for_evolution(meta.schema, df.schema)
         else:
             validate_compatible(meta.schema, df.schema)
+            df = _in_commit_order(df, meta.schema, file_format)
     _validate_declared_columns(
         meta.schema, meta.partition_keys, dataset_uuid,
         index_columns=secondary_indices, bloom_columns=bloom_filter_columns,
@@ -1865,6 +1919,7 @@ def write_single_partition(
     meta = DatasetMetadata.load_if_exists(store, dataset_uuid)
     if meta is not None:
         validate_compatible(meta.schema, df.schema)
+        df = _in_commit_order(df, meta.schema, file_format)
         constraints = meta.metadata.get("constraints")
     return _write_files(
         df, store, dataset_uuid, partition_on,

@@ -616,10 +616,8 @@ def _load_constraints(root: str, uuid: str):
     from plateau_spark.core.metadata import DatasetMetadata
     from plateau_spark.core.store import Store
 
-    st = Store(root)
-    if not DatasetMetadata.exists(st, uuid):
-        return None
-    return DatasetMetadata.load(st, uuid).metadata.get("constraints") or None
+    meta = DatasetMetadata.load_if_exists(Store(root), uuid)
+    return None if meta is None else meta.metadata.get("constraints") or None
 
 
 def _enforce_constraints_arrow(table, constraints: dict) -> None:
@@ -717,6 +715,7 @@ class PlateauBatchWriter(DataSourceArrowWriter):
 
         from plateau_spark.core import naming
         from plateau_spark.core.store import Store
+        from plateau_spark.sources.serializers import statistics_columns
 
         batches = [b for b in iterator if b.num_rows > 0]
         if not batches:
@@ -729,7 +728,9 @@ class PlateauBatchWriter(DataSourceArrowWriter):
         staged = f"{self._uuid}/{naming.STAGING_DIR}/{self._commit_id}/{name}"
         final = f"{self._uuid}/{naming.TABLE_NAME}/{name}"
         buf = io.BytesIO()
-        pq.write_table(table, buf, compression="snappy")
+        pq.write_table(
+            table, buf, compression="snappy", write_statistics=statistics_columns(table)
+        )
         Store(self._root).put_bytes(staged, buf.getvalue())
         return _WrittenFile(staged, final, name)
 
@@ -752,9 +753,7 @@ class PlateauBatchWriter(DataSourceArrowWriter):
             store.delete(f"{self._uuid}/blooms")
             store.delete(f"{self._uuid}/{naming.TABLE_NAME}")
             store.delete(naming.metadata_key(self._uuid))
-            mp_key = naming.msgpack_metadata_key(self._uuid)
-            if store.exists(mp_key):
-                store.delete(mp_key)
+            store.delete(naming.msgpack_metadata_key(self._uuid))
             exists = False
         if exists:
             meta = DatasetMetadata.load(store, self._uuid)

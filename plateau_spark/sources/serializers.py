@@ -30,12 +30,18 @@ Catalyst handles each source's pushdown independently.
 
 from __future__ import annotations
 
+import uuid
 from functools import reduce
 from typing import Sequence
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.fs as pafs
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 
 from plateau_spark.core import naming
+from plateau_spark.core.urlencode import escape_path_name
 
 CSV_OPTIONS = {"sep": ";", "header": "true", "encoding": "UTF-8"}
 
@@ -61,15 +67,26 @@ def is_payload_file(key: str) -> bool:
     )
 
 
+HIVE_NULL_DIR = "__HIVE_DEFAULT_PARTITION__"
+
+
 def write_staged(
-    df: DataFrame,
+    df: "DataFrame | pa.Table",
     url: str,
     partition_on: Sequence[str],
     *,
     file_format: str = "parquet",
     compress: bool = True,
 ) -> None:
-    """One Spark write job into the staging prefix, format-dispatched."""
+    """Write a commit's payload files into the staging prefix ``url``. A
+    DataFrame is one Spark write job, format-dispatched. An Arrow table
+    is the driver placement of a keyed parquet write
+    (``plans/harvest.py`` ``driver_write``; ``url`` is a pyarrow
+    location): one snappy parquet file per partition key, laid out as
+    Spark lays it out (see ``_write_arrow``)."""
+    if isinstance(df, pa.Table):
+        _write_arrow(df, url, partition_on)
+        return
     writer = df.write.mode("append")
     if partition_on:
         writer = writer.partitionBy(*partition_on)
@@ -89,6 +106,58 @@ def write_staged(
         writer.option("compression", "snappy" if compress else "none").orc(url)
     else:
         raise ValueError(f"Unsupported file_format: {file_format!r}")
+
+
+def _hive_dir(column: str, value) -> str:
+    """The ``column=value`` directory Spark names for one key value."""
+    if value is None or value == "":
+        text = HIVE_NULL_DIR
+    elif isinstance(value, bool):
+        text = "true" if value else "false"
+    else:  # an int, a str or a datetime.date (isoformat)
+        text = escape_path_name(str(value))
+    return f"{escape_path_name(column)}={text}"
+
+
+def statistics_columns(table: pa.Table) -> list[str]:
+    """The columns whose footer statistics are written: every top-level
+    atomic column but a float one holding a NaN. pyarrow leaves NaN out
+    of min/max, and Spark's parquet reader would then skip a row group
+    on a ``>`` filter that its NaN rows satisfy; Spark's own writer
+    records the NaN bound instead, which no reader prunes on."""
+    return [
+        f.name for f in table.schema
+        if not pa.types.is_nested(f.type)
+        and not (pa.types.is_floating(f.type) and pc.any(pc.is_nan(table[f.name])).as_py())
+    ]
+
+
+def _write_arrow(table: pa.Table, location: str, partition_on: Sequence[str]) -> None:
+    """One file per distinct key of ``partition_on`` under hive
+    directories named as Spark's partitioned writer names them: each key
+    and value escaped like ``escapePathName``, a NULL or empty-string
+    value as ``__HIVE_DEFAULT_PARTITION__``, the key columns left out of
+    the file. Rows keep their order within a key."""
+    fs, root = pafs.FileSystem.from_uri(location)
+    keys = list(partition_on)
+    groups = (
+        table.select(keys)
+        .append_column("__row__", pa.array(range(table.num_rows), pa.int64()))
+        .group_by(keys, use_threads=False)
+        .aggregate([("__row__", "list")])
+    )
+    rows = groups.column("__row___list").combine_chunks()
+    data = table.drop_columns(keys)
+    job = uuid.uuid4()
+    for i, key in enumerate(groups.select(keys).to_pylist()):
+        part = data.take(rows[i].values)
+        directory = f"{root}/" + "/".join(_hive_dir(c, key[c]) for c in keys)
+        fs.create_dir(directory, recursive=True)
+        pq.write_table(
+            part, f"{directory}/part-{i:05d}-{job}.c000.snappy.parquet", filesystem=fs,
+            compression="snappy", write_statistics=statistics_columns(part),
+            store_schema=False,  # readers take types from the commit schema
+        )
 
 
 def _reader(spark: SparkSession, schema, base: str) -> DataFrameReader:

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from plateau_spark.core.caching import persist_shared
+from plateau_spark.core.caching import is_local_relation, persist_shared
 
 
 def windowed_event_counts(
@@ -496,10 +496,13 @@ def commit_stream_batch(
     staging files (explicit-path reads; GC reclaims them).
 
     The frame is persisted for the duration of the call (unless the
-    caller already pinned it): the ``isEmpty`` pre-check and the write
-    would otherwise each execute the batch's full derivation (anti-
-    joins, sketch aggregations, pruned dataset reads) once — shuffles
-    can't short-circuit an emptiness probe.
+    caller already pinned it, or its optimized plan is a
+    ``LocalRelation``): the ``isEmpty`` pre-check and the write would
+    otherwise each execute the batch's full derivation (anti-joins,
+    sketch aggregations, pruned dataset reads) once — shuffles can't
+    short-circuit an emptiness probe. A local relation costs nothing to
+    re-run, its ``isEmpty`` launches no job, and persisting it would
+    cost a job of its own.
 
     Returns True if the batch was committed, False if it was a replay
     or empty.
@@ -518,7 +521,7 @@ def commit_stream_batch(
         # every commit; the batch marker wins on key collision
         marker = {**extra_metadata, **marker}
     pinned = False
-    if not batch_df.is_cached:
+    if not batch_df.is_cached and not is_local_relation(batch_df):
         batch_df = batch_df.persist()
         pinned = True
     try:

@@ -60,6 +60,36 @@ def test_csv_uncompressed_and_mixed_formats(spark, store, cluster_df):
     assert sorted(r.P for r in pruned.collect()) == [1, 11]
 
 
+@pytest.mark.parametrize("append", ["update", "update_iter", "two_phase"])
+def test_csv_append_after_schema_evolution_reads_by_name(spark, store, append):
+    """A CSV file is read positionally under the commit schema, so an
+    append after an additive evolution (commit order ``k, v, a``) must
+    not come back shifted from its canonical frame order (``a, k, v``);
+    a CSV file from before the evolution reads ``a`` as NULL."""
+    from plateau_spark.sources.dataset import commit_dataset
+
+    store_dataframe_as_dataset(
+        spark, store, "ev", spark.createDataFrame([(1, 10)], "k long, v long"),
+        file_format="csv",
+    )
+    update_dataset_from_dataframe(
+        spark, store, "ev", spark.createDataFrame([(3, 30, "x")], "k long, v long, a string"),
+        schema_evolution=True,
+    )
+    new = spark.createDataFrame([(6, 60, "y"), (7, 70, "z")], "k long, v long, a string")
+    if append == "update":
+        update_dataset_from_dataframe(spark, store, "ev", new, file_format="csv")
+    elif append == "update_iter":
+        update_dataset_from_dataframes__iter(spark, store, "ev", [new], file_format="csv")
+    else:
+        staged = write_single_partition(spark, store, "ev", new, file_format="csv")
+        commit_dataset(spark, store, "ev", new_partitions=staged)
+    got = read_dataset_as_dataframe(spark, store, "ev")
+    assert sorted((r.k, r.v, r.a) for r in got.collect()) == [
+        (1, 10, None), (3, 30, "x"), (6, 60, "y"), (7, 70, "z"),
+    ]
+
+
 def test_unsupported_format_rejected(spark, store, cluster_df):
     with pytest.raises(ValueError, match="file_format"):
         store_dataframe_as_dataset(

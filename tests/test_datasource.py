@@ -204,6 +204,26 @@ def test_writer_create_append_overwrite(spark, tmp_path):
     assert glob.glob(root + "/w/.staging/*") == []
 
 
+def test_writer_keeps_nan_rows_under_range_filters(spark, tmp_path):
+    """NaN sorts above every number in Spark, so ``x > 5`` matches it.
+    The writer's pyarrow footers must not give a NaN-holding float
+    column min/max bounds that leave the NaN out (pyarrow's default),
+    or Spark's parquet reader skips the row group and loses the row."""
+    from plateau_spark.sources.dataset import read_table
+
+    root = str(tmp_path / "store")
+    df = spark.range(0, 4).coalesce(1).select(
+        F.col("id").alias("k"),
+        F.when(F.col("id") == 2, F.lit(float("nan")))
+        .otherwise(F.col("id").cast("double")).alias("x"),
+    )
+    df.write.format("plateau").option("store", root).option("dataset", "nan").mode(
+        "append"
+    ).save()
+    got = read_table(spark, Store(root), "nan", predicates=[[("x", ">", 5.0)]])
+    assert [r["k"] for r in got.collect()] == [2]
+
+
 def test_writer_rejects_partitioned_and_indexed_targets(spark, tmp_path):
     root = str(tmp_path / "store")
     df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, g string")

@@ -809,6 +809,61 @@ def test_funnel_steps_job_count_is_linear(spark):
     assert jobs[4] - jobs[2] <= 8, jobs  # linear, not quadratic, in k
 
 
+@pytest.mark.parametrize("placement", ["driver", "spark"])
+def test_stream_batch_commit_job_count(spark, tmp_path, monkeypatch, placement):
+    """A 200-row micro-batch into a keyed dataset with an index, a Bloom
+    sidecar and zone maps: with its write placed on the driver the whole
+    commit is ONE Spark job of one stage (the ``toArrow`` collect, no
+    Exchange) — no persist, no emptiness probe job, no shuffle, no
+    write job, and the harvest and sidecar folds run on the driver.
+    Forced to the Spark placement (``DRIVER_MAX_BYTES`` = 0) the write
+    keeps its shuffle and write job, and the harvest and folds their
+    Spark jobs: 12, one fewer than before the batch frame stopped being
+    persisted. Construction runs in a dedicated job group closed by a
+    one-job RDD sentinel, as in the dsir laziness probe."""
+    import time
+    import uuid as _uuid
+
+    import pandas as pd
+
+    import plateau_spark.plans.harvest as harvest_mod
+    from plateau_spark.core.store import Store
+    from plateau_spark.streaming.events import commit_stream_batch
+
+    def frame(lo, hi):  # from pandas, as a stream sink's batch: a LocalRelation
+        n = pd.RangeIndex(lo, hi).to_series()
+        return spark.createDataFrame(
+            pd.DataFrame({"k": n, "m": n % 4, "tag": "t" + (n % 7).astype(str), "num": n * 3})
+        )
+
+    store = Store(str(tmp_path / "store"))
+    if placement == "spark":
+        monkeypatch.setattr(harvest_mod, "DRIVER_MAX_BYTES", 0)
+    store_dataframe_as_dataset(
+        spark, store, "ev", frame(0, 400), partition_on=["m"],
+        secondary_indices=["tag"], bloom_filter_columns=["k"], zone_map_columns=["num"],
+    )
+    batch = frame(400, 600)
+    sc = spark.sparkContext
+    group = f"stream-commit-{_uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "stream batch job-count probe")
+    try:
+        assert commit_stream_batch(spark, store, "ev", batch, 1, partition_on=["m"])
+        sc.parallelize([1]).count()  # sentinel: one job, one stage
+    finally:
+        sc._jsc.clearJobGroup()
+    tracker = sc.statusTracker()
+    deadline = time.time() + 30
+    while len(tracker.getJobIdsForGroup(group)) < 2 and time.time() < deadline:
+        time.sleep(0.05)
+    stages = [len(tracker.getJobInfo(j).stageIds) for j in sorted(tracker.getJobIdsForGroup(group))]
+    if placement == "driver":
+        assert stages == [1, 1], stages
+    else:
+        assert len(stages) - 1 == 12 and max(stages) > 1, stages
+    assert read_table(spark, store, "ev").count() == 600
+
+
 def test_pagerank_iteration_is_one_join_one_agg(spark):
     """Each PageRank iteration joins edges⋈ranks on src and aggregates
     on dst — equi-joins only, aggregation with partial combine."""
