@@ -16,6 +16,9 @@ each Bloom column's bitmap words, reading each needed column once.
            and its cached rows feed the zone maps, index folds and Bloom
            writes.
 
+A commit with no SparkSession (the DataSource writers' commit hook) takes
+the driver placement whatever its size.
+
 The write before the harvest has the same two placements, chosen by
 ``driver_write`` from the same ``DRIVER_MAX_BYTES``: a keyed parquet
 write whose frame the optimizer sizes within it is collected once with
@@ -115,7 +118,7 @@ def harvest_file(pf, request: Request) -> tuple[dict, dict, dict]:
 
 
 def driver_files(
-    store: Store, items: Sequence, opened: contextlib.ExitStack
+    store: Store, items: Sequence, opened: contextlib.ExitStack, bounded: bool = True
 ) -> "list | None":
     """The placement gate: the open ``pq.ParquetFile`` of each
     ``(partition, request)`` when the harvest fits the driver, else None
@@ -123,23 +126,27 @@ def driver_files(
     ``DRIVER_MAX_FILES`` files; when data columns are read, the files
     that read them also fit ``DRIVER_MAX_BYTES`` on disk and
     ``DRIVER_MAX_ROWS`` rows, counted from the footers. An unreadable
-    file takes the Spark placement. ``opened`` closes the files."""
-    if len(items) > DRIVER_MAX_FILES:
+    file takes the Spark placement. With ``bounded`` False (no session
+    to run a job) every file is opened, whatever the totals, and an
+    unreadable file raises. ``opened`` closes the files."""
+    if bounded and len(items) > DRIVER_MAX_FILES:
         return None
     reading = [i for i, (_, r) in enumerate(items) if r.index or r.bloom]
     try:
-        if reading and (
+        if bounded and reading and (
             sum(store.size(items[i][0].file) for i in reading) > DRIVER_MAX_BYTES
         ):
             return None
         files = [opened.enter_context(store.open_parquet(p.file)) for p, _ in items]
     except (OSError, pa.ArrowException):
+        if not bounded:
+            raise
         return None
     rows = sum(  # a file that predates every column it is asked for reads none
         pf.metadata.num_rows for pf, (_, r) in zip(files, items)
         if {*r.index, *(c for c, _, _ in r.bloom)} & set(pf.schema_arrow.names)
     )
-    return None if rows > DRIVER_MAX_ROWS else files
+    return None if bounded and rows > DRIVER_MAX_ROWS else files
 
 
 def driver_write(
@@ -231,15 +238,16 @@ class Harvest:
 
 def harvest(spark, store: Store, schema, items: Sequence) -> Harvest:
     """Run the kernel over ``(partition, Request)`` items in the placement
-    ``driver_files`` picks. Non-parquet files and empty requests are
-    skipped: such files get no zone map, no index pairs and no Bloom
-    rows (they are never pruned by a Bloom)."""
+    ``driver_files`` picks; the driver whatever the size when ``spark``
+    is None. Non-parquet files and empty requests are skipped: such
+    files get no zone map, no index pairs and no Bloom rows (they are
+    never pruned by a Bloom)."""
     items = [(p, r) for p, r in items if p.file.endswith(".parquet") and any(r)]
     bad = [k for _, r in items for _, _, k in r.bloom if k > _K_MAX]
     if bad:
         raise ValueError(f"k must be <= {_K_MAX}, got {bad[0]}")
     with contextlib.ExitStack() as opened:
-        files = driver_files(store, items, opened)
+        files = driver_files(store, items, opened, bounded=spark is not None)
         if files is not None:
             return Harvest(schema, files=[
                 (p.label, *harvest_file(pf, r)) for pf, (p, r) in zip(files, items)

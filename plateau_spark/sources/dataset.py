@@ -195,6 +195,19 @@ def _commit_base_snapshot(meta: DatasetMetadata) -> dict:
     }
 
 
+def _overwrite_base(meta: DatasetMetadata, old: DatasetMetadata | None) -> dict | None:
+    """The ``_commit_files`` base of the new ``meta`` replacing ``old``
+    (None when there is no dataset to replace): ``meta`` commits as
+    generation N+1 over ``old``'s N, so every file of ``old`` becomes
+    garbage for GC and time travel to N stays valid until GC. The commit
+    never merges: a commit that landed since ``old`` was loaded raises
+    ``ConcurrentCommitError``, also when ``old`` has no partitions."""
+    if old is None:
+        return None
+    meta.generation = old.generation
+    return {**_commit_base_snapshot(old), "replace": True}
+
+
 def _deep_override(dst: dict, src: dict) -> None:
     """Nested dict.update — unlike ``combine_metadata`` (which DROPS
     conflicting leaves, the reference's user-metadata rule), an override
@@ -287,7 +300,8 @@ def _commit_update_with_merge(
     the correct serialized outcome — re-apply our additions onto the
     latest document and put that. Anything else raises
     ``ConcurrentCommitError`` instead of silently dropping the other
-    writer's commit (which is what a blind read-modify-write does).
+    writer's commit (which is what a blind read-modify-write does). An
+    overwrite (``replace``, see ``_overwrite_base``) never merges.
 
     The whole read-merge-put critical section runs under
     ``store.commit_lock`` (round 9): the conflict re-read alone left a
@@ -314,6 +328,7 @@ def _commit_update_with_merge_locked(
     removed: Sequence[str],
     extra_metadata: dict | None,
     override_metadata: dict | None = None,
+    replace: bool = False,
 ) -> DatasetMetadata:
     from plateau_spark.core.schema import schema_to_json
 
@@ -334,7 +349,8 @@ def _commit_update_with_merge_locked(
     ) != base_schema_json
     they_deleted = bool(base_labels - set(latest.partitions))
     unsafe = (
-        bool(removed)
+        replace
+        or bool(removed)
         or they_deleted
         or our_schema_changed
         or their_schema_changed
@@ -817,11 +833,11 @@ def _refresh_blooms(
     ``n_bits``/``k`` (plans/blooms.py).
 
     For a driver-placed harvest whose old sidecar fits
-    ``sidecar_fits_driver``, the old sidecar table, filtered by label
-    with ``is_in``, and the new rows are concatenated as Arrow tables
-    (zero Spark jobs). Otherwise ONE Spark job unions the new rows with
-    the old sidecar's (labels never repeat, so there is nothing to
-    aggregate)."""
+    ``sidecar_fits_driver`` (any size when ``spark`` is None), the old
+    sidecar table, filtered by label with ``is_in``, and the new rows
+    are concatenated as Arrow tables (zero Spark jobs). Otherwise ONE
+    Spark job unions the new rows with the old sidecar's (labels never
+    repeat, so there is nothing to aggregate)."""
     from plateau_spark.plans.blooms import (
         persist_bloom_dataframe,
         persist_bloom_rows,
@@ -837,7 +853,7 @@ def _refresh_blooms(
         rows = new if isinstance(new, pa.Table) else None
         if rows is not None and old_key is not None:
             old = None
-            if sidecar_fits_driver(store, old_key):
+            if spark is None or sidecar_fits_driver(store, old_key):
                 try:
                     old = read_bloom_table(store, old_key)
                 except OSError:
@@ -934,8 +950,14 @@ def _commit_files(
        the write job, so write-time Observation values land in this
        commit — and commit: one put when ``base`` is None (creation),
        else ``_commit_update_with_merge`` against the ``base`` snapshot
-       (a commit that removes labels raises ConcurrentCommitError on a
-       concurrent commit instead of silently dropping it).
+       (a commit that removes labels, or an overwrite, raises
+       ConcurrentCommitError on a concurrent commit instead of silently
+       dropping it).
+
+    ``spark`` is None where no session exists (the DataSource writers'
+    commit hook runs in a Python worker): every step then runs on the
+    driver — the harvest opens every new file and a Bloom merge reads
+    the old sidecar, whatever their size.
     """
     new_partitions = list(new_partitions)
     tracked = {c for p in meta.partitions.values() for c in p.stats}
@@ -1005,24 +1027,27 @@ def _create_preamble(
     partition_on: Sequence[str] | None,
     secondary_indices: Sequence[str] | None,
     overwrite: bool,
-) -> tuple[Store, str, bool]:
-    """Checks shared by the store paths: metadata version, dataset uuid
-    (generated when None), index/key overlap, and the overwrite rule.
-    Returns ``(store, dataset_uuid, exists)``; an existing dataset raises
-    unless ``overwrite=True``, and the caller deletes it only once the
-    new data has passed its checks, just before the first write job."""
+) -> tuple[Store, str, DatasetMetadata | None]:
+    """Checks shared by the store paths and the header: metadata
+    version, dataset uuid (generated when None), index/key overlap, and
+    the overwrite rule. Returns ``(store, dataset_uuid, old)``, ``old``
+    being the existing dataset's commit loaded once, or None. An
+    existing dataset raises unless ``overwrite=True``; the caller then
+    commits its new files over ``old`` (``_overwrite_base``), so the
+    replaced generation stays readable whatever fails before the
+    commit."""
     naming.verify_metadata_version(metadata_version)
     if dataset_uuid is None:
         dataset_uuid = naming.gen_uuid()
     naming.validate_dataset_uuid(dataset_uuid)
     raise_if_indices_overlap(partition_on, secondary_indices)
     store = _ensure_store(store)
-    exists = DatasetMetadata.exists(store, dataset_uuid)
-    if exists and not overwrite:
+    old = DatasetMetadata.load_if_exists(store, dataset_uuid)
+    if old is not None and not overwrite:
         raise RuntimeError(
             f"Dataset `{dataset_uuid}` already exists and overwrite is not permitted"
         )
-    return store, dataset_uuid, exists
+    return store, dataset_uuid, old
 
 
 @normalize_args("partition_on", "secondary_indices", "sort_partitions_by", "bucket_by", "columns", "dispatch_by", "zone_map_columns", "bloom_filter_columns")
@@ -1086,11 +1111,20 @@ def store_dataframe_as_dataset(
     (more files, full write parallelism; pair with num_buckets for a
     bounded file count).
 
+    ``overwrite=True`` replaces an existing dataset in one commit,
+    generation N+1 over its N. The schema, partition keys, indices,
+    Blooms, zone maps and metadata come from this call alone; the
+    replaced files become garbage for ``garbage_collect_dataset``, and
+    time travel to generation N works until GC. A failure before the
+    commit leaves generation N as it was, and a commit that lands
+    between this call's load and its commit raises
+    ``ConcurrentCommitError``.
+
     Reference: store_dataframes_as_dataset
     (/root/reference/plateau/io/eager.py:449-491) + write_partition
     (plateau/io_components/write.py:38-79).
     """
-    store, dataset_uuid, exists = _create_preamble(
+    store, dataset_uuid, old = _create_preamble(
         store, dataset_uuid, metadata_version, partition_on, secondary_indices, overwrite
     )
     partition_on = list(partition_on or [])
@@ -1099,8 +1133,6 @@ def store_dataframe_as_dataset(
         df.schema, partition_on, dataset_uuid, index_columns=secondary_indices,
         bloom_columns=bloom_filter_columns, zone_map_columns=zone_map_columns,
     )
-    if exists:
-        delete_dataset(store, dataset_uuid)
     partitions = _write_files(
         df,
         store,
@@ -1120,7 +1152,7 @@ def store_dataframe_as_dataset(
     # index's token totals) land in the same atomic commit without a
     # second data pass
     return _commit_files(
-        spark, store, meta, None, partitions,
+        spark, store, meta, _overwrite_base(meta, old), partitions,
         index_columns=secondary_indices, bloom_columns=bloom_filter_columns,
         bloom_n_bits=bloom_n_bits, bloom_k=bloom_k,
         zone_map_columns=zone_map_columns, metadata=metadata,
@@ -1178,10 +1210,14 @@ def store_dataframes_as_dataset__iter(
     earlier elements' files stay invisible (GC-reclaimable staging
     leftovers only).
 
+    ``overwrite=True``: same contract as :func:`store_dataframe_as_dataset`
+    — one commit of generation N+1; a failure in any element leaves
+    generation N as it was.
+
     Reference: store_dataframes_as_dataset__iter
     (/root/reference/plateau/io/iter.py:166-245).
     """
-    store, dataset_uuid, exists = _create_preamble(
+    store, dataset_uuid, old = _create_preamble(
         store, dataset_uuid, metadata_version, partition_on, secondary_indices, overwrite
     )
     partition_on = list(partition_on or [])
@@ -1194,8 +1230,6 @@ def store_dataframes_as_dataset__iter(
             _validate_declared_columns(
                 schema, partition_on, dataset_uuid, index_columns=secondary_indices
             )
-            if exists:
-                delete_dataset(store, dataset_uuid)
         else:
             validate_compatible(schema, df.schema)
         partitions.extend(
@@ -1214,8 +1248,8 @@ def store_dataframes_as_dataset__iter(
         raise ValueError("Cannot store a dataset from an empty generator")
     meta = DatasetMetadata(uuid=dataset_uuid, partition_keys=partition_on, schema=schema)
     return _commit_files(
-        spark, store, meta, None, partitions, index_columns=secondary_indices,
-        metadata=metadata,
+        spark, store, meta, _overwrite_base(meta, old), partitions,
+        index_columns=secondary_indices, metadata=metadata,
         override_metadata=check_constraints and {"constraints": dict(check_constraints)},
     )
 
@@ -1301,20 +1335,26 @@ def create_empty_dataset_header(
     partition_on: Sequence[str] | None = None,
     overwrite: bool = False,
 ) -> DatasetMetadata:
-    """Schema-only dataset (reference: plateau/io/eager.py:494-552)."""
-    store = _ensure_store(store)
-    if not overwrite and DatasetMetadata.exists(store, dataset_uuid):
-        raise RuntimeError(f"Dataset `{dataset_uuid}` already exists")
+    """Schema-only dataset (reference: plateau/io/eager.py:494-552).
+
+    ``overwrite=True`` replaces an existing dataset in one commit,
+    generation N+1 (time travel to N works until GC). A header lists no
+    partitions (``explicit_partitions`` False), and GC reclaims table
+    files only from a dataset that lists them, so the files a header
+    overwrite replaces are reclaimed by the first GC after the next
+    explicit commit (``commit_dataset``, an update)."""
     from plateau_spark.core.schema import normalize_schema
 
-    ds = DatasetMetadata(
+    store, dataset_uuid, old = _create_preamble(
+        store, dataset_uuid, naming.METADATA_VERSION, partition_on, None, overwrite
+    )
+    meta = DatasetMetadata(
         uuid=dataset_uuid,
         partition_keys=list(partition_on or []),
         schema=normalize_schema(schema),
         explicit_partitions=False,
     )
-    ds.commit(store)
-    return ds
+    return _commit_files(spark, store, meta, _overwrite_base(meta, old), [])
 
 
 # ---------------------------------------------------------------------------
@@ -3042,9 +3082,7 @@ def delete_dataset(store: Store | str, dataset_uuid: str) -> None:
     store.delete(f"{dataset_uuid}/{naming.TABLE_NAME}")
     store.delete(dataset_uuid)
     store.delete(naming.metadata_key(dataset_uuid))
-    mp_key = naming.msgpack_metadata_key(dataset_uuid)
-    if store.exists(mp_key):
-        store.delete(mp_key)
+    store.delete(naming.msgpack_metadata_key(dataset_uuid))
 
 
 def dataset_size_bytes(store: Store | str, dataset_uuid: str) -> int:

@@ -415,7 +415,9 @@ class PlateauStreamReader(DataSourceStreamReader):
     guarantees a label's files are fully written before the label can
     appear in any snapshot. Follow APPEND-ONLY datasets: a compaction
     rewrites every label, which re-delivers the full dataset under the
-    new labels (same semantics the label-diff had)."""
+    new labels (same semantics the label-diff had); an overwrite is one
+    more generation and re-delivers the same way — its rows are the next
+    micro-batch."""
 
     def __init__(self, options):
         self._root = options["store"]
@@ -674,15 +676,15 @@ class _WrittenFile(WriterCommitMessage):
 
 class PlateauBatchWriter(DataSourceArrowWriter):
     """Executor-parallel parquet writes into the staging prefix; the
-    driver-side ``commit`` renames staged files and writes the metadata
-    document — the SAME atomic protocol as ``store_dataframe_as_dataset``
-    (readers never see a row before the single commit-file put; ``abort``
-    deletes only invisible staged files).
-
-    v1 scope (documented): flat layout only (``partition_on``: use
-    ``store_dataframe_as_dataset``), and appends into index-carrying
-    datasets are rejected (index refresh needs Spark jobs the writer
-    hook doesn't run).
+    driver-side ``commit`` renames the staged files and commits them
+    through ``_commit_files``, the commit of every mutating API (readers
+    never see a row before the single commit-file put; ``abort`` deletes
+    only invisible staged files). The hook has no SparkSession, so the
+    zone-map harvest and the Bloom refresh run in the committing process.
+    Mode ``overwrite`` commits generation N+1 with the written schema
+    alone; time travel to N works until GC. Flat layout only
+    (``partition_on``: use ``store_dataframe_as_dataset``); the appends
+    ``_append_target`` refuses are refused.
     """
 
     def __init__(self, options, schema, overwrite: bool):
@@ -738,69 +740,15 @@ class PlateauBatchWriter(DataSourceArrowWriter):
     def commit(self, messages):
         from plateau_spark.core.metadata import DatasetMetadata
         from plateau_spark.core.store import Store
-        from plateau_spark.core.schema import validate_compatible
+        from plateau_spark.sources.dataset import _commit_files, _overwrite_base
 
         store = Store(self._root)
-        files = [m for m in messages if m is not None and m.staged_key]
-        exists = DatasetMetadata.exists(store, self._uuid)
-        if exists and self._overwrite:
-            # delete COMMITTED state only — delete_dataset() would wipe
-            # the whole <uuid>/ prefix including the .staging dir that
-            # holds the files this very commit is about to publish
-            from plateau_spark.core import naming
-
-            store.delete(f"{self._uuid}/indices")
-            store.delete(f"{self._uuid}/blooms")
-            store.delete(f"{self._uuid}/{naming.TABLE_NAME}")
-            store.delete(naming.metadata_key(self._uuid))
-            store.delete(naming.msgpack_metadata_key(self._uuid))
-            exists = False
-        if exists:
-            meta = DatasetMetadata.load(store, self._uuid)
-            if meta.indices:
-                self.abort(messages)
-                raise ValueError(
-                    "plateau writer cannot append to a dataset with secondary "
-                    "indices; use update_dataset_from_dataframe()"
-                )
-            if (meta.metadata.get("constraints") or None) != self._constraints:
-                # the executor tasks enforced the constraint set snapshotted
-                # at plan time; a set that appeared or changed since (a
-                # concurrent ALTER) was NOT what the staged rows were
-                # validated against — refuse rather than commit unvalidated
-                self.abort(messages)
-                raise ValueError(
-                    "plateau writer: the dataset's CHECK constraints changed "
-                    "between write planning and commit — staged rows were "
-                    "validated against a stale constraint set; retry the write"
-                )
-            if meta.partition_keys:
-                self.abort(messages)
-                raise ValueError(
-                    "plateau writer is flat-layout only; this dataset is "
-                    f"partitioned by {meta.partition_keys}"
-                )
-            if meta.schema is not None:
-                validate_compatible(meta.schema, self._schema)
+        if self._overwrite:
+            meta = DatasetMetadata(uuid=self._uuid, schema=self._schema)
+            base = _overwrite_base(meta, DatasetMetadata.load_if_exists(store, self._uuid))
         else:
-            meta = DatasetMetadata(
-                uuid=self._uuid, partitions={}, partition_keys=[], schema=self._schema
-            )
-        from plateau_spark.sources.dataset import (
-            _commit_base_snapshot,
-            _commit_update_with_merge,
-        )
-
-        base = _commit_base_snapshot(meta)
-        new_parts = _publish_staged(store, meta, files)
-        if not exists:
-            meta.commit(store)  # fresh dataset: nothing to race with
-        else:
-            # append-only by construction → concurrent committers merge
-            _commit_update_with_merge(
-                store, meta, new_partitions=new_parts, removed=[],
-                extra_metadata=None, **base,
-            )
+            meta, base = _append_target(self, store, messages)
+        _commit_files(None, store, meta, base, _publish_staged(store, messages))
 
     def abort(self, messages):
         from plateau_spark.core.store import Store
@@ -808,14 +756,55 @@ class PlateauBatchWriter(DataSourceArrowWriter):
         _drop_staged(Store(self._root), messages, self._uuid, self._commit_id)
 
 
-def _publish_staged(store, meta, files) -> list:
+def _append_target(writer, store, messages) -> tuple:
+    """``(meta, base)`` for ``_commit_files`` when either writer appends:
+    the dataset's commit loaded once, or a fresh document and no base.
+    Refused, after the staged files are dropped: a dataset with
+    secondary indices (their fold may need a Spark job, which the commit
+    hook cannot launch), a partitioned dataset (the writers lay files
+    out flat), and a CHECK constraint set that appeared or changed since
+    the tasks snapshotted it (the staged rows were not validated
+    against it). An incompatible schema raises."""
+    from plateau_spark.core.metadata import DatasetMetadata
+    from plateau_spark.core.schema import validate_compatible
+    from plateau_spark.sources.dataset import _commit_base_snapshot
+
+    meta = DatasetMetadata.load_if_exists(store, writer._uuid)
+    if meta is None:
+        return DatasetMetadata(uuid=writer._uuid, schema=writer._schema), None
+    if meta.indices or meta.embedded_indices:
+        problem = (
+            "cannot append to a dataset with secondary indices; use "
+            "update_dataset_from_dataframe() or stream_to_dataset()"
+        )
+    elif meta.partition_keys:
+        problem = (
+            "is flat-layout only; this dataset is partitioned by "
+            f"{meta.partition_keys}"
+        )
+    elif (meta.metadata.get("constraints") or None) != writer._constraints:
+        problem = (
+            "found the dataset's CHECK constraints changed since the write "
+            "was planned, so the staged rows were validated against a stale "
+            "set; retry the write (restart a stream so it re-snapshots them)"
+        )
+    else:
+        if meta.schema is not None:
+            validate_compatible(meta.schema, writer._schema)
+        return meta, _commit_base_snapshot(meta)
+    _drop_staged(store, messages, writer._uuid, writer._commit_id)
+    raise ValueError(f"plateau writer {problem}")
+
+
+def _publish_staged(store, messages) -> list:
     """Driver-side publish step of both writers: rename each staged file
-    to its final key and add its ``Partition`` to ``meta``, then drop the
-    now-empty staging dirs. Returns the new partitions."""
+    to its final key, then drop the now-empty staging dirs. Returns the
+    new ``Partition``s."""
     import posixpath
 
     from plateau_spark.core.metadata import Partition
 
+    files = [m for m in messages if m is not None and m.staged_key]
     seen: set[str] = set()
     new_parts = []
     for m in files:
@@ -829,9 +818,7 @@ def _publish_staged(store, meta, files) -> list:
             # already renamed is fine; anything else is a real loss
             if not store.exists(m.final_key):
                 raise
-        p = Partition(label=m.label, file=m.final_key)
-        meta.partitions[m.label] = p
-        new_parts.append(p)
+        new_parts.append(Partition(label=m.label, file=m.final_key))
     # staging dirs derive from the messages — executors may have staged
     # under distinct commit ids
     for d in {posixpath.dirname(m.staged_key) for m in files}:
@@ -907,37 +894,11 @@ class PlateauStreamWriter(DataSourceStreamArrowWriter):
 
     # driver side
     def commit(self, messages, batchId: int) -> None:
-        from plateau_spark.core.metadata import DatasetMetadata
-        from plateau_spark.core.schema import validate_compatible
         from plateau_spark.core.store import Store
+        from plateau_spark.sources.dataset import _commit_files
 
         store = Store(self._root)
-        files = [m for m in messages if m is not None and m.staged_key]
-        if DatasetMetadata.exists(store, self._uuid):
-            meta = DatasetMetadata.load(store, self._uuid)
-            if meta.indices or meta.partition_keys:
-                self.abort(messages, batchId)
-                raise ValueError(
-                    "plateau streaming sink requires a flat, index-free "
-                    "dataset; use stream_to_dataset() for richer layouts"
-                )
-            if (meta.metadata.get("constraints") or None) != self._constraints:
-                # executor tasks enforced the constraint set snapshotted at
-                # stream start; a set that appeared or changed since was not
-                # what this batch's rows were validated against — stop the
-                # stream rather than commit unvalidated rows
-                self.abort(messages, batchId)
-                raise ValueError(
-                    "plateau streaming sink: the dataset's CHECK constraints "
-                    "changed while the stream was running — restart the "
-                    "stream so the sink re-snapshots and enforces them"
-                )
-            if meta.schema is not None:
-                validate_compatible(meta.schema, self._schema)
-        else:
-            meta = DatasetMetadata(
-                uuid=self._uuid, partitions={}, partition_keys=[], schema=self._schema
-            )
+        meta, base = _append_target(self, store, messages)
         last = (
             meta.metadata.get("stream_sink", {})
             .get(self._sink_id, {})
@@ -963,30 +924,12 @@ class PlateauStreamWriter(DataSourceStreamArrowWriter):
                 f"original checkpointLocation to resume, or set a new "
                 f'.option("sink_id", ...) for a new query.'
             )
-        from plateau_spark.sources.dataset import (
-            _commit_base_snapshot,
-            _commit_update_with_merge,
+        # the marker travels as an override: combine_metadata would drop
+        # the conflicting leaf
+        _commit_files(
+            None, store, meta, base, _publish_staged(store, messages),
+            override_metadata={"stream_sink": {self._sink_id: {"last_batch": batchId}}},
         )
-
-        base = _commit_base_snapshot(meta)
-        fresh = not DatasetMetadata.exists(store, self._uuid)
-        new_parts = _publish_staged(store, meta, files)
-        if fresh:
-            meta.metadata.setdefault("stream_sink", {})[self._sink_id] = {
-                "last_batch": batchId
-            }
-            meta.commit(store)
-        else:
-            # marker travels as an override so it survives BOTH commit
-            # paths (combine_metadata would drop the conflicting leaf)
-            _commit_update_with_merge(
-                store, meta, new_partitions=new_parts, removed=[],
-                extra_metadata=None,
-                override_metadata={
-                    "stream_sink": {self._sink_id: {"last_batch": batchId}}
-                },
-                **base,
-            )
 
     def abort(self, messages, batchId: int) -> None:
         from plateau_spark.core.store import Store

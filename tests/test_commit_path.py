@@ -4,7 +4,9 @@ sidecars name exactly the live files, the index sidecars name no dead
 file and cover every live value, every live file carries stats for each
 tracked zone-map column, and a point lookup prunes every new file that
 does not hold the value. Declared columns are validated before the
-write job, so a bad call stages nothing."""
+write job, so a bad call stages nothing. An overwrite is one more
+commit: it never deletes first, and it never merges with a concurrent
+commit."""
 
 from __future__ import annotations
 
@@ -13,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import plateau_spark.plans.harvest as harvest_mod
+import plateau_spark.sources.dataset as ds_mod
 from plateau_spark.core.metadata import DatasetMetadata
 from plateau_spark.operators.sketches import (
     build_histogram_stats,
@@ -22,9 +25,11 @@ from plateau_spark.plans.blooms import read_bloom_table
 from plateau_spark.plans.pruning import explain_scan
 from plateau_spark.streaming.events import commit_stream_batch
 from plateau_spark.sources.dataset import (
+    ConcurrentCommitError,
     build_dataset_indices,
     commit_dataset,
     compact_dataset,
+    create_empty_dataset_header,
     delete_rows_from_dataset,
     merge_into_dataset,
     merge_upsert_into_dataset,
@@ -36,6 +41,7 @@ from plateau_spark.sources.dataset import (
     update_dataset_from_dataframes__iter,
     write_single_partition,
 )
+from plateau_spark.sources.datasource import register_plateau_datasource
 
 UUID = "d"
 
@@ -182,17 +188,121 @@ def test_update_rejects_bad_columns_before_writing(spark, store, kwargs, error, 
     assert sorted(store.iter_keys(f"{UUID}/")) == keys
 
 
-def test_failed_overwrite_keeps_the_existing_dataset(spark, store):
-    """``overwrite=True`` deletes the existing dataset only after the new
-    data's declared columns pass their checks."""
-    _fixture(spark, store)
-    before = DatasetMetadata.load(store, UUID)
-    with pytest.raises(ValueError, match="not in schema"):
-        store_dataframe_as_dataset(
-            spark, store, UUID, _rows(spark, 0, 20), overwrite=True,
-            bloom_filter_columns=["nope"],
+def _raising(spark):
+    """A frame whose write job raises inside a Python UDF."""
+    boom = F.udf(lambda k: k // 0, "long")
+    return _rows(spark, 0, 20).withColumn("num", boom("k"))
+
+
+FAILED_OVERWRITES = {
+    "bad_column": (ValueError, "not in schema", lambda spark, store: store_dataframe_as_dataset(
+        spark, store, UUID, _rows(spark, 0, 20), overwrite=True,
+        bloom_filter_columns=["nope"],
+    )),
+    "udf_store": (Exception, "ZeroDivisionError", lambda spark, store: store_dataframe_as_dataset(
+        spark, store, UUID, _raising(spark), overwrite=True,
+    )),
+    "udf_store_iter": (Exception, "ZeroDivisionError", lambda spark, store: (
+        store_dataframes_as_dataset__iter(
+            spark, store, UUID, iter([_rows(spark, 0, 20), _raising(spark)]), overwrite=True,
         )
-    assert DatasetMetadata.load(store, UUID).partitions.keys() == before.partitions.keys()
+    )),
+}
+
+
+def test_failed_overwrite_keeps_the_existing_dataset(spark, store):
+    """An overwrite that fails before its commit — a declared column the
+    new data lacks, or a write job that raises, in the store and the
+    ``__iter`` store — leaves generation N readable with its rows."""
+    _fixture(spark, store)
+    update_dataset_from_dataframe(spark, store, UUID, _rows(spark, 300, 310))
+    before = DatasetMetadata.load(store, UUID)
+    for failure, (error, match, overwrite) in FAILED_OVERWRITES.items():
+        with pytest.raises(error, match=match):
+            overwrite(spark, store)
+        after = DatasetMetadata.load(store, UUID)
+        assert after.generation == before.generation == 2, failure
+        assert after.partitions.keys() == before.partitions.keys(), failure
+        got = sorted(r.k for r in read_table(spark, store, UUID).collect())
+        assert got == list(range(310)), failure
+
+
+def _write_overwrite(spark, store, df):
+    register_plateau_datasource(spark)
+    df.write.format("plateau").option("store", store.root).option(
+        "dataset", UUID
+    ).mode("overwrite").save()
+
+
+OVERWRITES = {
+    "store": lambda spark, store: store_dataframe_as_dataset(
+        spark, store, UUID, _rows(spark, 100, 104), partition_on=["k"], overwrite=True,
+    ),
+    "store_iter": lambda spark, store: store_dataframes_as_dataset__iter(
+        spark, store, UUID, iter([_rows(spark, 100, 102), _rows(spark, 102, 104)]),
+        partition_on=["k"], overwrite=True,
+    ),
+    "header": lambda spark, store: create_empty_dataset_header(
+        spark, store, UUID, _rows(spark, 0, 1).schema, partition_on=["k"], overwrite=True,
+    ),
+    "writer": lambda spark, store: _write_overwrite(spark, store, _rows(spark, 100, 104)),
+}
+
+
+@pytest.mark.parametrize("op", list(OVERWRITES))
+def test_overwrite_commits_the_next_generation(spark, store, op):
+    """After 3 generations an overwrite commits generation 4 whose
+    document carries only what the overwrite declared; time travel to 3
+    still reads the replaced rows, and the next commit is generation 5."""
+    store_dataframe_as_dataset(
+        spark, store, UUID, _rows(spark, 0, 10), partition_on=["p"],
+        secondary_indices=["tag"], bloom_filter_columns=["k"],
+        zone_map_columns=["num"], metadata={"owner": "etl"},
+    )
+    for lo in (10, 20):
+        update_dataset_from_dataframe(spark, store, UUID, _rows(spark, lo, lo + 10))
+    OVERWRITES[op](spark, store)
+    meta = DatasetMetadata.load(store, UUID)
+    assert meta.generation == 4
+    assert meta.partition_keys == ([] if op == "writer" else ["k"])
+    assert not (meta.indices or meta.blooms or "owner" in meta.metadata)
+    assert not any(p.stats for p in meta.partitions.values())
+    new = [] if op == "header" else list(range(100, 104))
+    assert sorted(r.k for r in read_table(spark, store, UUID).collect()) == new
+    old = read_table(spark, store, UUID, generation=3).collect()
+    assert sorted(r.k for r in old) == list(range(30))
+    nxt = update_dataset_from_dataframe(spark, store, UUID, _rows(spark, 200, 202))
+    assert nxt.generation == 5
+
+
+@pytest.mark.parametrize(
+    "op, old", [("store", "full"), ("store", "header"), ("store_iter", "full"), ("header", "full")]
+)
+def test_overwrite_raises_on_a_concurrent_commit(spark, store, monkeypatch, op, old):
+    """A commit that lands between an overwrite's load and its commit
+    makes the overwrite raise — never a merge, also when the replaced
+    dataset is a header with no partitions — and the concurrent commit
+    stands."""
+    if old == "header":
+        create_empty_dataset_header(spark, store, UUID, _rows(spark, 0, 1).schema, partition_on=["p"])
+    else:
+        store_dataframe_as_dataset(spark, store, UUID, _rows(spark, 0, 10), partition_on=["p"])
+    real = ds_mod._commit_files
+    armed = [True]
+
+    def racing(*args, **kwargs):
+        if armed:
+            armed.pop()
+            update_dataset_from_dataframe(spark, store, UUID, _rows(spark, 50, 60))
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(ds_mod, "_commit_files", racing)
+    with pytest.raises(ConcurrentCommitError):
+        OVERWRITES[op](spark, store)
+    monkeypatch.undo()
+    assert DatasetMetadata.load(store, UUID).generation == 2
+    got = sorted(r.k for r in read_table(spark, store, UUID).collect())
+    assert got == (list(range(50, 60)) if old == "header" else [*range(10), *range(50, 60)])
 
 
 def _append(spark, store):

@@ -9,7 +9,8 @@ test_conformance_lifecycle.py do not cross:
 
   op (delete_dataset / garbage_collect_dataset)
   x pre-op state (clean 2-commit / crashed staged write with orphan
-    files / post-compact / post-repartition)
+    files / post-compact / post-repartition / post-overwrite under a
+    different partition key)
   x time-travel snapshots (live / already GC'd)
   x secondary indices + bloom + zone maps (on / off)
 
@@ -52,7 +53,7 @@ CHUNK2 = [(2, 3, "c", 40.0), (3, 1, "b", 60.0)]  # P=2 fragments for compact
 CHUNK3 = [(1, 3, "d", 70.0), (2, 4, "a", 80.0)]
 
 OPS = ["delete", "gc"]
-STATES = ["clean", "crashed_staged", "post_compact", "post_repartition"]
+STATES = ["clean", "crashed_staged", "post_compact", "post_repartition", "post_overwrite"]
 SNAPSHOTS = ["live", "pregc"]
 INDICES = [False, True]
 
@@ -141,6 +142,14 @@ def _build(spark, store, uuid, *, state: str, indices: bool) -> list[tuple]:
         # L is neither bloomed nor secondary-indexed, so the rebuild
         # keeps the S index/bloom sidecars alive under the new layout
         repartition_dataset(spark, store, uuid, partition_on=["L"])
+    elif state == "post_overwrite":
+        # generation 3 replaces everything: the old payload, sidecars
+        # and history become garbage
+        df3 = spark.createDataFrame(CHUNK3, SCHEMA)
+        store_dataframe_as_dataset(
+            spark, store, uuid, df3, partition_on=["L"], overwrite=True, **kw
+        )
+        rows = CHUNK3
     return sorted(rows)
 
 
@@ -160,6 +169,10 @@ def test_delete_gc_grid(spark, tmp_path, op, state, snap, indices):
     store.put_bytes(f"{uuid}-suffix", b"keepme")
     outside = _inventory(store, sib) | {f"prefix{uuid}", f"{uuid}-suffix"}
 
+    if state == "post_overwrite":
+        # time travel across the overwrite reads the replaced rows until GC
+        old = read_dataset_as_dataframe(spark, store, uuid, generation=2)
+        assert _rows(old) == sorted(CHUNK1 + CHUNK2)
     if snap == "pregc":
         garbage_collect_dataset(store, uuid)
 
@@ -231,6 +244,37 @@ def test_delete_gc_grid(spark, tmp_path, op, state, snap, indices):
     # idempotence: a second sweep finds nothing
     assert garbage_collect_dataset(store, uuid) == []
     assert _inventory(store, uuid) == after
+
+
+def test_crashed_overwrite_keeps_the_generation_and_gc_restores_it(
+    spark, tmp_path, monkeypatch
+):
+    """An overwrite whose commit put raises after its write job leaves
+    generation N readable, and GC restores the exact key inventory."""
+    store = Store(str(tmp_path / "store"))
+    uuid = "g"
+    model_rows = _build(spark, store, uuid, state="clean", indices=True)
+    garbage_collect_dataset(store, uuid)
+    before = _inventory(store, uuid)
+    gen = DatasetMetadata.load(store, uuid).generation
+
+    def _boom_commit(self, st, *a, **kw):
+        raise RuntimeError("injected crash before commit")
+
+    monkeypatch.setattr(DatasetMetadata, "commit", _boom_commit)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        store_dataframe_as_dataset(
+            spark, store, uuid, spark.createDataFrame(CHUNK3, SCHEMA),
+            partition_on=["L"], overwrite=True, secondary_indices=["S"],
+            bloom_filter_columns=["S"], zone_map_columns=["X"],
+        )
+    monkeypatch.undo()
+    assert DatasetMetadata.load(store, uuid).generation == gen
+    assert _rows(read_dataset_as_dataframe(spark, store, uuid)) == model_rows
+    assert _inventory(store, uuid) > before  # the new files are orphans
+    garbage_collect_dataset(store, uuid)
+    assert _inventory(store, uuid) == before
+    assert _rows(read_dataset_as_dataframe(spark, store, uuid)) == model_rows
 
 
 def test_delete_dataset_with_missing_keys(spark, tmp_path):

@@ -256,6 +256,49 @@ def test_writer_rejects_partitioned_and_indexed_targets(spark, tmp_path):
     assert read_table(spark, Store(root), "idx").count() == 2
 
 
+def test_writer_append_is_pruned_by_zone_maps_and_blooms(spark, tmp_path):
+    """A batch-writer append commits like every other commit: its files
+    carry zone maps and enter the Bloom sidecar, so a point lookup
+    prunes every new file but the one holding the value. The write has
+    80 tasks, more files than the harvest's driver gate admits: the
+    commit hook has no SparkSession, so the harvest stays in the
+    committing process whatever its size."""
+    from plateau_spark.core.metadata import DatasetMetadata
+    from plateau_spark.plans.pruning import explain_scan
+    from plateau_spark.sources.dataset import read_table
+
+    root = str(tmp_path / "store")
+    store = Store(root)
+
+    def rows(lo, hi, tasks):
+        return spark.range(lo, hi, 1, tasks).select(
+            F.col("id").alias("k"), (F.col("id") * 3).alias("num")
+        )
+
+    store_dataframe_as_dataset(
+        spark, store, "w", rows(0, 100, 1),
+        bloom_filter_columns=["k"], zone_map_columns=["num"],
+    )
+    before = set(DatasetMetadata.load(store, "w").partitions)
+    rows(1000, 1400, 80).write.format("plateau").option("store", root).option(
+        "dataset", "w"
+    ).mode("append").save()
+    meta = DatasetMetadata.load(store, "w")
+    new = set(meta.partitions) - before
+    assert len(new) == 80
+    assert all("num" in meta.partitions[label].stats for label in new)
+    for pred in ([[("k", "==", 1234)]], [[("num", ">=", 3 * 1395)]]):
+        report = explain_scan(meta, store, pred)
+        scanned = [r for r in report if r["label"] in new and r["scanned"]]
+        assert len(scanned) == 1, (pred, len(scanned))
+        full = read_table(spark, store, "w").collect()
+        want = sorted(r.k for r in full if all(
+            (r[c] == v) if op == "==" else (r[c] >= v) for c, op, v in pred[0]
+        ))
+        got = sorted(r.k for r in read_table(spark, store, "w", predicates=pred).collect())
+        assert got == want and want
+
+
 def test_writer_schema_mismatch_rejected_nothing_committed(spark, tmp_path):
     root = str(tmp_path / "store")
     base = spark.createDataFrame([(1, "a")], "k long, s string")
@@ -505,6 +548,30 @@ def test_stream_reader_offsets_are_compact_generations(spark, tmp_path):
         for b in r.read(p):
             rows.extend(b.column(0).to_pylist())
     assert sorted(rows) == list(range(4, 9))
+
+
+def test_stream_reader_delivers_an_overwrite_as_the_next_batch(spark, tmp_path):
+    """An overwrite is one more generation: a reader following the
+    dataset plans the overwrite's files as the next micro-batch and
+    reads the new rows."""
+    from plateau_spark.sources.datasource import PlateauStreamReader
+
+    root = str(tmp_path / "store")
+    store_dataframe_as_dataset(
+        spark, Store(root), "ds",
+        spark.range(0, 4).withColumnRenamed("id", "k").coalesce(1),
+    )
+    r = PlateauStreamReader({"store": root, "dataset": "ds"})
+    o1 = r.latestOffset()
+    store_dataframe_as_dataset(
+        spark, Store(root), "ds",
+        spark.range(10, 13).withColumnRenamed("id", "k").coalesce(1),
+        overwrite=True,
+    )
+    o2 = r.latestOffset()
+    assert o2 == {"generation": 2}
+    rows = [v for p in r.partitions(o1, o2) for b in r.read(p) for v in b.column(0).to_pylist()]
+    assert sorted(rows) == [10, 11, 12]
 
 
 def test_stream_reader_reclaimed_snapshot_raises(spark, tmp_path):
