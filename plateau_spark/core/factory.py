@@ -16,11 +16,12 @@ Usage::
     b = read_table(spark, factory, columns=[...])    # 0 further GETs
     update_dataset_from_dataframe(spark, factory, df=...)  # invalidates
 
-Mutating APIs that receive a factory invalidate it after their commit,
-so a subsequent read reloads the new state. External writers are not
-detected — like the reference, the factory assumes the holder
-coordinates its own writes; call ``invalidate()`` after out-of-band
-commits.
+Every mutating API of ``sources/dataset.py`` (each commit, GC or
+delete) that receives a factory invalidates it when the call exits, on
+success and on failure, so a subsequent read reloads the new state.
+External writers are not detected — like the reference, the factory
+assumes the holder coordinates its own writes; call ``invalidate()``
+after out-of-band commits.
 """
 
 from __future__ import annotations

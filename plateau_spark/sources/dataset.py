@@ -25,6 +25,8 @@ never in-place mutation of a partition — partition-level copy-on-write.
 from __future__ import annotations
 
 import functools
+import inspect
+import itertools
 import posixpath
 from concurrent.futures import ThreadPoolExecutor
 from typing import Any, Callable, Sequence
@@ -36,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from plateau_spark.core import naming
+from plateau_spark.core.factory import DatasetFactory
 from plateau_spark.core.metadata import DatasetMetadata, Partition
 from plateau_spark.core.predicates import (
     Predicates,
@@ -139,20 +142,28 @@ def _scan_partitions(
 
 
 def _ensure_store(store: Store | str) -> Store:
-    from plateau_spark.core.factory import DatasetFactory
-
     if isinstance(store, DatasetFactory):
         return store.store
     return store if isinstance(store, Store) else Store(store)
 
 
-def _invalidate_if_factory(store_arg) -> None:
-    """Mutating APIs accept a DatasetFactory in the store position; the
-    commit they perform invalidates its cached metadata/indices."""
-    from plateau_spark.core.factory import DatasetFactory
+def _invalidates_factory(fn):
+    """Decorate a public API that commits, garbage-collects or deletes: a
+    DatasetFactory passed as its ``store`` drops its cached metadata and
+    indices when the call returns or raises (a compaction can commit and
+    then fail in its GC), so the next read through it reloads."""
+    sig = inspect.signature(fn)
 
-    if isinstance(store_arg, DatasetFactory):
-        store_arg.invalidate()
+    @functools.wraps(fn)
+    def wrapper(*args, **kwargs):
+        store = sig.bind_partial(*args, **kwargs).arguments.get("store")
+        try:
+            return fn(*args, **kwargs)
+        finally:
+            if isinstance(store, DatasetFactory):
+                store.invalidate()
+
+    return wrapper
 
 
 def _resolve_factory(store, dataset_uuid: str | None):
@@ -160,8 +171,6 @@ def _resolve_factory(store, dataset_uuid: str | None):
     position (the reference's factory-or-store argument convention,
     plateau/io_components/utils.py). Returns (factory, store, uuid);
     a plain store gets a fresh single-call factory (uncached behavior)."""
-    from plateau_spark.core.factory import DatasetFactory
-
     if isinstance(store, DatasetFactory):
         if dataset_uuid is not None and dataset_uuid != store.dataset_uuid:
             raise ValueError(
@@ -1024,23 +1033,19 @@ def _create_preamble(
     store: Store | str,
     dataset_uuid: str | None,
     metadata_version: int,
-    partition_on: Sequence[str] | None,
-    secondary_indices: Sequence[str] | None,
     overwrite: bool,
 ) -> tuple[Store, str, DatasetMetadata | None]:
     """Checks shared by the store paths and the header: metadata
-    version, dataset uuid (generated when None), index/key overlap, and
-    the overwrite rule. Returns ``(store, dataset_uuid, old)``, ``old``
-    being the existing dataset's commit loaded once, or None. An
-    existing dataset raises unless ``overwrite=True``; the caller then
-    commits its new files over ``old`` (``_overwrite_base``), so the
-    replaced generation stays readable whatever fails before the
-    commit."""
+    version, dataset uuid (generated when None) and the overwrite rule.
+    Returns ``(store, dataset_uuid, old)``, ``old`` being the existing
+    dataset's commit loaded once, or None. An existing dataset raises
+    unless ``overwrite=True``; the caller then commits its new files
+    over ``old`` (``_overwrite_base``), so the replaced generation stays
+    readable whatever fails before the commit."""
     naming.verify_metadata_version(metadata_version)
     if dataset_uuid is None:
         dataset_uuid = naming.gen_uuid()
     naming.validate_dataset_uuid(dataset_uuid)
-    raise_if_indices_overlap(partition_on, secondary_indices)
     store = _ensure_store(store)
     old = DatasetMetadata.load_if_exists(store, dataset_uuid)
     if old is not None and not overwrite:
@@ -1050,6 +1055,135 @@ def _create_preamble(
     return store, dataset_uuid, old
 
 
+def _checked_frame(
+    meta: DatasetMetadata,
+    df: DataFrame,
+    *,
+    append: bool,
+    schema_evolution: bool = False,
+    file_format: str = "parquet",
+) -> DataFrame:
+    """The per-frame step before ``_write_files``: ``df`` normalized and
+    checked against ``meta.schema`` — identical (``validate_compatible``),
+    or with ``schema_evolution`` merged into it additively. An append's
+    payload columns take commit-schema order (``_in_commit_order``)."""
+    df = normalize_dataframe(df, meta.partition_keys)
+    if schema_evolution:
+        if file_format != "parquet":
+            raise ValueError(
+                "schema_evolution requires parquet payloads (CSV files "
+                "cannot be read under a widened schema)"
+            )
+        meta.schema = merge_schemas_for_evolution(meta.schema, df.schema)
+    else:
+        validate_compatible(meta.schema, df.schema)
+    return _in_commit_order(df, meta.schema, file_format) if append else df
+
+
+@normalize_args("partition_on", "secondary_indices", "sort_partitions_by", "bucket_by", "zone_map_columns", "bloom_filter_columns")
+def _store_frames(
+    spark: SparkSession,
+    store: Store,
+    dataset_uuid: str,
+    frames,
+    old: DatasetMetadata | None,
+    *,
+    replace: bool = False,
+    delete_scope: Sequence[dict[str, Any]] | None = None,
+    partition_on: Sequence[str] | None = None,
+    secondary_indices: Sequence[str] | None = None,
+    sort_partitions_by: Sequence[str] | None = None,
+    num_buckets: int | None = None,
+    bucket_by: Sequence[str] | None = None,
+    metadata=None,
+    override_metadata=None,
+    file_format: str = "parquet",
+    compress: bool = True,
+    repartition: bool = True,
+    schema_evolution: bool = False,
+    zone_map_columns: Sequence[str] | None = None,
+    bloom_filter_columns: Sequence[str] | None = None,
+    bloom_n_bits: int | None = None,
+    bloom_k: int | None = None,
+    check_constraints: dict[str, str] | None = None,
+) -> DatasetMetadata:
+    """The one write-then-commit body of the store and update APIs and
+    the stream-batch commit: write each of ``frames`` (an iterable, each
+    frame written by its own job as it is drawn) and commit them all in
+    one ``_commit_files`` call over ``old``, the loaded commit or None.
+
+    With ``old`` None or ``replace`` (a store overwrite) the target is a
+    new document typed by the first normalized frame, declaring
+    ``partition_on`` and ``check_constraints`` (which commit as its
+    override metadata), committed over ``old`` by ``_overwrite_base``;
+    creating from no frame raises. Otherwise the frames append to
+    ``old`` under its partition keys and persisted CHECK constraints,
+    and ``delete_scope`` names the labels the same commit removes.
+    Declared index, Bloom and zone-map columns are validated once,
+    after the first frame's schema check and before its write job."""
+    frames = iter(frames)
+    create = old is None or replace
+    if create:
+        try:
+            first = next(frames)
+        except StopIteration:
+            raise ValueError("Cannot store a dataset from an empty generator") from None
+        naming.validate_dataset_uuid(dataset_uuid)
+        raise_if_indices_overlap(partition_on, secondary_indices)
+        partition_on = list(partition_on or [])
+        meta = DatasetMetadata(
+            uuid=dataset_uuid, partition_keys=partition_on,
+            schema=normalize_dataframe(first, partition_on).schema,
+        )
+        base, constraints = _overwrite_base(meta, old), check_constraints
+        if check_constraints:
+            override_metadata = {"constraints": dict(check_constraints)}
+        frames = itertools.chain([first], frames)
+    else:
+        validate_partition_keys(old.partition_keys, partition_on)
+        meta, base = old, _commit_base_snapshot(old)
+        # CHECK constraints declared at store time gate every append
+        constraints = old.metadata.get("constraints")
+
+    checked = (
+        _checked_frame(
+            meta, df, append=not create, schema_evolution=schema_evolution,
+            file_format=file_format,
+        )
+        for df in frames
+    )
+    # the first frame's check may widen the schema the declared columns
+    # are validated against
+    pending = list(itertools.islice(checked, 1))
+    _validate_declared_columns(
+        meta.schema, meta.partition_keys, dataset_uuid,
+        index_columns=secondary_indices, bloom_columns=bloom_filter_columns,
+        zone_map_columns=zone_map_columns,
+    )
+    partitions = [
+        p
+        for df in itertools.chain(pending, checked)
+        for p in _write_files(
+            df, store, dataset_uuid, meta.partition_keys,
+            sort_partitions_by=sort_partitions_by, num_buckets=num_buckets,
+            bucket_by=bucket_by, repartition=repartition, file_format=file_format,
+            compress=compress, constraints=constraints,
+        )
+    ]
+    removed = () if create else _resolve_delete_scope(meta, store, delete_scope)
+    # a callable ``metadata`` resolves AFTER the write jobs — so values a
+    # Dataset Observation collected DURING a write (e.g. the BM25 index's
+    # token totals) land in the same atomic commit without a second pass
+    return _commit_files(
+        spark, store, meta, base, partitions, removed=removed,
+        index_columns=secondary_indices, bloom_columns=bloom_filter_columns,
+        bloom_n_bits=bloom_n_bits, bloom_k=bloom_k,
+        zone_map_columns=zone_map_columns,
+        metadata=metadata, override_metadata=override_metadata,
+    )
+
+
+@_invalidates_factory
 @normalize_args("partition_on", "secondary_indices", "sort_partitions_by", "bucket_by", "columns", "dispatch_by", "zone_map_columns", "bloom_filter_columns")
 def store_dataframe_as_dataset(
     spark: SparkSession,
@@ -1125,38 +1259,16 @@ def store_dataframe_as_dataset(
     (plateau/io_components/write.py:38-79).
     """
     store, dataset_uuid, old = _create_preamble(
-        store, dataset_uuid, metadata_version, partition_on, secondary_indices, overwrite
+        store, dataset_uuid, metadata_version, overwrite
     )
-    partition_on = list(partition_on or [])
-    df = normalize_dataframe(df, partition_on)
-    _validate_declared_columns(
-        df.schema, partition_on, dataset_uuid, index_columns=secondary_indices,
-        bloom_columns=bloom_filter_columns, zone_map_columns=zone_map_columns,
-    )
-    partitions = _write_files(
-        df,
-        store,
-        dataset_uuid,
-        partition_on,
-        sort_partitions_by=sort_partitions_by,
-        num_buckets=num_buckets,
-        bucket_by=bucket_by,
-        file_format=file_format,
-        compress=compress,
-        repartition=repartition,
-        constraints=check_constraints,
-    )
-    meta = DatasetMetadata(uuid=dataset_uuid, partition_keys=partition_on, schema=df.schema)
-    # a callable ``metadata`` resolves AFTER the write job — so values a
-    # Dataset Observation collected DURING the write (e.g. the BM25
-    # index's token totals) land in the same atomic commit without a
-    # second data pass
-    return _commit_files(
-        spark, store, meta, _overwrite_base(meta, old), partitions,
-        index_columns=secondary_indices, bloom_columns=bloom_filter_columns,
-        bloom_n_bits=bloom_n_bits, bloom_k=bloom_k,
-        zone_map_columns=zone_map_columns, metadata=metadata,
-        override_metadata=check_constraints and {"constraints": dict(check_constraints)},
+    return _store_frames(
+        spark, store, dataset_uuid, [df], old, replace=True,
+        partition_on=partition_on, secondary_indices=secondary_indices,
+        sort_partitions_by=sort_partitions_by, num_buckets=num_buckets,
+        bucket_by=bucket_by, metadata=metadata, file_format=file_format,
+        compress=compress, repartition=repartition,
+        zone_map_columns=zone_map_columns, bloom_filter_columns=bloom_filter_columns,
+        bloom_n_bits=bloom_n_bits, bloom_k=bloom_k, check_constraints=check_constraints,
     )
 
 
@@ -1182,6 +1294,7 @@ def store_dataframes_as_dataset(
     return store_dataframes_as_dataset__iter(spark, store, dataset_uuid, iter(dfs), **kwargs)
 
 
+@_invalidates_factory
 @normalize_args("partition_on", "secondary_indices", "sort_partitions_by", "bucket_by", "columns", "dispatch_by")
 def store_dataframes_as_dataset__iter(
     spark: SparkSession,
@@ -1218,42 +1331,17 @@ def store_dataframes_as_dataset__iter(
     (/root/reference/plateau/io/iter.py:166-245).
     """
     store, dataset_uuid, old = _create_preamble(
-        store, dataset_uuid, metadata_version, partition_on, secondary_indices, overwrite
+        store, dataset_uuid, metadata_version, overwrite
     )
-    partition_on = list(partition_on or [])
-    partitions: list[Partition] = []
-    schema = None
-    for df in df_generator:
-        df = normalize_dataframe(df, partition_on)
-        if schema is None:
-            schema = df.schema
-            _validate_declared_columns(
-                schema, partition_on, dataset_uuid, index_columns=secondary_indices
-            )
-        else:
-            validate_compatible(schema, df.schema)
-        partitions.extend(
-            _write_files(
-                df,
-                store,
-                dataset_uuid,
-                partition_on,
-                sort_partitions_by=sort_partitions_by,
-                file_format=file_format,
-                compress=compress,
-                constraints=check_constraints,
-            )
-        )
-    if schema is None:
-        raise ValueError("Cannot store a dataset from an empty generator")
-    meta = DatasetMetadata(uuid=dataset_uuid, partition_keys=partition_on, schema=schema)
-    return _commit_files(
-        spark, store, meta, _overwrite_base(meta, old), partitions,
-        index_columns=secondary_indices, metadata=metadata,
-        override_metadata=check_constraints and {"constraints": dict(check_constraints)},
+    return _store_frames(
+        spark, store, dataset_uuid, df_generator, old, replace=True,
+        partition_on=partition_on, secondary_indices=secondary_indices,
+        sort_partitions_by=sort_partitions_by, metadata=metadata,
+        file_format=file_format, compress=compress, check_constraints=check_constraints,
     )
 
 
+@_invalidates_factory
 @normalize_args("partition_on", "secondary_indices", "sort_partitions_by", "bucket_by", "columns", "dispatch_by")
 def update_dataset_from_dataframes__iter(
     spark: SparkSession,
@@ -1275,56 +1363,17 @@ def update_dataset_from_dataframes__iter(
     A first-time update CREATES the dataset (reference semantics), with
     ``partition_on`` / ``secondary_indices`` applied at creation.
     """
-    _store_arg = store
     store = _ensure_store(store)
-    meta = DatasetMetadata.load_if_exists(store, dataset_uuid)
-    if meta is None:
-        out = store_dataframes_as_dataset__iter(
-            spark,
-            store,
-            dataset_uuid,
-            df_generator,
-            partition_on=partition_on,
-            secondary_indices=secondary_indices,
-            sort_partitions_by=sort_partitions_by,
-            metadata=metadata,
-            file_format=file_format,
-            compress=compress,
-        )
-        _invalidate_if_factory(_store_arg)
-        return out
-    validate_partition_keys(meta.partition_keys, partition_on)
-    _base = _commit_base_snapshot(meta)
-    _validate_declared_columns(
-        meta.schema, meta.partition_keys, dataset_uuid, index_columns=secondary_indices
+    return _store_frames(
+        spark, store, dataset_uuid, df_generator,
+        DatasetMetadata.load_if_exists(store, dataset_uuid),
+        delete_scope=delete_scope, partition_on=partition_on,
+        secondary_indices=secondary_indices, sort_partitions_by=sort_partitions_by,
+        metadata=metadata, file_format=file_format, compress=compress,
     )
-    new_partitions: list[Partition] = []
-    for df in df_generator:
-        df = normalize_dataframe(df, meta.partition_keys)
-        validate_compatible(meta.schema, df.schema)
-        new_partitions.extend(
-            _write_files(
-                _in_commit_order(df, meta.schema, file_format),
-                store,
-                dataset_uuid,
-                meta.partition_keys,
-                sort_partitions_by=sort_partitions_by,
-                file_format=file_format,
-                compress=compress,
-                # persisted CHECK constraints gate the __iter append too
-                constraints=meta.metadata.get("constraints"),
-            )
-        )
-
-    removed = _resolve_delete_scope(meta, store, delete_scope)
-    meta = _commit_files(
-        spark, store, meta, _base, new_partitions, removed=removed,
-        index_columns=secondary_indices, metadata=metadata,
-    )
-    _invalidate_if_factory(_store_arg)
-    return meta
 
 
+@_invalidates_factory
 @normalize_args("partition_on", "secondary_indices", "sort_partitions_by", "bucket_by", "columns", "dispatch_by")
 def create_empty_dataset_header(
     spark: SparkSession,
@@ -1346,7 +1395,7 @@ def create_empty_dataset_header(
     from plateau_spark.core.schema import normalize_schema
 
     store, dataset_uuid, old = _create_preamble(
-        store, dataset_uuid, naming.METADATA_VERSION, partition_on, None, overwrite
+        store, dataset_uuid, naming.METADATA_VERSION, overwrite
     )
     meta = DatasetMetadata(
         uuid=dataset_uuid,
@@ -1793,6 +1842,7 @@ def _resolve_delete_scope(
     return to_remove
 
 
+@_invalidates_factory
 @normalize_args("partition_on", "secondary_indices", "sort_partitions_by", "bucket_by", "columns", "dispatch_by", "zone_map_columns", "bloom_filter_columns")
 def update_dataset_from_dataframe(
     spark: SparkSession,
@@ -1827,7 +1877,8 @@ def update_dataset_from_dataframe(
     A first-time update CREATES the dataset (reference semantics:
     update on a nonexistent uuid is a store —
     /root/reference/plateau/io/testing/update.py
-    ``test_update_first_time_with_secondary_indices``).
+    ``test_update_first_time_with_secondary_indices``); there too
+    ``override_metadata`` wins over a conflicting ``metadata`` leaf.
     ``secondary_indices`` names index columns: on creation they are
     built as usual; on an existing dataset any NOT-yet-indexed column
     is built over all partitions in the same commit (already-indexed
@@ -1846,84 +1897,23 @@ def update_dataset_from_dataframe(
     (/root/reference/plateau/io/eager.py:629-704) +
     update_dataset_from_partitions (plateau/io_components/update.py:20-54).
     """
-    _store_arg = store
     store = _ensure_store(store)
-    meta = DatasetMetadata.load_if_exists(store, dataset_uuid)
-    if meta is None:
-        if df is None:
-            raise ValueError(
-                f"Dataset {dataset_uuid!r} does not exist and no data was "
-                "given — a delete-only update needs an existing dataset"
-            )
-        out = store_dataframe_as_dataset(
-            spark,
-            store,
-            dataset_uuid,
-            df,
-            partition_on=partition_on,
-            secondary_indices=secondary_indices,
-            sort_partitions_by=sort_partitions_by,
-            num_buckets=num_buckets,
-            bucket_by=bucket_by,
-            # first-time create: no existing leaves to conflict with, so
-            # the override degrades to a plain merge; deferred via a
-            # callable so write-time Observations stay resolvable
-            metadata=lambda: combine_metadata(
-                _resolve_metadata(metadata) or {},
-                _resolve_metadata(override_metadata) or {},
-            ),
-            file_format=file_format,
-            compress=compress,
-            zone_map_columns=zone_map_columns,
-            bloom_filter_columns=bloom_filter_columns,
-            bloom_n_bits=bloom_n_bits,
-            bloom_k=bloom_k,
+    old = DatasetMetadata.load_if_exists(store, dataset_uuid)
+    if old is None and df is None:
+        raise ValueError(
+            f"Dataset {dataset_uuid!r} does not exist and no data was "
+            "given — a delete-only update needs an existing dataset"
         )
-        _invalidate_if_factory(_store_arg)
-        return out
-    validate_partition_keys(meta.partition_keys, partition_on)
-    _base = _commit_base_snapshot(meta)
-
-    if df is not None:
-        df = normalize_dataframe(df, meta.partition_keys)
-        if schema_evolution:
-            if file_format != "parquet":
-                raise ValueError(
-                    "schema_evolution requires parquet payloads (CSV files "
-                    "cannot be read under a widened schema)"
-                )
-            meta.schema = merge_schemas_for_evolution(meta.schema, df.schema)
-        else:
-            validate_compatible(meta.schema, df.schema)
-            df = _in_commit_order(df, meta.schema, file_format)
-    _validate_declared_columns(
-        meta.schema, meta.partition_keys, dataset_uuid,
-        index_columns=secondary_indices, bloom_columns=bloom_filter_columns,
-        zone_map_columns=zone_map_columns,
-    )
-    new_partitions = [] if df is None else _write_files(
-        df,
-        store,
-        dataset_uuid,
-        meta.partition_keys,
-        sort_partitions_by=sort_partitions_by,
-        num_buckets=num_buckets,
-        bucket_by=bucket_by,
-        file_format=file_format,
-        compress=compress,
-        # CHECK constraints declared at store time gate every append
-        constraints=meta.metadata.get("constraints"),
-    )
-    removed = _resolve_delete_scope(meta, store, delete_scope)
-    meta = _commit_files(
-        spark, store, meta, _base, new_partitions, removed=removed,
-        index_columns=secondary_indices, bloom_columns=bloom_filter_columns,
+    return _store_frames(
+        spark, store, dataset_uuid, [] if df is None else [df], old,
+        delete_scope=delete_scope, partition_on=partition_on,
+        secondary_indices=secondary_indices, sort_partitions_by=sort_partitions_by,
+        num_buckets=num_buckets, bucket_by=bucket_by, metadata=metadata,
+        override_metadata=override_metadata, file_format=file_format,
+        compress=compress, schema_evolution=schema_evolution,
+        zone_map_columns=zone_map_columns, bloom_filter_columns=bloom_filter_columns,
         bloom_n_bits=bloom_n_bits, bloom_k=bloom_k,
-        zone_map_columns=zone_map_columns,
-        metadata=metadata, override_metadata=override_metadata,
     )
-    _invalidate_if_factory(_store_arg)
-    return meta
 
 
 @normalize_args("partition_on", "secondary_indices", "sort_partitions_by", "bucket_by", "columns", "dispatch_by")
@@ -1954,12 +1944,11 @@ def write_single_partition(
     to ``commit_dataset``, which requires an explicit ``schema``."""
     store = _ensure_store(store)
     partition_on = list(partition_on or [])
-    df = normalize_dataframe(df, partition_on)
-    constraints = None
     meta = DatasetMetadata.load_if_exists(store, dataset_uuid)
-    if meta is not None:
-        validate_compatible(meta.schema, df.schema)
-        df = _in_commit_order(df, meta.schema, file_format)
+    if meta is None:
+        df, constraints = normalize_dataframe(df, partition_on), None
+    else:
+        df = _checked_frame(meta, df, append=True, file_format=file_format)
         constraints = meta.metadata.get("constraints")
     return _write_files(
         df, store, dataset_uuid, partition_on,
@@ -2058,6 +2047,7 @@ def _validate_staged_schemas(
         list(pool.map(_check, new_partitions))
 
 
+@_invalidates_factory
 @normalize_args("partition_on", "secondary_indices", "sort_partitions_by", "bucket_by", "columns", "dispatch_by")
 def commit_dataset(
     spark: SparkSession,
@@ -2075,7 +2065,6 @@ def commit_dataset(
     Reference: commit_dataset (/root/reference/plateau/io/eager.py:295-420).
     Creates the dataset if it does not exist yet (requires ``schema``).
     """
-    _store_arg = store
     store = _ensure_store(store)
     _base = None
     meta = DatasetMetadata.load_if_exists(store, dataset_uuid)
@@ -2101,11 +2090,9 @@ def commit_dataset(
     # the two-phase API exists FOR concurrent writers: an existing
     # dataset commits through the merge path (append-only races merge,
     # anything else fails loudly)
-    meta = _commit_files(
+    return _commit_files(
         spark, store, meta, _base, new_partitions, removed=removed, metadata=metadata
     )
-    _invalidate_if_factory(_store_arg)
-    return meta
 
 
 # ---------------------------------------------------------------------------
@@ -2113,6 +2100,7 @@ def commit_dataset(
 # ---------------------------------------------------------------------------
 
 
+@_invalidates_factory
 @normalize_args("partition_on", "secondary_indices", "sort_partitions_by", "bucket_by", "columns", "dispatch_by")
 def build_dataset_indices(
     spark: SparkSession,
@@ -2182,6 +2170,7 @@ def update_dataset_from_dataframes(
     return update_dataset_from_dataframe(spark, store, dataset_uuid, df, **kwargs)
 
 
+@_invalidates_factory
 def delete_rows_from_dataset(
     spark: SparkSession,
     store: Store | str,
@@ -2217,7 +2206,6 @@ def delete_rows_from_dataset(
     current metadata untouched.
     """
     check_predicates(predicates)
-    _store_arg = store
     store = _ensure_store(store)
     meta = DatasetMetadata.load(store, dataset_uuid)
     _base = _commit_base_snapshot(meta)
@@ -2232,14 +2220,13 @@ def delete_rows_from_dataset(
     new_partitions = _write_files(
         keep, store, dataset_uuid, meta.partition_keys, compress=compress
     )
-    meta = _commit_files(
+    return _commit_files(
         spark, store, meta, _base, new_partitions,
         removed=[p.label for p in candidates],
     )
-    _invalidate_if_factory(_store_arg)
-    return meta
 
 
+@_invalidates_factory
 def merge_upsert_into_dataset(
     spark: SparkSession,
     store: Store | str,
@@ -2277,7 +2264,6 @@ def merge_upsert_into_dataset(
     result order-dependent).
     """
     key_columns = [key_columns] if isinstance(key_columns, str) else list(key_columns)
-    _store_arg = store
     store = _ensure_store(store)
     meta = DatasetMetadata.load(store, dataset_uuid)
     _base = _commit_base_snapshot(meta)
@@ -2308,12 +2294,10 @@ def merge_upsert_into_dataset(
     new_partitions = _write_files(
         merged, store, dataset_uuid, meta.partition_keys, compress=compress
     )
-    meta = _commit_files(
+    return _commit_files(
         spark, store, meta, _base, new_partitions,
         removed=[p.label for p in candidates],
     )
-    _invalidate_if_factory(_store_arg)
-    return meta
 
 
 def _merge_key_candidates(
@@ -2357,6 +2341,7 @@ def _merge_key_candidates(
     return plan_scan(meta, store, [conj] if conj else None)
 
 
+@_invalidates_factory
 def merge_into_dataset(
     spark: SparkSession,
     store: Store | str,
@@ -2397,7 +2382,6 @@ def merge_into_dataset(
     key tuples.
     """
     key_columns = [key_columns] if isinstance(key_columns, str) else list(key_columns)
-    _store_arg = store
     store = _ensure_store(store)
     meta = DatasetMetadata.load(store, dataset_uuid)
     _base = _commit_base_snapshot(meta)
@@ -2473,12 +2457,10 @@ def merge_into_dataset(
     new_partitions = _write_files(
         merged, store, dataset_uuid, meta.partition_keys, compress=compress
     )
-    meta = _commit_files(
+    return _commit_files(
         spark, store, meta, _base, new_partitions,
         removed=[p.label for p in candidates],
     )
-    _invalidate_if_factory(_store_arg)
-    return meta
 
 
 def read_datasets_weighted(
@@ -2531,6 +2513,7 @@ def read_datasets_weighted(
     return out
 
 
+@_invalidates_factory
 def garbage_collect_dataset(
     store: Store | str, dataset_uuid: str, *, keep_staging: bool = False
 ) -> list[str]:
@@ -2660,6 +2643,7 @@ def copy_dataset(
     return new_meta
 
 
+@_invalidates_factory
 def compact_dataset(
     spark: SparkSession,
     store: Store | str,
@@ -2779,6 +2763,7 @@ def compact_dataset(
     return meta
 
 
+@_invalidates_factory
 def repartition_dataset(
     spark: SparkSession,
     store: Store | str,
@@ -2864,6 +2849,7 @@ def repartition_dataset(
     return meta
 
 
+@_invalidates_factory
 def restore_dataset(
     store: Store | str, dataset_uuid: str, generation: int
 ) -> DatasetMetadata:
@@ -3063,6 +3049,7 @@ def dataset_generation_diff(
     )
 
 
+@_invalidates_factory
 def delete_dataset(store: Store | str, dataset_uuid: str) -> None:
     """Delete a dataset: indices → payload files → metadata file, ordered
     for crash consistency (reference: plateau/io/eager.py:63-93).

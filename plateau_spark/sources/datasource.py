@@ -447,9 +447,10 @@ class PlateauStreamReader(DataSourceStreamReader):
     def latestOffset(self) -> dict:
         from plateau_spark.core.metadata import DatasetMetadata
 
-        if not DatasetMetadata.exists(self._store, self._uuid):
+        meta = DatasetMetadata.load_if_exists(self._store, self._uuid)
+        if meta is None:
             return {"generation": 0}
-        gen = DatasetMetadata.load(self._store, self._uuid).generation
+        gen = meta.generation
         if gen == 0:
             # a commit file without a generation counter (written by the
             # reference implementation or another tool): every commit

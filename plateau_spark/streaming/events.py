@@ -495,6 +495,12 @@ def commit_stream_batch(
     write. A crash between write and commit leaves only invisible
     staging files (explicit-path reads; GC reclaims them).
 
+    The commit file is loaded once: that load answers the replay check
+    and is the commit the batch appends to (or, when None, the batch
+    creates the dataset with ``secondary_indices``) through the store and
+    update APIs' one write-then-commit body, ``sources/dataset.py``
+    ``_store_frames`` — 2 ``exists`` + 2 ``get_json`` per micro-batch.
+
     The frame is persisted for the duration of the call (unless the
     caller already pinned it, or its optimized plan is a
     ``LocalRelation``): the ``isEmpty`` pre-check and the write would
@@ -508,11 +514,7 @@ def commit_stream_batch(
     or empty.
     """
     from plateau_spark.core.metadata import DatasetMetadata
-    from plateau_spark.sources.dataset import (
-        _ensure_store,
-        store_dataframe_as_dataset,
-        update_dataset_from_dataframe,
-    )
+    from plateau_spark.sources.dataset import _ensure_store, _store_frames
 
     store = _ensure_store(store)
     marker = {"stream_batches": {str(batch_id): True}}
@@ -526,23 +528,17 @@ def commit_stream_batch(
         pinned = True
     try:
         meta = DatasetMetadata.load_if_exists(store, dataset_uuid)
-        if meta is not None:
-            if str(batch_id) in meta.metadata.get("stream_batches", {}):
-                return False
-            if not assume_nonempty and batch_df.isEmpty():
-                return False
-            update_dataset_from_dataframe(
-                spark, store, dataset_uuid, batch_df,
-                partition_on=partition_on, metadata=marker, **write_kwargs,
-            )
-        else:
-            if not assume_nonempty and batch_df.isEmpty():
-                return False
-            store_dataframe_as_dataset(
-                spark, store, dataset_uuid, batch_df,
-                partition_on=partition_on, secondary_indices=secondary_indices,
-                metadata=marker, **write_kwargs,
-            )
+        if meta is not None and str(batch_id) in meta.metadata.get("stream_batches", {}):
+            return False
+        if not assume_nonempty and batch_df.isEmpty():
+            return False
+        # the commit just loaded is the one the batch appends to
+        _store_frames(
+            spark, store, dataset_uuid, [batch_df], meta,
+            partition_on=partition_on,
+            secondary_indices=secondary_indices if meta is None else None,
+            metadata=marker, **write_kwargs,
+        )
         return True
     finally:
         if pinned:

@@ -360,3 +360,114 @@ def test_driver_placement_opens_each_new_file_once(spark, store, monkeypatch, op
     assert {f: opened[store.path(f)] for f in new} == {f: 1 for f in new}
     data = {k: n for k, n in opened.items() if f"/{UUID}/table/" in k}
     assert set(data) == {store.path(f) for f in new}, data
+
+
+def _doc(meta) -> dict:
+    """A committed document without what differs between two equal
+    commits: the uuid, labels, file and sidecar keys, the generation and
+    the commit timestamps."""
+    import json
+
+    doc = meta.to_json()
+    for key in ("dataset_uuid", "generation"):
+        doc.pop(key)
+    doc["partitions"] = sorted(
+        json.dumps({k: v for k, v in p.items() if k != "files"}, sort_keys=True)
+        for p in doc["partitions"].values()
+    )
+    doc["indices"] = sorted(doc["indices"])
+    doc["blooms"] = {c: {**info, "key": None} for c, info in doc.get("blooms", {}).items()}
+    doc["metadata"] = {
+        k: v for k, v in doc["metadata"].items() if k not in ("creation_time", "committed_at")
+    }
+    return doc
+
+
+def _sorted_rows(spark, store, uuid):
+    return sorted(tuple(r) for r in read_table(spark, store, uuid).collect())
+
+
+def _fixture_as(spark, store, uuid):
+    store_dataframe_as_dataset(
+        spark, store, uuid, _rows(spark, 0, 300), partition_on=["p"],
+        secondary_indices=["tag"], bloom_filter_columns=["k"],
+        zone_map_columns=["num"],
+    )
+
+
+PARITY = {
+    "store": lambda spark, store, uuid, frames: (
+        store_dataframe_as_dataset(
+            spark, store, uuid, frames[0], partition_on=["p"], secondary_indices=["tag"],
+            metadata={"owner": "etl"}, check_constraints={"pos": "k >= 0"},
+        ) if len(frames) == 1 else [
+            update_dataset_from_dataframe(
+                spark, store, uuid, df, partition_on=["p"], secondary_indices=["tag"],
+            ) for df in frames
+        ]
+    ),
+    "store_iter": lambda spark, store, uuid, frames: store_dataframes_as_dataset__iter(
+        spark, store, uuid, iter(frames), partition_on=["p"], secondary_indices=["tag"],
+        **({"metadata": {"owner": "etl"}, "check_constraints": {"pos": "k >= 0"}}
+           if len(frames) == 1 else {}),
+    ),
+    "update": lambda spark, store, uuid, frames: (
+        _fixture_as(spark, store, uuid),
+        update_dataset_from_dataframe(spark, store, uuid, frames[0], delete_scope=[{"p": 0}]),
+    ),
+    "update_iter": lambda spark, store, uuid, frames: (
+        _fixture_as(spark, store, uuid),
+        update_dataset_from_dataframes__iter(
+            spark, store, uuid, iter(frames), delete_scope=[{"p": 0}]
+        ),
+    ),
+}
+
+
+@pytest.mark.parametrize(
+    "plain, gen, frames",
+    [("store", "store_iter", 1), ("update", "update_iter", 1), ("store", "store_iter", 2)],
+    ids=["store", "update", "two_frames"],
+)
+def test_eager_and_iter_paths_commit_equal_documents(spark, store, plain, gen, frames):
+    """The eager API and its ``__iter`` twin share one write-then-commit
+    body: given the same frames they commit equal documents (labels, file
+    keys and timestamps aside) that read equal rows. Two frames through
+    the ``__iter`` store equal a first-time update plus an append."""
+    dfs = [_rows(spark, 300, 400), _rows(spark, 400, 450)][:frames]
+    PARITY[plain](spark, store, "a", dfs)
+    PARITY[gen](spark, store, "b", dfs)
+    a, b = DatasetMetadata.load(store, "a"), DatasetMetadata.load(store, "b")
+    assert _doc(a) == _doc(b)
+    assert _sorted_rows(spark, store, "a") == _sorted_rows(spark, store, "b")
+
+
+def test_stream_batch_loads_the_commit_once(spark, tmp_path):
+    """A micro-batch into an existing dataset loads its commit file once
+    (the replay check and the append share it) and once more under the
+    commit lock: 2 ``exists`` + 2 ``get_json``, as a plain update."""
+    import collections
+
+    from plateau_spark.core.store import Store
+
+    class CountingStore(Store):
+        calls: collections.Counter = collections.Counter()
+
+        def exists(self, key):
+            self.calls["exists"] += 1
+            return super().exists(key)
+
+        def get_json(self, key):
+            self.calls["get_json"] += 1
+            return super().get_json(key)
+
+    st = CountingStore(str(tmp_path / "store"))
+    store_dataframe_as_dataset(spark, st, UUID, _rows(spark, 0, 100), partition_on=["p"])
+    for batch_id, lo in enumerate((100, 200)):
+        st.calls.clear()
+        assert commit_stream_batch(spark, st, UUID, _rows(spark, lo, lo + 100), batch_id, partition_on=["p"])
+        assert (st.calls["exists"], st.calls["get_json"]) == (2, 2), batch_id
+    st.calls.clear()
+    update_dataset_from_dataframe(spark, st, UUID, _rows(spark, 300, 400))
+    assert (st.calls["exists"], st.calls["get_json"]) == (2, 2)
+    assert read_table(spark, st, UUID).count() == 400

@@ -12,11 +12,17 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+import plateau_spark.sources.dataset as ds_mod
 from plateau_spark.core.factory import DatasetFactory
+from plateau_spark.core.metadata import DatasetMetadata
 from plateau_spark.core.store import Store
 from plateau_spark.sources.dataset import (
+    build_dataset_indices,
+    compact_dataset,
     read_dataset_as_dataframe_groups,
     read_table,
+    repartition_dataset,
+    restore_dataset,
     store_dataframe_as_dataset,
     update_dataset_from_dataframe,
 )
@@ -86,6 +92,59 @@ def test_factory_invalidated_by_update(spark, counting_store):
     after = read_table(spark, factory).count()
     assert after == 25
     assert extra is st
+
+
+def _append(spark, factory):
+    """A second file under the key P=0, so compaction rewrites it."""
+    df = spark.createDataFrame([(100, 0, 0)], "k long, P long, L long")
+    update_dataset_from_dataframe(spark, factory, "ds", df)
+
+
+# op -> (preparation through the factory, mutation through it, rows after)
+MAINTENANCE = {
+    "compact_gc": (_append, lambda spark, f: compact_dataset(spark, f, "ds", gc=True), 25),
+    "repartition_gc": (None, lambda spark, f: repartition_dataset(
+        spark, f, "ds", partition_on=[], gc=True
+    ), 24),
+    "build_indices": (None, lambda spark, f: build_dataset_indices(spark, f, "ds", ["k"]), 24),
+    "store_overwrite": (None, lambda spark, f: store_dataframe_as_dataset(
+        spark, f, "ds", spark.createDataFrame([(1, 1, 1)], "k long, P long, L long"),
+        overwrite=True,
+    ), 1),
+    "restore": (_append, lambda spark, f: restore_dataset(f, "ds", 1), 24),
+}
+
+
+@pytest.mark.parametrize("op", list(MAINTENANCE))
+def test_factory_invalidated_by_maintenance(spark, counting_store, op):
+    """Compaction and repartition with GC, an index build, a store
+    overwrite and a restore through a factory invalidate it like an
+    update does: the next read sees the new generation (a stale factory
+    would scan files the GC removed)."""
+    prepare, mutate, rows = MAINTENANCE[op]
+    factory = DatasetFactory(counting_store, "ds")
+    if prepare is not None:
+        prepare(spark, factory)
+    assert read_table(spark, factory).count() == (24 if prepare is None else 25)
+    mutate(spark, factory)
+    assert factory.metadata.generation == DatasetMetadata.load(counting_store, "ds").generation
+    assert read_table(spark, factory).count() == rows
+
+
+def test_factory_invalidated_when_the_call_fails(spark, counting_store, monkeypatch):
+    """A compaction that commits and then fails in its GC still leaves
+    the factory invalidated."""
+    factory = DatasetFactory(counting_store, "ds")
+    _append(spark, factory)
+    assert read_table(spark, factory).count() == 25
+
+    def failing_gc(*args, **kwargs):
+        raise OSError("gc failed")
+
+    monkeypatch.setattr(ds_mod, "garbage_collect_dataset", failing_gc)
+    with pytest.raises(OSError, match="gc failed"):
+        compact_dataset(spark, factory, "ds", gc=True)
+    assert factory.metadata.generation == DatasetMetadata.load(counting_store, "ds").generation
 
 
 def test_factory_uuid_mismatch_rejected(spark, counting_store):

@@ -180,6 +180,24 @@ def test_update_override_metadata_wins_where_merge_drops(spark, tmp_path):
     assert got["n"] == 3 and got["kept"] == "x"  # override advanced the leaf
 
 
+def test_first_time_update_override_metadata_wins(spark, tmp_path):
+    """An update that creates the dataset commits ``override_metadata``
+    over a conflicting ``metadata`` leaf, as the same update of an
+    existing dataset does; the other leaves merge in."""
+    from plateau_spark.core.metadata import DatasetMetadata
+    from plateau_spark.core.store import Store
+    from plateau_spark.sources.dataset import update_dataset_from_dataframe
+
+    store = Store(str(tmp_path / "store"))
+    df = spark.createDataFrame([(1, "a")], "k long, v string")
+    update_dataset_from_dataframe(
+        spark, store, "ds", df, metadata={"stats": {"n": 1, "kept": "x"}},
+        override_metadata={"stats": {"n": 2}},
+    )
+    got = DatasetMetadata.load(store, "ds").metadata["stats"]
+    assert got == {"n": 2, "kept": "x"}
+
+
 def test_rrf_fuse_hand_checked(spark):
     from plateau_spark.operators.retrieval import rrf_fuse
 
